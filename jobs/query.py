@@ -39,11 +39,12 @@ def main() -> None:
 
     from osm_search_spark.operators import spell
     from osm_search_spark.operators.knn import knn_join
+    from osm_search_spark.streaming.commit import read_table
 
-    places = spark.read.parquet(f"{args.base}/places")
+    places = read_table(spark, f"{args.base}/places")
     if args.op in ("search", "autocomplete"):
-        term_dict = spark.read.parquet(f"{args.base}/term_dict")
-        counts = spark.read.parquet(f"{args.base}/ngram_counts")
+        term_dict = read_table(spark, f"{args.base}/term_dict")
+        counts = read_table(spark, f"{args.base}/ngram_counts")
         if args.op == "search":
             out = spell.freeform_search(
                 spark, places, term_dict, counts, args.q, k=args.k, offset=args.offset

@@ -3,8 +3,9 @@
   spark-submit --py-files dist/osm_search_spark.zip jobs/raster_pipeline.py \
       --polygons polys.parquet --out /data/raster --res 14 --px 16
 
-Two checkpoint-committed stages (plans/lineage.py — per-partition lineage
-rows + _SUCCESS markers; a rerun resumes after the last committed stage):
+Two checkpoint-committed stages (plans/lineage.py — snapshot-pointer
+commits whose pointer carries the per-partition lineage; a rerun resumes
+after the last committed stage):
 
   masks  rasterize_polygons -> explicit repartitionByRange on cell id ->
          parquet partitioned by the coarse parent cell (bounded directory

@@ -29,6 +29,7 @@ from .operators import spell
 from .operators.spell import BM25FIndex
 from .operators.geofence import geofence_status as _geofence_status
 from .operators.knn import knn_join
+from .streaming.commit import read_table
 
 VALID_QUERY = re.compile(r"^[A-Za-z0-9_ +,.()]+$")
 
@@ -43,9 +44,9 @@ class SparkSearcher:
         (pkg/util.go:12-14; functions/stemmer.DEFAULT_ROOTS gives the
         bundled dictionary, or pass your own root set)."""
         self.spark = spark
-        self.places = spark.read.parquet(f"{index_base}/places").cache()
-        self.term_dict = spark.read.parquet(f"{index_base}/term_dict").cache()
-        self.ngram_counts = spark.read.parquet(f"{index_base}/ngram_counts").cache()
+        self.places = read_table(spark, f"{index_base}/places").cache()
+        self.term_dict = read_table(spark, f"{index_base}/term_dict").cache()
+        self.ngram_counts = read_table(spark, f"{index_base}/ngram_counts").cache()
         # load-once index (Searcher.LoadMainIndex, searcher.go:84-133)
         self.index = BM25FIndex(self.places, stem_roots=stem_roots)
 

@@ -143,8 +143,9 @@ def incremental_index(
 ) -> dict[str, DataFrame]:
     """Merge a new/changed document batch into
     {postings, doc_stats, term_dict, ngram_counts}. Returns the updated
-    frames (callers persist/write them — stage through
-    plans/lineage.run_stage when overwriting the same parquet dirs).
+    frames (callers commit them through streaming/commit.commit, which
+    writes a new version per commit, so the tables they were read from
+    can be committed over safely).
 
     old_docs: the previous versions of re-ingested docs (semi-join the doc
     store with the batch's ids) — required for exact ngram_counts

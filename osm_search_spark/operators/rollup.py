@@ -10,7 +10,7 @@ invariant and the DuckDB oracle.
 committed rollup WITHOUT recomputing history — union + re-aggregate on
 the bucket keys (counts and integer sums are associative, so
 merge(rollup(A), B) == rollup(A ∪ B) exactly; tested). Composes with
-foreachBatch / plans/lineage.run_stage the same way the incremental
+foreachBatch / streaming/commit.commit the same way the incremental
 index maintenance does (operators/index_maintenance.py).
 """
 

@@ -30,6 +30,7 @@ from ..functions import cells as C
 from ..operators import search
 from ..sources.osm import TYPE_PRECEDENCE, VALID_NODE_SEARCH_TAGS, VALID_SEARCH_TAGS
 from ..sources.osm import assemble_ways
+from ..streaming.commit import commit
 
 
 def _type_expr() -> F.Column:
@@ -322,17 +323,16 @@ def build_index_tables(places: DataFrame) -> dict[str, DataFrame]:
 
 
 def write_tables(tables: dict[str, DataFrame], base: str) -> None:
-    """Persist artifacts (parquet as the Iceberg stand-in in this sandbox;
-    on a cluster these are `writeTo(...).createOrReplace()` Iceberg calls).
-
-    CAUTION: never point this at a directory one of the input DataFrames is
-    lazily reading from (parquet overwrite deletes the source mid-plan) —
-    prefer build_all, which stages every artifact through lineage.run_stage.
-    """
+    """Commit each artifact as the snapshot-pointer table ``<base>/<name>``
+    (streaming/commit.commit; on a cluster these are
+    `writeTo(...).createOrReplace()` Iceberg calls). Every commit writes a
+    new version directory, so ``base`` may be the index the input frames
+    lazily read from; readers resolve tables through commit.read_table."""
     for name, df in tables.items():
         key = {"places": "id", "cells": "cell_id"}.get(name)
         w = df.repartitionByRange(4, key) if key else df
-        w.write.mode("overwrite").parquet(f"{base}/{name}")
+        commit(df.sparkSession, f"{base}/{name}", w,
+               cell_col="cell_id" if name == "cells" else None)
 
 
 def build_all(

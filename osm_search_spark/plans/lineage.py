@@ -1,4 +1,4 @@
-"""Per-partition lineage + checkpoint/resume for the build pipeline.
+"""Per-partition lineage + checkpoint/resume for the batch pipelines.
 
 North-rule requirement: every stage records, per output partition,
 (stage, input snapshot id, cell range, row count, checksum) so a failed run
@@ -6,51 +6,21 @@ resumes from the last committed stage instead of recomputing from scratch —
 the reference reruns its whole indexer on failure (no checkpointing exists
 there; this is our addition, SURVEY §4 last row).
 
-Storage is parquet-per-stage with an atomic _SUCCESS marker (the sandbox
-stand-in for Iceberg snapshot commits; on a cluster `writeTo(...)` +
-snapshot ids replace the directory protocol 1:1 — lineage rows then carry
-the Iceberg snapshot_id as input_snapshot).
+Each stage is a snapshot-pointer table ``<base>/<stage>/v<seq>/`` +
+``CURRENT`` (streaming/commit.commit): one atomic pointer replace
+publishes the data with its input snapshot and per-partition lineage.
 """
 
 from __future__ import annotations
 
-import os
+from functools import reduce
+from operator import xor
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-
-def lineage_of(
-    df: DataFrame, stage: str, input_snapshot: str, cell_col: str | None = None
-) -> DataFrame:
-    """One row per physical partition: row count, checksum (order-insensitive
-    sum of row hashes), and the cell range when a cell column exists."""
-    cols = [F.col(c) for c in df.columns]
-    with_meta = df.select(
-        F.spark_partition_id().alias("partition_id"),
-        F.xxhash64(*cols).alias("row_hash"),
-        *([F.col(cell_col).alias("_cell")] if cell_col else []),
-    )
-    aggs = [
-        F.count("*").alias("row_count"),
-        F.bit_xor("row_hash").alias("checksum"),
-    ]
-    if cell_col:
-        aggs += [F.min("_cell").alias("cell_min"), F.max("_cell").alias("cell_max")]
-    else:
-        aggs += [F.lit(None).cast("long").alias("cell_min"), F.lit(None).cast("long").alias("cell_max")]
-    return (
-        with_meta.groupBy("partition_id")
-        .agg(*aggs)
-        .withColumn("stage", F.lit(stage))
-        .withColumn("input_snapshot", F.lit(input_snapshot))
-    )
-
-
-def stage_committed(base: str, stage: str) -> bool:
-    return os.path.exists(f"{base}/{stage}/_SUCCESS") and os.path.exists(
-        f"{base}/_lineage/{stage}/_SUCCESS"
-    )
+from ..streaming.commit import (
+    commit, lineage_of, read_pointer, read_table, writer_pointer,
+)
 
 
 def run_stage(
@@ -63,49 +33,32 @@ def run_stage(
     force: bool = False,
     partition_by: str | None = None,
 ) -> DataFrame:
-    """Execute a stage with resume semantics: if its output + lineage are
-    committed, read them back instead of recomputing. Returns the stage
-    output DataFrame either way. ``partition_by`` writes the stage output
-    hive-partitioned on that column (prunable reads downstream)."""
-    out_path = f"{base}/{stage}"
-    if stage_committed(base, stage) and not force:
-        # resume guard: the committed output is only valid for the SAME
-        # input snapshot / parameters it was built from (callers encode
-        # parameters into input_snapshot, e.g. "path|res=14|px=16") — a
-        # rerun with changed inputs rebuilds instead of silently reusing
-        rec = (
-            spark.read.parquet(f"{base}/_lineage/{stage}")
-            .select("input_snapshot")
-            .first()
-        )
-        # an EMPTY lineage table cannot vouch for the committed output —
-        # treat it as a snapshot mismatch and rebuild (reusing here would
-        # reopen the stale-parameter hole the guard exists to close)
-        if rec is not None and rec["input_snapshot"] == input_snapshot:
-            return spark.read.parquet(out_path)
-    df = build()
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(out_path)
-    materialized = spark.read.parquet(out_path)
-    lineage_of(materialized, stage, input_snapshot, cell_col).write.mode(
-        "overwrite"
-    ).parquet(f"{base}/_lineage/{stage}")
-    return materialized
+    """Execute a stage with resume semantics: if its pointer records the
+    same input snapshot, read the committed version back instead of
+    recomputing. Callers encode parameters into input_snapshot (e.g.
+    "path|res=14|px=16"), so a rerun with changed inputs rebuilds.
+    ``partition_by`` writes the output hive-partitioned on that column."""
+    table = f"{base}/{stage}"
+    rec = writer_pointer(table)
+    if rec is not None and rec.get("input_snapshot") == input_snapshot and not force:
+        return read_table(spark, table)
+    return commit(
+        spark, table, build(), cell_col, partition_by,
+        stage=stage, input_snapshot=input_snapshot,
+    )
 
 
 def verify_stage(spark: SparkSession, base: str, stage: str) -> bool:
-    """Re-derive counts/checksums from the committed output and compare with
-    the recorded lineage (whole-stage equality; per-partition ids can shift
-    on re-read, so the invariant checked is total rows + total checksum)."""
-    out = spark.read.parquet(f"{base}/{stage}")
-    lin = spark.read.parquet(f"{base}/_lineage/{stage}")
-    cols = [F.col(c) for c in out.columns]
-    got = out.select(F.xxhash64(*cols).alias("h")).agg(
-        F.count("*").alias("rows"), F.bit_xor("h").alias("sum")
-    ).collect()[0]
-    rec = lin.agg(
-        F.sum("row_count").alias("rows"), F.bit_xor("checksum").alias("sum")
-    ).collect()[0]
-    return (got["rows"], got["sum"]) == (rec["rows"], rec["sum"])
+    """Re-derive counts/checksums from the committed version and compare
+    with the lineage its pointer recorded (whole-stage equality; per-
+    partition ids can shift on re-read, so the invariant checked is total
+    rows + total checksum)."""
+    table = f"{base}/{stage}"
+    recorded = read_pointer(table)["lineage"]
+    got = lineage_of(read_table(spark, table))
+
+    def totals(lin):
+        rows = sum(p["row_count"] for p in lin)
+        return rows, reduce(xor, (p["checksum"] for p in lin), 0)
+
+    return totals(got) == totals(recorded)

@@ -1,17 +1,20 @@
-"""Exactly-once merge-into-table protocol for foreachBatch sinks —
-snapshot-pointer commits, shared by every streaming operator that
-maintains a mergeable table (continuous rollup, streaming sketches).
+"""Snapshot-pointer commits — the one way a table is committed: batch
+stages (plans/lineage.run_stage), index tables (build_pipeline.
+write_tables) and exactly-once streaming merges (`start_merge_stream`).
 
-foreachBatch is at-least-once; an additive/mergeable table needs:
-
-- **Snapshot-pointer commits** (the Iceberg model, stood in locally the
-  same way plans/lineage.py documents): every commit stages a NEW version
-  directory under ``_staging_v<seq>``, renames it to
-  ``<table_dir>/v<seq>`` (atomic on POSIX), and then atomically replaces
-  the ``CURRENT`` pointer file (write tmp + ``os.replace``). A crash at
-  any point leaves the previous pointer — and the previous committed
-  snapshot — fully intact; a crash during the data write leaves only a
-  staging dir that the next attempt overwrites.
+- **Snapshot-pointer commits** (the Iceberg model; on a cluster
+  `writeTo(...)` + snapshot ids replace the directory protocol 1:1):
+  `commit` stages a NEW version directory under ``_staging_v<seq>``,
+  renames it to ``<table_dir>/v<seq>`` (atomic on POSIX), and then
+  atomically replaces the ``CURRENT`` pointer file (write tmp +
+  ``os.replace``). A crash at any point leaves the previous pointer — and
+  the previous committed snapshot — fully intact. A table may be
+  recommitted from a lazy frame that reads its previous version.
+- **Lineage rides in the pointer**: the staged files' per-partition
+  lineage (partition id, row count, checksum, cell range) and the
+  caller's metadata (input snapshot, stream/batch ids) land in
+  ``CURRENT`` in the same atomic replace as the data, the way an Iceberg
+  manifest carries per-file stats.
 - **Replay skip keyed on (stream_id, batch_id)** — the Delta
   (appId, batchId) idempotence key. A replayed micro-batch from the SAME
   stream (same id, same or older batch id) is skipped, so the merge
@@ -25,13 +28,13 @@ foreachBatch is at-least-once; an additive/mergeable table needs:
   re-initialising. The one recoverable writer case: a crash between the
   FIRST commit's dir rename and its pointer write leaves exactly `v0`,
   no pointer, and the `_first_commit_inflight` marker written just
-  before the rename — the replaying writer clears the orphan and redoes
-  the merge. Without the marker (pointer lost externally on a committed
-  one-batch table) writers fail loud like readers.
+  before the rename — the next writer clears the orphan and commits
+  again. Without the marker (pointer lost externally on a committed
+  one-version table) writers fail loud like readers.
 
-`start_merge_stream` is the generic operator: callers supply ONE
-function `merge_batch(committed_or_None, batch_df) -> new snapshot` and
-get the full protocol; `read_table` resolves the pointer for readers.
+`start_merge_stream` callers supply ONE function `merge_batch(
+committed_or_None, batch_df) -> new snapshot` and get the full protocol;
+`read_table` resolves the pointer for readers.
 """
 
 from __future__ import annotations
@@ -42,14 +45,13 @@ import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _POINTER = "CURRENT"
 _VERSION_RE = re.compile(r"^v(\d+)$")
 _STAGING_PREFIX = "_staging_"
-# Written immediately before the FIRST commit's dir rename, removed after
-# its pointer write: its presence is positive evidence the v0-no-pointer
-# state came from a writer crash (not external pointer loss), gating the
-# writer-side auto-recovery below (ADVICE r05).
+# Present from just before the FIRST commit's rename until its pointer
+# write: evidence that a v0-no-pointer state is a writer crash.
 _FIRST_COMMIT_MARKER = "_first_commit_inflight"
 # Snapshot-expiry window: current + previous survive; older versions are
 # retired at the next commit. A reader pinned to a snapshot older than
@@ -83,11 +85,25 @@ def read_pointer(table_dir: str) -> dict | None:
             return json.load(f)
     if _version_dirs(table_dir):
         raise RuntimeError(
-            f"streaming table {table_dir!r} has version directories but no "
+            f"table {table_dir!r} has version directories but no "
             f"{_POINTER} pointer; refusing to re-initialise over committed "
             "history — restore the pointer or remove the table root"
         )
     return None
+
+
+def writer_pointer(table_dir: str) -> dict | None:
+    """`read_pointer` for a writer: clears a crashed first commit (exactly
+    v0, no pointer, in-flight marker) and fails loud on anything else."""
+    try:
+        return read_pointer(table_dir)
+    except RuntimeError:
+        marker = os.path.join(table_dir, _FIRST_COMMIT_MARKER)
+        if _version_dirs(table_dir) != ["v0"] or not os.path.exists(marker):
+            raise
+        shutil.rmtree(os.path.join(table_dir, "v0"), ignore_errors=True)
+        os.remove(marker)
+        return None
 
 
 def read_table(
@@ -107,7 +123,7 @@ def read_table(
     if version is None:
         return spark.read.parquet(os.path.join(table_dir, rec["version"]))
     retained = [
-        v for v in _version_dirs(table_dir) if int(v[1:]) <= _rec_seq(rec)
+        v for v in _version_dirs(table_dir) if int(v[1:]) <= rec["seq"]
     ]
     name = f"v{version}"
     if name not in retained:
@@ -118,22 +134,68 @@ def read_table(
     return spark.read.parquet(os.path.join(table_dir, name))
 
 
-def _rec_seq(rec: dict) -> int:
-    # legacy pointers (pre round 5) recorded no seq; their version name
-    # was v<batch_id>, which is still a valid monotonic seq for them
-    return rec["seq"] if "seq" in rec else int(rec["version"][1:])
+def lineage_of(df: DataFrame, cell_col: str | None = None) -> list[dict]:
+    """One record per physical partition: row count, checksum (order-
+    insensitive bit_xor of row hashes), and the cell range when a cell
+    column exists (None bounds otherwise)."""
+    cell = F.col(cell_col) if cell_col else F.lit(None).cast("long")
+    rows = df.select(
+        F.spark_partition_id().alias("partition_id"),
+        F.xxhash64(*df.columns).alias("row_hash"),
+        cell.alias("_cell"),
+    ).groupBy("partition_id").agg(
+        F.count("*").alias("row_count"),
+        F.bit_xor("row_hash").alias("checksum"),
+        F.min("_cell").alias("cell_min"),
+        F.max("_cell").alias("cell_max"),
+    ).collect()
+    return sorted((r.asDict() for r in rows), key=lambda r: r["partition_id"])
 
 
-def _should_skip(rec: dict | None, stream_id, batch_id: int) -> bool:
-    """The (stream_id, batch_id) idempotence rule. Legacy pointers (or
-    direct callers passing stream_id=None) fall back to batch-id-only —
-    the pre-round-5 behavior, which cannot tell a fresh-checkpoint
-    restart from a replay; pass a stream_id to get the real key."""
-    if rec is None:
-        return False
-    if stream_id is None or "stream_id" not in rec:
-        return batch_id <= rec["batch_id"]
-    return rec["stream_id"] == stream_id and batch_id <= rec["batch_id"]
+def commit(
+    spark: SparkSession,
+    table_dir: str,
+    df: DataFrame,
+    cell_col: str | None = None,
+    partition_by: str | None = None,
+    **meta,
+) -> DataFrame:
+    """Commit ``df`` as the next version of ``table_dir`` and return the
+    committed version. ``meta`` (JSON-able: input snapshot, stream/batch
+    ids) and the staged files' lineage land in the pointer together.
+    ``partition_by`` writes the version hive-partitioned on that column."""
+    rec = writer_pointer(table_dir)
+    seq = rec["seq"] + 1 if rec is not None else 0
+    version = f"v{seq}"
+    final = os.path.join(table_dir, version)
+    staging = os.path.join(table_dir, f"{_STAGING_PREFIX}{version}")
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(staging)
+    lineage = lineage_of(spark.read.parquet(staging), cell_col)
+    # a crashed PREVIOUS attempt of this same seq may have left the final
+    # dir (rename done, pointer not) — it was never committed, clear it
+    if os.path.exists(final):
+        shutil.rmtree(final, ignore_errors=True)
+    marker = os.path.join(table_dir, _FIRST_COMMIT_MARKER)
+    if seq == 0:
+        open(marker, "w").close()  # crash evidence for `writer_pointer`
+    os.replace(staging, final)
+    # commit = atomic pointer replace; readers never see a partial table
+    tmp = os.path.join(table_dir, f"{_POINTER}.tmp")
+    with open(tmp, "w") as f:
+        json.dump({**meta, "version": version, "seq": seq, "lineage": lineage}, f)
+    os.replace(tmp, os.path.join(table_dir, _POINTER))
+    if os.path.exists(marker):
+        os.remove(marker)
+    # retire snapshots older than the recovery window + stale staging dirs
+    for old in _version_dirs(table_dir)[:-_KEEP_VERSIONS]:
+        shutil.rmtree(os.path.join(table_dir, old), ignore_errors=True)
+    for e in os.listdir(table_dir):
+        if e.startswith(_STAGING_PREFIX):
+            shutil.rmtree(os.path.join(table_dir, e), ignore_errors=True)
+    return spark.read.parquet(final)
 
 
 def commit_batch(
@@ -142,76 +204,23 @@ def commit_batch(
     batch_id: int,
     merge_batch,
     batch_df,
-    stream_id: str | None = None,
+    stream_id: str,
 ) -> None:
     """One exactly-once fold step (usable directly from any foreachBatch).
 
     stream_id identifies the logical stream (e.g. its checkpoint path);
     the replay skip fires only for (same stream, same-or-older batch) —
     a new stream whose batch ids restart at 0 merges normally."""
-    try:
-        rec = read_pointer(table_dir)
-    except RuntimeError:
-        # Writer-side recovery: a crash between the FIRST commit's dir
-        # rename and its pointer write leaves exactly v0, no pointer, and
-        # the in-flight marker (written just before the rename). All
-        # three conditions must hold — a one-batch table whose pointer
-        # was lost EXTERNALLY has no marker and stays fail-loud, so the
-        # committed snapshot is never silently destroyed.
-        vs = _version_dirs(table_dir)
-        marker = os.path.join(table_dir, _FIRST_COMMIT_MARKER)
-        if [int(e[1:]) for e in vs] == [0] and os.path.exists(marker):
-            shutil.rmtree(os.path.join(table_dir, vs[0]), ignore_errors=True)
-            os.remove(marker)
-            rec = None
-        else:
-            raise
-    if _should_skip(rec, stream_id, batch_id):
+    rec = writer_pointer(table_dir)
+    if (
+        rec is not None
+        and rec.get("stream_id") == stream_id
+        and batch_id <= rec["batch_id"]
+    ):
         return  # replayed micro-batch: merge already committed
-    committed = (
-        spark.read.parquet(os.path.join(table_dir, rec["version"]))
-        if rec is not None
-        else None
-    )
+    committed = None if rec is None else read_table(spark, table_dir)
     merged = merge_batch(committed, batch_df)
-    seq = _rec_seq(rec) + 1 if rec is not None else 0
-    version = f"v{seq}"
-    final = os.path.join(table_dir, version)
-    staging = os.path.join(table_dir, f"{_STAGING_PREFIX}{version}")
-    # stage the data write: a crash here leaves only uncommitted staging
-    merged.write.mode("overwrite").parquet(staging)
-    # a crashed PREVIOUS attempt of this same seq may have left the final
-    # dir (rename done, pointer not) — it was never committed, clear it
-    if os.path.exists(final):
-        shutil.rmtree(final, ignore_errors=True)
-    if seq == 0:
-        # crash-evidence marker for the one recoverable writer state
-        with open(os.path.join(table_dir, _FIRST_COMMIT_MARKER), "w") as f:
-            f.write(str(batch_id))
-    os.replace(staging, final)
-    # commit = atomic pointer replace; readers never see a partial table
-    tmp = os.path.join(table_dir, f"{_POINTER}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "version": version,
-                "seq": seq,
-                "batch_id": batch_id,
-                "stream_id": stream_id,
-            },
-            f,
-        )
-    os.replace(tmp, os.path.join(table_dir, _POINTER))
-    marker = os.path.join(table_dir, _FIRST_COMMIT_MARKER)
-    if os.path.exists(marker):
-        os.remove(marker)
-    # retire snapshots older than the recovery window + stale staging dirs
-    versions = _version_dirs(table_dir)
-    for old in versions[:-_KEEP_VERSIONS]:
-        shutil.rmtree(os.path.join(table_dir, old), ignore_errors=True)
-    for e in os.listdir(table_dir):
-        if e.startswith(_STAGING_PREFIX) and e != f"{_STAGING_PREFIX}{version}":
-            shutil.rmtree(os.path.join(table_dir, e), ignore_errors=True)
+    commit(spark, table_dir, merged, batch_id=batch_id, stream_id=stream_id)
 
 
 def start_merge_stream(

@@ -1,11 +1,14 @@
 """End-to-end image+caption curation job: stage outputs, filtering
 semantics, lineage resume."""
 
+import os
 import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/jobs")
+from osm_search_spark.streaming.commit import read_table
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "jobs"))
 
 
 def test_curation_job_end_to_end_and_resume(spark, tmp_path):
@@ -61,7 +64,7 @@ def test_curated_output_partition_pruning(spark, tmp_path):
 
     base = str(tmp_path / "curated2")
     job.run(spark, base, synth_n=60, tile_res=14)
-    out = spark.read.parquet(f"{base}/curated")
+    out = read_table(spark, f"{base}/curated")
     one_parent = out.select("parent_cell").first()["parent_cell"]
     plan = (
         out.filter(F.col("parent_cell") == one_parent)

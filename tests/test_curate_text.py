@@ -8,14 +8,16 @@ drops WHICH planted victim — the stage-boundary evidence the oracle's
 end-to-end hash can't localize.
 """
 
+import os
 import sys
 
 from pyspark.sql import functions as F
 
 from osm_search_spark.plans import curate_text as ct
 from osm_search_spark.sources import synth
+from osm_search_spark.streaming.commit import read_table
 
-sys.path.insert(0, "/root/repo/jobs")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "jobs"))
 
 
 def _ids(df):
@@ -107,7 +109,7 @@ def test_curate_text_job_resume(spark, tmp_path):
     assert [tuple(r) for r in rows1] == [tuple(r) for r in rows2]
 
     # sharded write is hive-partitioned by shard (prunable reads)
-    out = spark.read.parquet(f"{base}/corpus")
+    out = read_table(spark, f"{base}/corpus")
     plan = (
         out.filter(F.col("shard") == 0)
         ._jdf.queryExecution().executedPlan().toString()

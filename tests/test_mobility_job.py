@@ -1,11 +1,12 @@
 """End-to-end mobility analytics job: stage semantics, cross-stage
 consistency, lineage resume + parameter re-gating."""
 
+import os
 import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/jobs")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "jobs"))
 
 
 def test_mobility_job_end_to_end_and_resume(spark, tmp_path):

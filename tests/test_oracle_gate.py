@@ -2,12 +2,8 @@
 Spark-vs-DuckDB comparison at sf0.001 (the full 30-query gate runs via
 tools/check_oracle.py; this keeps `pytest -x -q` self-contained)."""
 
-import sys
-
 import duckdb
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 SF = "/root/testdata/sf0.001"
 QUERIES = ["spatial_tile_join", "knn_k5", "bm25_search", "minhash_signatures",

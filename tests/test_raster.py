@@ -247,26 +247,26 @@ def test_raster_pipeline_job_lineage_resume(spark, tmp_path):
     per stage, rings derived from the COMMITTED masks, clean resume."""
     from jobs.raster_pipeline import run
     from osm_search_spark.plans import lineage
+    from osm_search_spark.streaming.commit import read_pointer, read_table
 
     polys_path = str(tmp_path / "polys")
     synth.concave_polygons_df(spark).write.parquet(polys_path)
     out = str(tmp_path / "raster")
 
     masks, rings = run(spark, polys_path, out, res=RES, px=PX)
-    assert lineage.stage_committed(out, "masks")
-    assert lineage.stage_committed(out, "rings")
+    assert read_pointer(f"{out}/masks") is not None
+    assert read_pointer(f"{out}/rings") is not None
     assert lineage.verify_stage(spark, out, "masks")
     assert lineage.verify_stage(spark, out, "rings")
-    # hive-partitioned on the coarse parent cell
-    assert any(
-        p.name.startswith("tile_coarse=") for p in (tmp_path / "raster" / "masks").iterdir()
-    )
+    # the committed version is hive-partitioned on the coarse parent cell
+    committed = tmp_path / "raster" / "masks" / read_pointer(f"{out}/masks")["version"]
+    assert any(p.name.startswith("tile_coarse=") for p in committed.iterdir())
     n_set = masks.agg(F.sum("n_set")).collect()[0][0]
     area2 = rings.agg(F.sum("area2")).collect()[0][0]
     assert area2 == 2 * n_set
     # a coarse-cell predicate must prune hive partitions at the scan
     one_coarse = masks.select("tile_coarse").first()[0]
-    pruned = spark.read.parquet(f"{out}/masks").filter(
+    pruned = read_table(spark, f"{out}/masks").filter(
         F.col("tile_coarse") == one_coarse
     )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
