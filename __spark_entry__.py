@@ -5405,7 +5405,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dissolve_admin": q_dissolve_admin,
         "multi_outer_pip": q_multi_outer_pip,
         "stay_points": q_stay_points,
-        "od_matrix": q_od_matrix,
         "trip_stats": q_trip_stats,
         "hotspots": q_hotspots,
         "ring_measures": q_ring_measures,
@@ -5524,7 +5523,6 @@ def oracle_sql() -> dict[str, str]:
         "dissolve_admin": sql_dissolve_admin(),
         "multi_outer_pip": sql_multi_outer_pip(),
         "stay_points": sql_stay_points(),
-        "od_matrix": sql_od_matrix(),
         "trip_stats": sql_trip_stats(),
         "hotspots": sql_hotspots(),
         "ring_measures": sql_ring_measures(),

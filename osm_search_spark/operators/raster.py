@@ -53,12 +53,7 @@ from pyspark.sql import functions as F
 from ..functions import cells as C
 from ..functions import geometry as G
 from . import spatial_join as SJ
-from .spatial_join import (
-    AUTO_GROUPED_DIM_THRESHOLD,
-    classified_cover,
-    spatial_join,
-    with_bbox,
-)
+from .spatial_join import classified_cover, spatial_join, with_bbox
 
 # vertex pack: v = x * VPACK + y; lattice coords < 2**30 at res+e <= 28
 VPACK = 2**32
@@ -96,7 +91,6 @@ def rasterize_polygons(
     res: int = C.TILE_RES,
     px: int = 16,
     drop_empty: bool = True,
-    dim_threshold: int | None = AUTO_GROUPED_DIM_THRESHOLD,
 ) -> DataFrame:
     """Vector -> raster: (polygon_id, cell_id, n_set, mask).
 
@@ -113,21 +107,19 @@ def rasterize_polygons(
     FULL cover tiles (entirely interior, classified by
     spatial_join.classified_cover) emit a constant all-ones mask with no
     lattice test; only PARTIAL tiles evaluate pixel centers, Arrow-batched
-    and numpy-vectorized per tile. Rings ship as one broadcast dict (same
-    dim assumption as refine_pip); above ``dim_threshold`` polygons the
-    operator auto-falls back to a grouped applyInPandas plan that never
-    collects rings to the driver (same policy as spatial_join — the probe
-    is a bounded limit+count, never a full count).
+    and numpy-vectorized per tile. Rings ship as one broadcast dict; above
+    spatial_join.BROADCAST_MAX_POLYGONS polygons the operator falls back
+    to a grouped applyInPandas plan that never collects rings to the
+    driver (the probe is a bounded limit+count, never a full count).
     """
     e = _check_px(px)
     size_p = C.cell_size_deg(res + e)
     n_bytes = px * px // 8
     spark = polygons.sparkSession
 
-    if dim_threshold is not None:
-        n_probe = polygons.select("polygon_id").limit(dim_threshold + 1).count()
-        if n_probe > dim_threshold:
-            return _rasterize_grouped(polygons, res, px, drop_empty)
+    n_max = SJ.BROADCAST_MAX_POLYGONS
+    if polygons.select("polygon_id").limit(n_max + 1).count() > n_max:
+        return _rasterize_grouped(polygons, res, px, drop_empty)
 
     # localCheckpoint (NOT persist): the FULL and PARTIAL branches below
     # both read the cover, and it is small (one row per polygon x bbox

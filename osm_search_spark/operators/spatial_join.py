@@ -10,17 +10,18 @@ GetFullAdress (pkg/index/indexer.go:1017-1170) — as:
 2. **coarse join**: points compute their cell id (Column arithmetic) and
    equi-join the cover on `cell_id` — a hash join Catalyst can broadcast
    when the cover is small or shuffle (with AQE skew splitting) when not;
-3. **refine**: exact winding-number PIP, vectorized in numpy inside
-   `mapInPandas` with the polygon rings shipped as a broadcast dict (no ring
-   duplication through the shuffle, no per-row Python);
-4. **match policy**: first/last-match per admin level via a row_number
-   window, reproducing indexer.go:1135-1139 (province = last match, all
+3. **refine**: exact winding-number PIP as a codegen Column fold over
+   per-edge structs precomputed on the polygon dim (`refine_pip_expr`);
+   FULL cover cells skip it through a CASE guard, so only boundary-cell
+   candidates pay the fold, and no row crosses into Python;
+4. **match policy**: first/last-match per admin level via an argmin
+   aggregate, reproducing indexer.go:1135-1139 (province = last match, all
    other levels = first match).
 
 At 100 TB the points side is the big table: it never shuffles for the join
 when the cover broadcasts (the common admin-boundary case); the refine is a
-narrow map stage; the only wide stage is the optional window, partitioned by
-point_id.
+filter on the same narrow stage; the only wide stage is the optional
+match-policy aggregate, partitioned by point_id.
 """
 
 from __future__ import annotations
@@ -120,17 +121,12 @@ def classified_cover_rows(polygons_rows: list[dict], res: int) -> list[tuple]:
     with hole AREA). Exact, not heuristic: a corner on the boundary
     implies an edge through it, whose bbox touches the cell.
     """
-    import numpy as np
-
-    from ..functions import cells as CE
-    from ..functions import geometry as G
-
     out = []
     for p in polygons_rows:
         rl, rn = G.close_ring(np.asarray(p["ring_lat"]), np.asarray(p["ring_lon"]))
         holes = row_holes(p)
-        cover = CE.bbox_cover(rl.min(), rn.min(), rl.max(), rn.max(), res)
-        minlat, minlon, maxlat, maxlon = CE.np_cell_bounds(cover)
+        cover = C.bbox_cover(rl.min(), rn.min(), rl.max(), rn.max(), res)
+        minlat, minlon, maxlat, maxlon = C.np_cell_bounds(cover)
         corners_in = np.ones(len(cover), dtype=bool)
         for cl, cn in ((minlat, minlon), (minlat, maxlon), (maxlat, minlon), (maxlat, maxlon)):
             corners_in &= G.points_in_polygon_with_holes(cl, cn, rl, rn, holes)
@@ -206,18 +202,16 @@ def cell_join(
     res: int = C.JOIN_RES,
     lat: str = "lat",
     lon: str = "lon",
-    broadcast_cover: bool = True,
 ) -> DataFrame:
-    """Coarse candidate join: points × polygon covers on cell_id.
+    """Coarse candidate join: points × broadcast polygon bbox covers on
+    cell_id.
 
     Output: all point columns + polygon_id. Duplicate (point, polygon)
     candidates cannot arise — a point has exactly one cell at ``res`` and a
     polygon covers each cell at most once.
     """
     polygons = with_bbox(polygons)
-    cover = polygon_cell_cover(polygons, res)
-    if broadcast_cover:
-        cover = F.broadcast(cover)
+    cover = F.broadcast(polygon_cell_cover(polygons, res))
     pts = points.withColumn("cell_id", C.latlng_to_cell(lat, lon, res))
     return pts.join(cover, "cell_id", "inner")
 
@@ -228,11 +222,13 @@ def refine_pip_expr(
     lat: str = "lat",
     lon: str = "lon",
     full_col: str | None = None,
+    broadcast: bool = True,
 ) -> DataFrame:
-    """Exact PIP refine without leaving the JVM: broadcast-join the ring
-    arrays onto candidates and filter with `pip_expr`. The default refine —
-    scales linearly with cores (the Arrow/numpy variants below exist for
-    polygon sets whose rings are too large to evaluate per-row).
+    """Exact PIP refine without leaving the JVM: join the per-edge ring
+    structs onto candidates and filter with a winding-number fold. Scales
+    linearly with cores. ``broadcast`` hints the ring dim; spatial_join
+    passes False for dims above BROADCAST_MAX_POLYGONS, where Catalyst/AQE
+    pick the join from measured sizes instead.
 
     Holes (optional holes_lat/holes_lon on the dim): a candidate on a hole
     boundary stays inside (boundary => inside on every ring); one strictly
@@ -328,7 +324,9 @@ def refine_pip_expr(
             else []
         ),
     )
-    joined = candidates.join(F.broadcast(rings), "polygon_id")
+    joined = candidates.join(
+        F.broadcast(rings) if broadcast else rings, "polygon_id"
+    )
     plat, plon = F.col(lat), F.col(lon)
 
     def on_seg(e):
@@ -370,93 +368,11 @@ def refine_pip_expr(
     return joined.filter(keep).drop(*drop_cols)
 
 
-def refine_pip(
-    candidates: DataFrame,
-    polygons: DataFrame,
-    lat: str = "lat",
-    lon: str = "lon",
-) -> DataFrame:
-    """Exact PIP refine with winding-number semantics (boundary => inside).
-
-    Ships rings to executors as a broadcast dict {polygon_id: (lat[], lon[])}
-    and filters candidate rows inside `mapInPandas` — Arrow-batched,
-    vectorized over points per polygon group within each batch. Suitable
-    whenever the polygon *dimension* fits in memory (admin boundaries: yes).
-    For giant polygon sets see `refine_pip_grouped`.
-    """
-    spark = candidates.sparkSession
-    dim_cols = ["polygon_id", "ring_lat", "ring_lon"] + [
-        c for c in ("holes_lat", "holes_lon") if c in polygons.columns
-    ]
-    ring_rows = polygons.select(*dim_cols).collect()
-    rings = {
-        r["polygon_id"]: (
-            *G.close_ring(np.array(r["ring_lat"]), np.array(r["ring_lon"])),
-            row_holes(r),
-        )
-        for r in ring_rows
-    }
-    bc = spark.sparkContext.broadcast(rings)
-    schema = candidates.schema
-
-    def pip_filter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ring_map = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                yield pdf
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            plat = pdf[lat].to_numpy(dtype=np.float64)
-            plon = pdf[lon].to_numpy(dtype=np.float64)
-            for pid, idx in pdf.groupby("polygon_id").indices.items():
-                rl, rn, holes = ring_map[pid]
-                keep[idx] = G.points_in_polygon_with_holes(
-                    plat[idx], plon[idx], rl, rn, holes
-                )
-            yield pdf[keep]
-
-    return candidates.mapInPandas(pip_filter, schema=schema)
-
-
-def refine_pip_grouped(
-    candidates: DataFrame,
-    polygons: DataFrame,
-    lat: str = "lat",
-    lon: str = "lon",
-) -> DataFrame:
-    """Refine variant for polygon sets too large to broadcast: co-group
-    candidates with rings by polygon_id via applyInPandas (one shuffle)."""
-    dim_cols = ["polygon_id", "ring_lat", "ring_lon"] + [
-        c for c in ("holes_lat", "holes_lon") if c in polygons.columns
-    ]
-    has_holes = len(dim_cols) == 5
-    joined = candidates.join(polygons.select(*dim_cols), "polygon_id")
-    out_schema = candidates.schema
-
-    def pip_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        rl, rn = G.close_ring(
-            np.array(pdf["ring_lat"].iloc[0]), np.array(pdf["ring_lon"].iloc[0])
-        )
-        holes = (
-            row_holes(
-                {
-                    "holes_lat": pdf["holes_lat"].iloc[0],
-                    "holes_lon": pdf["holes_lon"].iloc[0],
-                }
-            )
-            if has_holes
-            else []
-        )
-        keep = G.points_in_polygon_with_holes(
-            pdf[lat].to_numpy(np.float64), pdf[lon].to_numpy(np.float64),
-            rl, rn, holes,
-        )
-        return pdf.loc[keep, [f.name for f in out_schema.fields]]
-
-    return joined.groupBy("polygon_id").applyInPandas(pip_group, schema=out_schema)
-
-
-AUTO_GROUPED_DIM_THRESHOLD = 20000
+# Dims above this many polygons get no broadcast hints (cover, rings):
+# the hinted cover grows with polygons x cells and would pin that much
+# memory on every executor. Checked by a bounded limit+count probe, never
+# a full count of an unbounded dim.
+BROADCAST_MAX_POLYGONS = 20000
 
 # Round-9 small-dim fast path: dims at or below this many polygons classify
 # their cell cover ON THE DRIVER (numpy, same classified_cover_rows kernel)
@@ -496,77 +412,56 @@ def spatial_join(
     res: int = C.JOIN_RES,
     lat: str = "lat",
     lon: str = "lon",
-    refine: bool | str = "expr",
-    broadcast_cover: bool = True,
-    dim_threshold: int = AUTO_GROUPED_DIM_THRESHOLD,
 ) -> DataFrame:
-    """Full PIP join: point columns + (polygon_id). Exact unless refine=False.
+    """Exact PIP join: point columns + cell_id + polygon_id.
+
+    One plan at every dim size: classified FULL/PARTIAL cover, equi-join
+    on cell_id, then `refine_pip_expr`'s CASE-guarded winding fold, so
+    FULL cells match with no per-row test and only boundary (PARTIAL)
+    candidates evaluate the fold — refine cost ~ polygon perimeter, not
+    area. Dims of at most DRIVER_CLASSIFY_MAX_POLYGONS polygons classify
+    their cover on the driver (a LocalRelation; no job, no Python
+    worker), larger ones in a distributed mapInPandas. Dims of at most
+    BROADCAST_MAX_POLYGONS polygons broadcast the cover and the ring
+    edges; above that the same plan runs unhinted.
 
     Multipolygon holes: polygons may carry optional holes_lat/holes_lon
     columns (array<array<double>> — OSM relation `inner` members, which
     the reference drops at pkg/geo/parse_osm.go:348-368; this engine
     honors them). A point strictly inside a hole does not match; a point
-    ON a hole boundary does (boundary => inside on every ring). All
-    refine engines and the FULL/PARTIAL cover classification respect
-    holes; a hole-free dim pays nothing.
-
-    refine: "expr" (default — JVM codegen winding number), "arrow"
-    (broadcast-rings mapInPandas; for very large rings where the per-edge
-    fold is too wide), "grouped" (applyInPandas co-group; for polygon dims
-    too big to broadcast), or False (coarse cell join only).
-
-    The default path auto-falls back to the non-broadcast "grouped" plan
-    when the polygon dim exceeds ``dim_threshold`` rows (bounded limit+count
-    probe — never a full count of an unbounded dim).
+    ON a hole boundary does (boundary => inside on every ring). The
+    refine and the FULL/PARTIAL cover classification respect holes; a
+    hole-free dim pays nothing.
     """
     polygons = with_bbox(polygons)
-    local_cover: DataFrame | None = None
-    if refine == "expr" and dim_threshold is not None:
-        # bounded take doubles as the size probe AND (when the dim is
-        # small) the input to the driver-side cover fast path: for a
-        # LocalRelation fixture dim executeTake collects with NO job at
-        # all; for storage-backed dims it reads at most a partition or two
-        ring_cols = ["polygon_id", "ring_lat", "ring_lon"] + [
-            c for c in ("holes_lat", "holes_lon") if c in polygons.columns
-        ]
-        head = polygons.select(*ring_cols).take(DRIVER_CLASSIFY_MAX_POLYGONS + 1)
-        if len(head) <= DRIVER_CLASSIFY_MAX_POLYGONS:
-            local_cover = _classified_cover_local(
-                polygons.sparkSession, head, res
-            )
-        else:
-            n_probe = (
-                polygons.select("polygon_id").limit(dim_threshold + 1).count()
-            )
-            if n_probe > dim_threshold:
-                refine = "grouped"
-                broadcast_cover = False
-    if refine is False:
-        return cell_join(points, polygons, res, lat, lon, broadcast_cover)
-    if refine in (True, "arrow"):
-        cand = cell_join(points, polygons, res, lat, lon, broadcast_cover)
-        return refine_pip(cand, polygons, lat, lon)
-    if refine == "grouped":
-        cand = cell_join(points, polygons, res, lat, lon, broadcast_cover)
-        return refine_pip_grouped(cand, polygons, lat, lon)
-
-    # default "expr" path: FULL cells match with no per-row test (pure
-    # codegen), only boundary (PARTIAL) candidates evaluate the exact
-    # winding-number fold — refine cost ~ polygon perimeter, not area.
-    # ONE scan (round 9): the former full-branch/partial-branch union
-    # duplicated the points scan, the cell_id projection and the cover
-    # broadcast build (incl. the classify MapInPandas) per branch; the
-    # CASE-guarded refine filter keeps the FULL fast path inside a single
-    # pass (guide §2.4 — remove shuffles/scans outright).
-    cover = local_cover if local_cover is not None else classified_cover(polygons, res)
-    if broadcast_cover:
+    # bounded take doubles as the size probe AND (when the dim is small)
+    # the input to the driver-side cover: for a LocalRelation fixture dim
+    # executeTake collects with NO job at all; for storage-backed dims it
+    # reads at most a partition or two
+    ring_cols = ["polygon_id", "ring_lat", "ring_lon"] + [
+        c for c in ("holes_lat", "holes_lon") if c in polygons.columns
+    ]
+    head = polygons.select(*ring_cols).take(DRIVER_CLASSIFY_MAX_POLYGONS + 1)
+    whole = len(head) <= DRIVER_CLASSIFY_MAX_POLYGONS
+    n_probe = len(head) if whole else (
+        polygons.select("polygon_id").limit(BROADCAST_MAX_POLYGONS + 1).count()
+    )
+    broadcast = n_probe <= BROADCAST_MAX_POLYGONS
+    cover = (
+        _classified_cover_local(polygons.sparkSession, head, res)
+        if whole
+        else None
+    )
+    if cover is None:
+        cover = classified_cover(polygons, res)
+    if broadcast:
         cover = F.broadcast(cover)
     pts = points.withColumn("cell_id", C.latlng_to_cell(lat, lon, res))
     cand = pts.join(cover, "cell_id", "inner")
     out_cols = [c for c in cand.columns if c != "full"]
-    return refine_pip_expr(cand, polygons, lat, lon, full_col="full").select(
-        out_cols
-    )
+    return refine_pip_expr(
+        cand, polygons, lat, lon, full_col="full", broadcast=broadcast
+    ).select(out_cols)
 
 
 def first_match_per_level(

@@ -1,5 +1,5 @@
-"""Multipolygon holes across the vector stack: PIP join (all refine
-engines), cover classification, rasterize + round-trip, overlap join."""
+"""Multipolygon holes across the vector stack: PIP join (both dim-size
+plans), cover classification, rasterize + round-trip, overlap join."""
 
 import numpy as np
 import pytest
@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from osm_search_spark.functions import cells as C
 from osm_search_spark.functions import geometry as G
 from osm_search_spark.operators import raster as R
+from osm_search_spark.operators import spatial_join as SJ
 from osm_search_spark.operators.overlap_join import (
     polygon_overlap_join,
     rings_intersect,
@@ -35,7 +36,18 @@ def donut(spark):
     )
 
 
-def test_spatial_join_all_engines_respect_holes(spark, donut):
+@pytest.fixture(params=["small_dim", "large_dim"])
+def dim_plan(request, monkeypatch):
+    """spatial_join's two size plans: a small dim gets the driver cover and
+    broadcast hints; with both size constants at 0 any dim takes the plan
+    used above BROADCAST_MAX_POLYGONS (distributed cover, no hints)."""
+    if request.param == "large_dim":
+        monkeypatch.setattr(SJ, "DRIVER_CLASSIFY_MAX_POLYGONS", 0)
+        monkeypatch.setattr(SJ, "BROADCAST_MAX_POLYGONS", 0)
+    return request.param
+
+
+def test_spatial_join_respects_holes(spark, donut, dim_plan):
     pts = spark.createDataFrame(
         [(1, 1.0, 1.0),   # in ring, outside hole -> match
          (2, 5.0, 5.0),   # strictly in hole -> no match
@@ -44,12 +56,8 @@ def test_spatial_join_all_engines_respect_holes(spark, donut):
          (5, 0.0, 5.0)],  # on outer boundary -> match
         "point_id long, lat double, lon double",
     )
-    for refine in ("expr", "arrow", "grouped"):
-        got = sorted(
-            r["point_id"]
-            for r in spatial_join(pts, donut, refine=refine).collect()
-        )
-        assert got == [1, 3, 5], refine
+    got = sorted(r["point_id"] for r in spatial_join(pts, donut).collect())
+    assert got == [1, 3, 5]
     # a hole-free dim keeps the old behavior
     got = sorted(
         r["point_id"]
@@ -60,7 +68,7 @@ def test_spatial_join_all_engines_respect_holes(spark, donut):
     assert got == [1, 2, 3, 5]
 
 
-def test_mixed_dim_empty_holes_all_engines(spark, donut):
+def test_mixed_dim_empty_holes(spark, donut, dim_plan):
     """A dim mixing a donut row with a hole-free row encoded holes=[] —
     the most common real encoding — must not abort: sequence(1, 0) is
     DESCENDING in Spark and previously fed element_at indices 1 and 0 of
@@ -78,12 +86,11 @@ def test_mixed_dim_empty_holes_all_engines(spark, donut):
          (4, 50.0, 5.0)],  # outside both
         "point_id long, lat double, lon double",
     )
-    for refine in ("expr", "arrow", "grouped"):
-        got = sorted(
-            (r["point_id"], r["polygon_id"])
-            for r in spatial_join(pts, dim, refine=refine).collect()
-        )
-        assert got == [(1, 0), (3, 1)], refine
+    got = sorted(
+        (r["point_id"], r["polygon_id"])
+        for r in spatial_join(pts, dim).collect()
+    )
+    assert got == [(1, 0), (3, 1)]
 
 
 def test_classified_cover_full_cells_avoid_holes(spark):

@@ -175,6 +175,57 @@ def test_spatial_join_holes_stay_codegen(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
+def test_spatial_join_one_plan_per_dim_size(spark, monkeypatch, request):
+    """A 300-polygon dim (past the driver-cover size, so its cover
+    classifies in a MapInPandas) broadcasts both the cover and the ring
+    edges by hint: the points side never shuffles and no join degrades
+    to a nested loop. Above BROADCAST_MAX_POLYGONS the hints go. At
+    either dim size the cover's MapInPandas is the only Python node —
+    the refine is codegen, no grouped or Arrow engine. Size-based
+    broadcasting is off, so only the hints can broadcast."""
+    from osm_search_spark.operators import spatial_join as SJ
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    request.addfinalizer(lambda v=spark.conf.get(key): spark.conf.set(key, v))
+    spark.conf.set(key, "-1")
+
+    sq = [(i, -7.9 + 0.01 * (i % 20), 110.2 + 0.01 * (i // 20)) for i in range(300)]
+    polys = spark.createDataFrame(
+        [(i, [a, a, a + 0.02, a + 0.02, a], [o, o + 0.02, o + 0.02, o, o])
+         for i, a, o in sq],
+        "polygon_id long, ring_lat array<double>, ring_lon array<double>",
+    )
+    pts = spark.range(5000).select(
+        F.col("id").alias("point_id"),
+        (F.lit(-7.9) + (F.col("id") % 71) * 0.003).alias("lat"),
+        (F.lit(110.2) + (F.col("id") % 53) * 0.003).alias("lon"),
+    )
+
+    def python_nodes(plan):
+        return [
+            ln.strip(" :+-") for ln in plan.splitlines()
+            if "Pandas" in ln or "EvalPython" in ln
+        ]
+
+    plan = plan_str(SJ.spatial_join(pts, polys))
+    assert plan.count("BroadcastHashJoin") == 2, plan
+    assert plan.count("BroadcastExchange") == 2, plan
+    shuffles = [
+        ln for ln in plan.splitlines()
+        if "Exchange" in ln and "BroadcastExchange" not in ln
+    ]
+    assert not shuffles, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    nodes = python_nodes(plan)
+    assert len(nodes) == 1 and nodes[0].startswith("MapInPandas classify"), plan
+
+    monkeypatch.setattr(SJ, "BROADCAST_MAX_POLYGONS", 0)
+    plan = plan_str(SJ.spatial_join(pts, polys))
+    nodes = python_nodes(plan)
+    assert len(nodes) == 1 and nodes[0].startswith("MapInPandas classify"), plan
+    assert "Broadcast" not in plan, plan
+
+
 def test_mix_sources_has_no_shuffle(spark):
     """Source mixing is pure Column work (literal CASE + hash + explode):
     the plan must contain NO Exchange and no Python evaluation."""

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from osm_search_spark.functions import cells as C
 from osm_search_spark.functions import geometry as G
 from osm_search_spark.operators import raster as R
+from osm_search_spark.operators import spatial_join as SJ
 from osm_search_spark.sources import synth
 
 RES, PX = 12, 8
@@ -209,11 +210,12 @@ def test_hierarchical_stitching_corner_cases(spark):
     assert got == want
 
 
-def test_rasterize_grouped_parity(spark, concave_raster):
-    """The >threshold grouped plan (rings never collected) produces the
-    identical raster as the broadcast path."""
+def test_rasterize_grouped_parity(spark, concave_raster, monkeypatch):
+    """The grouped plan used above BROADCAST_MAX_POLYGONS (rings never
+    collected) produces the identical raster as the broadcast path."""
     polys, rast = concave_raster
-    grouped = R.rasterize_polygons(polys, res=RES, px=PX, dim_threshold=1)
+    monkeypatch.setattr(SJ, "BROADCAST_MAX_POLYGONS", 1)
+    grouped = R.rasterize_polygons(polys, res=RES, px=PX)
     want = {
         (r["polygon_id"], r["cell_id"]): (r["n_set"], bytes(r["mask"]))
         for r in rast.collect()

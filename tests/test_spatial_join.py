@@ -6,10 +6,10 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from osm_search_spark.functions import geometry as G
+from osm_search_spark.operators import spatial_join as SJ
 from osm_search_spark.operators.spatial_join import (
     cell_join,
     first_match_per_level,
-    refine_pip_grouped,
     spatial_join,
 )
 from osm_search_spark.sources import synth
@@ -80,13 +80,16 @@ def test_refine_matches_numpy_oracle(spark):
     assert got == exp
 
 
-def test_refine_grouped_matches_broadcast(spark):
+def test_refine_grouped_matches_broadcast(spark, monkeypatch):
+    """The plan used above BROADCAST_MAX_POLYGONS (distributed cover, no
+    broadcast hints) matches the small-dim plan (driver cover, hints)."""
     pts = _points_df(spark, n=1500, seed=9)
     poly = _poly_df(spark)
-    cand = cell_join(pts, poly, res=12)
     a = {r["point_id"] for r in spatial_join(pts, poly, res=12).collect()}
-    b = {r["point_id"] for r in refine_pip_grouped(cand, poly).collect()}
-    assert a == b
+    monkeypatch.setattr(SJ, "DRIVER_CLASSIFY_MAX_POLYGONS", 0)
+    monkeypatch.setattr(SJ, "BROADCAST_MAX_POLYGONS", 0)
+    b = {r["point_id"] for r in spatial_join(pts, poly, res=12).collect()}
+    assert a and a == b
 
 
 def test_boundary_point_inside(spark):

@@ -12,7 +12,7 @@ Usage:
 
 e.g.
     git worktree add /tmp/r4tree 53feb8b
-    python tools/bench_ab.py /root/repo /tmp/r4tree 4 \
+    python tools/bench_ab.py . /tmp/r4tree 4 \
         spatial_tile_join,admin_first_match,minhash_signatures
 """
 

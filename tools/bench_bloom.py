@@ -8,12 +8,13 @@ truth (no false negatives; FP count printed), best-of-2 wall times.
 Usage: python tools/bench_bloom.py [sf_dir]
 """
 
+import os
 import sys
 import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from osm_search_spark.functions import bloom  # noqa: E402
 from osm_search_spark.session import get_spark  # noqa: E402

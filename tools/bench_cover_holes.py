@@ -17,10 +17,11 @@ Reports, on a big-donut dim over the sf points table:
 Usage: python tools/bench_cover_holes.py [sf_dir] [res]
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
 from pyspark.sql import SparkSession

@@ -16,7 +16,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def corpus_rows(n: int):
@@ -84,7 +85,7 @@ def main():
         subprocess.run(
             [
                 sys.executable, "-c",
-                "import sys; sys.path.insert(0, '/root/repo'); "
+                f"import sys; sys.path.insert(0, {ROOT!r}); "
                 "from tools.bench_curate_text import run_once; "
                 f"run_once({c}, {n})",
             ],

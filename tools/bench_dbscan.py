@@ -18,7 +18,7 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BOX = (-5.0, 105.0, 5.0, 115.0)  # minlat, minlon, maxlat, maxlon
 MIN_PTS = 4

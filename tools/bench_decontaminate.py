@@ -13,12 +13,13 @@ Run in TWO regimes:
 Usage: python tools/bench_decontaminate.py [n_corpus] [--no-broadcast]
 """
 
+import os
 import sys
 import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from osm_search_spark.operators.decontaminate import decontaminate  # noqa: E402
 from osm_search_spark.session import get_spark  # noqa: E402

@@ -22,7 +22,7 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 VOCAB = [f"w{i:03d}" for i in range(500)]
 

@@ -1,13 +1,15 @@
-"""Grouped-refine fallback at its trigger size: 25k polygons.
+"""spatial_join above its broadcast size: 25k polygons, with and without hints.
 
-spatial_join auto-switches from the broadcast "expr" plan to the
-non-broadcast "grouped" (applyInPandas co-group) plan above
-AUTO_GROUPED_DIM_THRESHOLD (20k) polygons. Round-2 verdict item 6: measure
-the fallback AT fallback scale and prove output parity on overlapping
-polygons.
+spatial_join runs one plan at every dim size (classified cover, cell_id
+equi-join, codegen winding-number refine). Above
+spatial_join.BROADCAST_MAX_POLYGONS (20k) polygons it drops the broadcast
+hints on the cover and the ring edges and lets Catalyst/AQE pick the
+joins. This tool measures that unhinted plan at 25k polygons against the
+same plan with the hints forced on (the constant raised past the dim), and
+proves output parity on overlapping polygons.
 
 Synthesizes a 25k-quad overlapping grid + n_points deterministic points,
-runs both refine plans, checksums the (point_id, polygon_id) output
+runs both plans in ABBA order, checksums the (point_id, polygon_id) output
 (bit_xor of xxhash64 — order-insensitive), and times each.
 
 Usage: python tools/bench_grouped_refine.py [n_polys] [n_points]
@@ -22,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from osm_search_spark.operators.spatial_join import spatial_join  # noqa: E402
+from osm_search_spark.operators import spatial_join as SJ  # noqa: E402
 from osm_search_spark.session import get_spark  # noqa: E402
 
 
@@ -72,26 +74,35 @@ def main():
     )
     pts.count()
 
-    def run(label, **kw):
-        out = spatial_join(pts, polys, **kw).select("point_id", "polygon_id")
+    default_max = SJ.BROADCAST_MAX_POLYGONS
+
+    def run(hinted):
+        SJ.BROADCAST_MAX_POLYGONS = n_polys if hinted else default_max
+        try:
+            out = SJ.spatial_join(pts, polys).select("point_id", "polygon_id")
+        finally:
+            SJ.BROADCAST_MAX_POLYGONS = default_max
         t0 = time.perf_counter()
         row = out.agg(
             F.count("*").alias("n"),
             F.bit_xor(F.xxhash64("point_id", "polygon_id")).alias("chk"),
         ).collect()[0]
-        return round(time.perf_counter() - t0, 3), row["n"], row["chk"]
+        return round(time.perf_counter() - t0, 3), (row["n"], row["chk"])
 
-    # warm
-    run("warm", refine="expr", dim_threshold=None)
-    expr_sec, expr_n, expr_chk = run("expr", refine="expr", dim_threshold=None)
-    grp_sec, grp_n, grp_chk = run("grouped")  # auto-falls back at 25k
-    assert (expr_n, expr_chk) == (grp_n, grp_chk), (
-        "parity failure", expr_n, grp_n, expr_chk, grp_chk)
+    run(True)  # warm
+    secs = {True: [], False: []}
+    outs = set()
+    for hinted in (True, False, False, True):
+        sec, out = run(hinted)
+        secs[hinted].append(sec)
+        outs.add(out)
+    assert len(outs) == 1, ("parity failure", outs)
+    (n, _), = outs
     print(json.dumps(dict(
-        n_polys=n_polys, n_points=n_points, joined_rows=expr_n,
+        n_polys=n_polys, n_points=n_points, cpus=cpus, joined_rows=n,
         parity="checksum-identical",
-        expr_sec=expr_sec, grouped_sec=grp_sec,
-        grouped_rows_per_sec=round(expr_n / grp_sec, 1),
+        hinted_sec=secs[True], unhinted_sec=secs[False],
+        unhinted_rows_per_sec=round(n / min(secs[False]), 1),
     )))
 
 

@@ -8,13 +8,14 @@ the outputs are checksum-identical.
 Usage: python tools/bench_hotlist.py [n_corpus] [n_probes]
 """
 
+import os
 import sys
 import time
 
 import numpy as np
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from osm_search_spark.operators import similarity as S  # noqa: E402
 from osm_search_spark.session import get_spark  # noqa: E402

@@ -16,7 +16,7 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def run_once(cpus: int, n: int, group_size: int) -> None:

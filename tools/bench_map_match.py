@@ -15,7 +15,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 BOX = (-5.0, 105.0, 5.0, 115.0)  # minlat, minlon, maxlat, maxlon
 L = 10
@@ -104,7 +105,7 @@ def main():
         subprocess.run(
             [
                 sys.executable, "-c",
-                "import sys; sys.path.insert(0, '/root/repo'); "
+                f"import sys; sys.path.insert(0, {ROOT!r}); "
                 "from tools.bench_map_match import run_once; "
                 f"run_once({c}, {t}, {g})",
             ],

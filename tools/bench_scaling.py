@@ -51,7 +51,7 @@ an order-insensitive output checksum proving identical results.
 
 Job: derived points (x{mult} scale-up = {lo['rows']:,} joined output rows) ->
 cell-cover hash join vs 15 admin polygons at grid res 12 -> exact
-winding-number PIP refine (Arrow-vectorized) -> tile id at res 14 ->
+winding-number PIP refine (codegen fold) -> tile id at res 14 ->
 full materialization.
 
 | parallelism | rows | wall sec | throughput (rows/sec) |

@@ -8,9 +8,10 @@ reproduces the pin bit-for-bit.
 Train split: doc_id % 5 != 0 (held-out fifth evaluated by the pytest).
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():
