@@ -2972,10 +2972,9 @@ def sql_lang_id_trained() -> str:
     )
 
 
-# Q26: simhash signatures — the oracle-checked query uses the PORTABLE
-# variant (60-bit md5-prefix token hash, recomputable bit-for-bit in
-# DuckDB); the xxhash64 64-bit variant stays as the operator default and is
-# pytest-verified (tests/test_dedup_similarity.py).
+# Q26: simhash signatures — 60-bit md5-prefix token hash, recomputable
+# bit-for-bit in DuckDB (the near-dup hamming property is pytest-verified
+# in tests/test_dedup_similarity.py).
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_portable(_docs(spark, sf_dir))
 

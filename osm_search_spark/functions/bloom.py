@@ -97,9 +97,9 @@ def might_contain(
 
     Plan-size ceiling: the word list is embedded as m/30 literals — fine
     at the default m=2^16 (~2.2k literals, ~17 kB) but NOT at the
-    m=10^8-10^9 a 10^7-key small side needs. Past _ARROW_WORD_THRESHOLD
-    words use `bloom_prune` (engine="arrow"), which broadcasts the word
-    array instead of embedding it."""
+    m=10^8-10^9 a 10^7-key small side needs. `bloom_prune` uses this
+    filter up to _ARROW_WORD_THRESHOLD words and broadcasts the word array
+    instead of embedding it past that."""
     arr = F.array(*[F.lit(int(w)) for w in words])
     checks = []
     for i in range(k):
@@ -119,16 +119,8 @@ def might_contain(
 # array ships ONCE as a broadcast numpy array into mapInPandas: plan size
 # is constant in m, per-batch work is vectorized index/shift arithmetic,
 # and m=2^24..2^30 (the 100 TB join-pruning sizes) costs only m/8 bytes of
-# broadcast per executor.
+# broadcast per executor. Read at call time (tests monkeypatch it).
 _ARROW_WORD_THRESHOLD = 8192
-
-
-def _prune_engine(engine: str, n_words: int) -> str:
-    if engine == "auto":
-        return "column" if n_words <= _ARROW_WORD_THRESHOLD else "arrow"
-    if engine not in ("column", "arrow"):
-        raise ValueError(f"unknown bloom engine {engine!r}")
-    return engine
 
 
 def bloom_prune(
@@ -137,18 +129,17 @@ def bloom_prune(
     col,
     m_bits: int = DEFAULT_M,
     k: int = DEFAULT_K,
-    engine: str = "auto",
 ) -> DataFrame:
     """Rows of `df` whose `col` MIGHT be in the filter (no false
     negatives) — the big-side pre-join prune, scan-side and shuffle-free.
 
-    engine="column": the literal-array might_contain filter (small m).
-    engine="arrow": the k hash positions are still computed JVM-side
+    Up to _ARROW_WORD_THRESHOLD words: the literal-array might_contain
+    filter. Past it, the k hash positions are still computed JVM-side
     (codegen md5 — no hashing in Python), then a broadcast numpy word
     array answers membership per Arrow batch; constant plan size in m.
-    "auto" picks by word count (_ARROW_WORD_THRESHOLD). Both engines are
-    bit-identical (same positions, same words; parity-tested)."""
-    if _prune_engine(engine, len(words)) == "column":
+    Both kernels are bit-identical (same positions, same words;
+    parity-tested)."""
+    if len(words) <= _ARROW_WORD_THRESHOLD:
         return df.filter(might_contain(words, col, m_bits, k))
 
     import numpy as np

@@ -8,7 +8,7 @@ pre-split). No external merge tables: `bpe_train` learns merges FROM the
 corpus, and the oracle gate uses `REFERENCE_MERGES` learned from a pinned
 word-count list in this file.
 
-Semantics (identical across every engine and the DuckDB twin):
+Semantics (identical across both kernels and the DuckDB twin):
   - pre-split: functions.text.bpe_pieces (the RE2/Java-compatible GPT-2
     style piece regex); BPE never merges across piece boundaries.
   - a piece is its codepoint sequence joined by SEP (0x1f, which the
@@ -25,10 +25,11 @@ driver-side on that dim. Application is per UNIQUE piece (the stemmer
 pattern): the merge chain runs over the distinct-piece dim, then joins
 back to per-doc piece counts — corpus-sized work is one explode + two
 hash aggs, vocabulary-sized work is the only part that touches BPE.
-engine="column" unrolls the chain as nested F.replace (whole-stage
-codegen, right for <=64 merges); engine="arrow" broadcasts the merge
-ranks into mapInPandas over the piece dim (constant plan size — the path
-for real 50k-merge vocabularies); "auto" picks by merge count.
+Up to _COLUMN_MERGE_LIMIT merges the chain unrolls as nested F.replace
+(whole-stage codegen); past it the merge list is broadcast into
+mapInPandas over the piece dim (constant plan size — the path for real
+50k-merge vocabularies). The limit is read at call time (tests
+monkeypatch it).
 """
 
 from __future__ import annotations
@@ -98,8 +99,8 @@ def bpe_train(
 # --- applier ------------------------------------------------------------------
 
 def encode_piece(piece: str, merges: list[tuple[str, str]]) -> list[str]:
-    """Scalar apply (used by the arrow engine and as an independent check
-    in tests): split to codepoints, fold the merges in order."""
+    """Scalar apply (used by the mapInPandas kernel and as an independent
+    check in tests): split to codepoints, fold the merges in order."""
     s = SEP.join(piece)
     for a, b in merges:
         s = _merge_word(s, a, b)
@@ -121,17 +122,13 @@ def _token_count_column(piece, merges: list[tuple[str, str]]):
 
 
 def _piece_dim_counts(
-    dim: DataFrame, merges: list[tuple[str, str]], engine: str
+    dim: DataFrame, merges: list[tuple[str, str]]
 ) -> DataFrame:
     """(piece, n_tokens) over the distinct-piece dim."""
-    if engine == "auto":
-        engine = "column" if len(merges) <= _COLUMN_MERGE_LIMIT else "arrow"
-    if engine == "column":
+    if len(merges) <= _COLUMN_MERGE_LIMIT:
         return dim.withColumn(
             "n_tokens", _token_count_column(F.col("piece"), merges)
         )
-    if engine != "arrow":
-        raise ValueError(f"unknown bpe engine {engine!r}")
 
     import pandas as pd
 
@@ -160,7 +157,6 @@ def bpe_token_counts(
     merges: list[tuple[str, str]],
     doc_id: str = "doc_id",
     text: str = "text",
-    engine: str = "auto",
 ) -> DataFrame:
     """(doc_id, n_tokens): the document's actual BPE token count under the
     learned merges. Docs whose text yields zero pieces are absent (the
@@ -173,7 +169,7 @@ def bpe_token_counts(
         .groupBy("doc_id", "piece")
         .agg(F.count("*").alias("cnt"))
     )
-    dim = _piece_dim_counts(per_doc.select("piece").distinct(), merges, engine)
+    dim = _piece_dim_counts(per_doc.select("piece").distinct(), merges)
     return (
         per_doc.join(dim, "piece")
         .groupBy("doc_id")

@@ -16,10 +16,11 @@ side is the 100 TB stream. So the plan is:
    a broadcast anti-join fallback — the dedup.ngram_jaccard_pairs
    pattern);
 3. prune the corpus gram stream BEFORE the join: a Bloom filter over the
-   benchmark's gram hashes (functions/bloom.py — auto-switches to the
-   broadcast-arrow engine past the literal plan-size ceiling, so m can be
-   2^24+ for 10^7-gram benchmarks) drops ~all non-colliding corpus grams
-   scan-side with no shuffle and no false negatives; the surviving
+   benchmark's gram hashes (functions/bloom.py — sized from the gram
+   count; past the literal plan-size ceiling the word array is broadcast
+   into mapInPandas, so m can be 2^24+ for 10^7-gram benchmarks) drops
+   ~all non-colliding corpus grams scan-side with no shuffle and no
+   false negatives; the surviving
    trickle then equi-joins (broadcastable benchmark side) — false
    positives die in the join, so pruning never changes the answer;
 4. one groupBy (doc_id, bench_id) count = distinct shared grams.
@@ -37,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import bloom
 from ..functions.text import ngrams, tokenize_simple
 
 # Benchmark-side boilerplate cap: grams present in more than this many
@@ -48,9 +50,9 @@ _HEAVY_GRAM_LITERALS = 1000
 
 DEFAULT_N = 13  # the published n-gram-collision protocol length
 
-# bloom_words materializes m/30 driver-side longs; past this m the word
-# list itself is hundreds of MB and the filter should live as a TABLE
-# (prune="semi") instead of a broadcast array.
+# bloom_words materializes m/30 driver-side longs; the filter size derived
+# from the gram count is capped here (2^28 bits ≈ 9M words, ~70 MB on the
+# driver). A larger gram set only raises the FP rate — FPs die in the join.
 MAX_BLOOM_M = 1 << 28
 
 
@@ -95,12 +97,11 @@ class PreparedBenchmark:
     benchmark up front (`prepare_benchmark`) and every batch pays only
     the corpus-side scan + prune + join."""
 
-    __slots__ = ("bgrams", "n", "prune", "bloom_words", "bloom_m")
+    __slots__ = ("bgrams", "n", "bloom_words", "bloom_m")
 
-    def __init__(self, bgrams, n, prune, bloom_words, bloom_m):
+    def __init__(self, bgrams, n, bloom_words, bloom_m):
         self.bgrams = bgrams
         self.n = n
-        self.prune = prune
         self.bloom_words = bloom_words
         self.bloom_m = bloom_m
 
@@ -111,10 +112,8 @@ def prepare_benchmark(
     bench_id: str = "bench_id",
     bench_text: str = "text",
     max_gram_bench_docs: int | None = DEFAULT_MAX_GRAM_BENCH_DOCS,
-    prune: str | None = "bloom",
-    bloom_m: int | None = None,
 ) -> PreparedBenchmark:
-    """Gram-hash + cap + (optionally) Bloom-build the benchmark dim once;
+    """Gram-hash + cap + Bloom-build the benchmark dim once;
     the result is reusable across any number of `decontaminate` /
     `decontaminate_flags` calls with the same n (micro-batches, corpus
     shards). The post-cap gram frame is localCheckpointed so reuse never
@@ -125,28 +124,16 @@ def prepare_benchmark(
     # consumed by up to three subtrees (bloom build, join, cap count) and
     # by every reuse — pin the post-cap frame once
     bgrams = bgrams.localCheckpoint(eager=True)
-    words = None
-    if prune == "bloom":
-        from ..functions import bloom
-
-        n_grams = bgrams.count()  # bounded dim: one tiny job
-        if bloom_m is None:
-            bloom_m = min(
-                MAX_BLOOM_M,
-                max(1 << 13, 1 << max(0, (20 * max(n_grams, 1) - 1)).bit_length()),
-            )
-        if bloom_m > MAX_BLOOM_M:
-            raise ValueError(
-                f"bloom_m={bloom_m} exceeds the driver-side word-list "
-                f"ceiling ({MAX_BLOOM_M}); use prune='semi' for benchmarks "
-                "whose gram set needs a larger filter"
-            )
-        words = bloom.bloom_words(
-            bloom.bloom_build(bgrams, "gh", m_bits=bloom_m), bloom_m
-        )
-    elif prune not in ("semi", None):
-        raise ValueError(f"unknown prune mode {prune!r}")
-    return PreparedBenchmark(bgrams, n, prune, words, bloom_m)
+    # ~20 bits/gram (FP ≈ 1-2% at k=4), floor 2^13, cap MAX_BLOOM_M
+    n_grams = bgrams.count()  # bounded dim: one tiny job
+    bloom_m = min(
+        MAX_BLOOM_M,
+        max(1 << 13, 1 << max(0, (20 * max(n_grams, 1) - 1)).bit_length()),
+    )
+    words = bloom.bloom_words(
+        bloom.bloom_build(bgrams, "gh", m_bits=bloom_m), bloom_m
+    )
+    return PreparedBenchmark(bgrams, n, words, bloom_m)
 
 
 def decontaminate(
@@ -158,8 +145,6 @@ def decontaminate(
     bench_id: str = "bench_id",
     bench_text: str = "text",
     max_gram_bench_docs: int | None = DEFAULT_MAX_GRAM_BENCH_DOCS,
-    prune: str | None = "bloom",
-    bloom_m: int | None = None,
 ) -> DataFrame:
     """(doc_id, bench_id, n_collisions): for every corpus doc sharing at
     least one token n-gram with a benchmark doc, the number of DISTINCT
@@ -169,16 +154,14 @@ def decontaminate(
 
     benchmark: the raw benchmark frame, or a `PreparedBenchmark` (from
     `prepare_benchmark`) to amortize the benchmark-side work across many
-    calls — then bench_id/bench_text/max_gram_bench_docs/prune/bloom_m
-    are already baked in and ignored here; n must match the preparation.
+    calls — then bench_id/bench_text/max_gram_bench_docs are already
+    baked in and ignored here; n must match the preparation.
 
-    prune: "bloom" (default) pre-filters the corpus gram stream against a
-    Bloom filter of the benchmark's grams (scan-side, no shuffle, exact —
-    FPs die in the join); "semi" uses an exact left-semi join instead
-    (equivalent output, pays the join for every corpus gram); None goes
-    straight to the join. bloom_m: filter size in bits; default sizes to
-    ~20 bits/gram (FP ≈ 1-2% at k=4), floor 2^13 — past the literal
-    ceiling the arrow engine engages automatically (bloom.bloom_prune).
+    The corpus gram stream is pre-filtered against a Bloom filter of the
+    benchmark's grams (scan-side, no shuffle, exact — FPs die in the
+    join). The filter is sized from the gram count (~20 bits/gram, FP ≈
+    1-2% at k=4, floor 2^13, cap MAX_BLOOM_M); bloom.bloom_prune picks
+    the literal or the broadcast kernel from its word count.
 
     max_gram_bench_docs: benchmark-side boilerplate cap (see module doc);
     None disables (textbook protocol)."""
@@ -191,19 +174,11 @@ def decontaminate(
     else:
         prep = prepare_benchmark(
             benchmark, n, bench_id, bench_text, max_gram_bench_docs,
-            prune, bloom_m,
         )
-    dgrams = _gram_hashes(docs, doc_id, text, n, "doc_id")
-    if prep.bloom_words is not None:
-        from ..functions import bloom
-
-        dgrams = bloom.bloom_prune(
-            dgrams, prep.bloom_words, "gh", m_bits=prep.bloom_m
-        )
-    elif prep.prune == "semi":
-        dgrams = dgrams.join(
-            prep.bgrams.select("gh").distinct(), "gh", "leftsemi"
-        )
+    dgrams = bloom.bloom_prune(
+        _gram_hashes(docs, doc_id, text, n, "doc_id"),
+        prep.bloom_words, "gh", m_bits=prep.bloom_m,
+    )
     return (
         dgrams.join(prep.bgrams, "gh")
         .groupBy("doc_id", "bench_id")
@@ -369,8 +344,8 @@ def decontaminate_sql(
     n: int = DEFAULT_N,
     max_gram_bench_docs: int | None = DEFAULT_MAX_GRAM_BENCH_DOCS,
 ) -> str:
-    """DuckDB twin of `decontaminate` (prune is answer-invariant, so the
-    twin goes straight to the join; the boilerplate cap IS mirrored).
+    """DuckDB twin of `decontaminate` (the Bloom prune is answer-invariant,
+    so the twin goes straight to the join; the boilerplate cap IS mirrored).
     Relations need (doc_id, text) / (bench_id, text)."""
     from ..functions.text import tokenize_simple_sql
 

@@ -10,8 +10,9 @@ contract so a DuckDB oracle can verify it at small scale.
   the 4 hash functions are 8-hex slices of ONE md5 digest per shingle
   (portable: identical in any engine with md5), banded LSH bucket join
   for near-dup candidate pairs.
-- simhash: 64-bit simhash from xxhash64 of tokens (Spark-side; verified by
-  pytest oracle, not SQL — xxhash64 isn't in DuckDB).
+- simhash_portable: 60-bit simhash from an md5 prefix of each token
+  (portable: the DuckDB twin `simhash_portable_sql` recomputes it
+  bit-for-bit).
 - ngram_jaccard_pairs: exact Jaccard over token n-grams for candidate pairs
   (explode + join + ratio; bounded by LSH prefilter at scale).
 """
@@ -148,44 +149,16 @@ def lsh_candidate_pairs(
     return pairs.distinct()
 
 
-def simhash(
-    docs: DataFrame, doc_id: str = "doc_id", text: str = "text", bits: int = 64
-) -> DataFrame:
-    """(doc_id, simhash) — 64-bit simhash over tokens via xxhash64.
-
-    For each bit b: sign = sum over tokens of (+1 if bit set else -1);
-    simhash bit b = 1 iff sign > 0. Expressed with aggregate over the token
-    array per bit — JVM-side; bits folded into one long.
-    """
-    # explode tokens once, hash once, then 64 sum() aggregates in a single
-    # hash-agg pass (map-side combined); bits recombine to one long.
-    # (The previous form folded the token array 64x with interpreted HOFs.)
-    tok = docs.select(
-        F.col(doc_id).alias("doc_id"),
-        F.explode(tokenize_simple(text)).alias("t"),
-    ).select("doc_id", F.xxhash64("t").alias("h"))
-    votes = [
-        F.sum(
-            F.when(F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"v{b}")
-        for b in range(bits)
-    ]
-    agg = tok.groupBy("doc_id").agg(*votes)
-    sim = F.lit(0).cast("long")
-    for b in range(bits):
-        bitval = F.lit(1 << b if b < 63 else -(1 << 63)).cast("long")
-        sim = sim + F.when(F.col(f"v{b}") > 0, bitval).otherwise(F.lit(0).cast("long"))
-    return agg.select("doc_id", sim.alias("simhash"))
-
-
 def simhash_portable(
     docs: DataFrame, doc_id: str = "doc_id", text: str = "text", bits: int = 60
 ) -> DataFrame:
     """(doc_id, simhash) — engine-portable simhash: the per-token hash is
     the first 15 hex digits of md5 (60 bits, fits signed int64 positive), so
     a DuckDB oracle can recompute it bit-for-bit (`simhash_portable_sql`).
-    Same vote/threshold semantics as `simhash` (which keeps xxhash64 for
-    full 64-bit width on the non-oracle path)."""
+    For each bit b: sign = sum over tokens of (+1 if bit set else -1);
+    simhash bit b = 1 iff sign > 0. Tokens explode and hash once, then
+    the per-bit sums run as one map-side-combined hash aggregate; the
+    bits recombine into one long."""
     assert bits <= 60
     tok = docs.select(
         F.col(doc_id).alias("doc_id"),

@@ -7,8 +7,9 @@
   are deterministic (seeded numpy) and shipped as literal arrays, so the
   plan is still pure Catalyst.
 - ivf_topk: kmeans centroids (sample or DISTRIBUTED full-corpus training)
-  + inverted lists + n_probe restriction; assignment is a broadcast-
-  literal argmin (pure Column).
+  + inverted lists + n_probe restriction; assignment is a literal-centroid
+  Column argmin up to _ARROW_CENTROID_THRESHOLD lists, one broadcast-numpy
+  mapInPandas (_map_vectors) above.
 - pq_train/pq_train_distributed/pq_encode/pq_luts/pq_topk: product
   quantization — 8x-32x compressed codes, ADC lookup-table scan as ONE
   broadcast join (no dot products, flat plan in probe count), exact
@@ -198,7 +199,6 @@ def semantic_dedup(
     corpus_vec: str = "embedding",
     n_planes: int | None = 8,
     seed: int = 42,
-    engine: str = "auto",
     cent=None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023):
@@ -224,15 +224,13 @@ def semantic_dedup(
 
     if cent is None:
         cent = kmeans_train_distributed(
-            embeddings, n_clusters, corpus_vec, corpus_id,
-            seed=seed, engine=engine,
+            embeddings, n_clusters, corpus_vec, corpus_id, seed=seed,
         )
     # ONE materialization: the assigned frame feeds the pair join twice
     # and the final join-back — a lazy frame would recompute the arrow
     # assignment per subtree (round-4 hard rule)
     assigned = assign_clusters(
         embeddings.select(corpus_id, corpus_vec), cent, corpus_vec,
-        engine=engine,
     ).localCheckpoint(eager=True)
     pairs = within_cluster_near_dup_pairs(
         assigned, threshold, corpus_id, corpus_vec, "cluster_id",
@@ -281,38 +279,65 @@ def _top_clusters(vec, cent, n_probe: int):
     return F.slice(F.reverse(F.array_sort(arr)), 1, n_probe).getField("c")
 
 
-# --- coarse-quantizer engines -------------------------------------------------
+# --- coarse-quantizer kernels -------------------------------------------------
 #
 # The Column kernels above embed every centroid as an F.lit array: expression
 # size is O(n_centroids * dim) and _argmax_cluster nests n_centroids when()
 # chains — past ~32 lists this blows the JIT method-size limit / plan size
-# long before data does. The arrow engine broadcasts the centroid matrix as
-# ONE numpy array into mapInPandas (the pq_encode pattern): plan size is
-# constant in n_centroids, the per-batch work is a BLAS matmul, and a
-# billion-row corpus can use the 4k-65k inverted lists it actually needs.
-# engine="auto" keeps the codegen Column path for small list counts.
+# long before data does. Above _ARROW_CENTROID_THRESHOLD lists the centroid
+# matrix ships as ONE broadcast numpy array into mapInPandas (_map_vectors):
+# plan size is constant in n_centroids, the per-batch work is a BLAS matmul,
+# and a billion-row corpus can use the 4k-65k inverted lists it actually
+# needs. At or below it the codegen Column kernel runs. The constant is read
+# at call time (tests monkeypatch it to force either kernel).
 
 _ARROW_CENTROID_THRESHOLD = 32
 
 
-def _coarse_engine(engine: str, n_centroids: int) -> str:
-    if engine == "auto":
-        return "column" if n_centroids <= _ARROW_CENTROID_THRESHOLD else "arrow"
-    if engine not in ("column", "arrow"):
-        raise ValueError(f"unknown coarse engine {engine!r}")
-    return engine
+def _map_vectors(df: DataFrame, mat, vec_col: str, fields, fn) -> DataFrame:
+    """df + `fields` (StructFields) computed per Arrow batch: `mat` ships
+    ONCE as a broadcast float64 ndarray M, each non-empty batch stacks
+    `vec_col` into an (n, dim) float64 X, and fn(pdf, X, M) returns one
+    value sequence per field. The single broadcast-numpy kernel shape of
+    this module (coarse assign/probe, residuals, PQ codes, ADC LUTs)."""
+    import pandas as pd
+
+    from pyspark.sql.types import StructType
+
+    bc = df.sparkSession.sparkContext.broadcast(
+        np.asarray(mat, dtype=np.float64)
+    )
+    # StructType.add mutates in place — build a fresh schema
+    schema = StructType(list(df.schema.fields) + list(fields))
+    names = [f.name for f in fields]
+
+    def run(batches):
+        M = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                for name in names:
+                    pdf[name] = pd.Series([], dtype=object)
+                yield pdf
+                continue
+            X = np.array(list(pdf[vec_col]), dtype=np.float64)
+            pdf = pdf.copy()
+            for name, values in zip(names, fn(pdf, X, M)):
+                pdf[name] = values
+            yield pdf
+
+    return df.mapInPandas(run, schema=schema)
 
 
 def _probe_sims(X: np.ndarray, C: np.ndarray) -> np.ndarray:
     """(n, k) cosine-to-centroid matrix matching _centroid_sims: dot with
     the (unit-norm) centroid, divided by ||x||+1e-12 — the same expression
-    the Column path evaluates. EXACT ties (bit-equal sims) resolve
+    the Column kernel evaluates. EXACT ties (bit-equal sims) resolve
     identically (lowest id, see the argmax below); but numpy's BLAS matmul
     sums in a different order than Spark's sequential aggregate fold, so a
     NEAR-tie (sims differing only in the last ULP) can assign differently
-    across engines — engine="auto" may change assignments at the
+    across kernels — assignments may change at the
     _ARROW_CENTROID_THRESHOLD boundary for vectors nearly equidistant to
-    two centroids. Strict cross-engine determinism is not claimed."""
+    two centroids. Strict cross-kernel determinism is not claimed."""
     norms = np.sqrt((X * X).sum(axis=1, keepdims=True)) + 1e-12
     return (X @ C.T) / norms
 
@@ -322,19 +347,17 @@ def assign_clusters(
     cent,
     vec_col: str,
     out_col: str = "cluster_id",
-    engine: str = "auto",
     residual_col: str | None = None,
 ) -> DataFrame:
     """Add `out_col` = argmax cosine(vec, centroid) (ties -> lowest id,
     matching _argmax_cluster). With residual_col set, also add
     vec - centroids[cluster] (array<double>) in the same pass.
 
-    engine="arrow" broadcasts the centroid matrix into mapInPandas —
-    constant plan size, scales to thousands of lists; "column" is the
-    pure-Column literal kernel for small n_centroids; "auto" picks by
-    list count."""
+    Up to _ARROW_CENTROID_THRESHOLD centroids this is the pure-Column
+    literal kernel; above it the centroid matrix is broadcast into
+    mapInPandas — constant plan size, scales to thousands of lists."""
     cent = np.asarray(cent, dtype=np.float64)
-    if _coarse_engine(engine, len(cent)) == "column":
+    if len(cent) <= _ARROW_CENTROID_THRESHOLD:
         out = df.withColumn(out_col, _argmax_cluster(F.col(vec_col), cent))
         if residual_col:
             out = out.withColumn(
@@ -342,41 +365,19 @@ def assign_clusters(
             )
         return out
 
-    import pandas as pd
+    from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField
 
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(cent)
-    fields = list(df.schema.fields) + [StructField(out_col, IntegerType())]
+    fields = [StructField(out_col, IntegerType())]
     if residual_col:
         fields.append(StructField(residual_col, ArrayType(DoubleType())))
-    schema = StructType(fields)
 
-    def run(batches):
-        C = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                pdf[out_col] = pd.Series([], dtype="int32")
-                if residual_col:
-                    pdf[residual_col] = pd.Series([], dtype=object)
-                yield pdf
-                continue
-            X = np.array(list(pdf[vec_col]), dtype=np.float64)
-            ids = _probe_sims(X, C).argmax(axis=1)  # first max = lowest id
-            pdf = pdf.copy()
-            pdf[out_col] = ids.astype("int32")
-            if residual_col:
-                pdf[residual_col] = list(X - C[ids])
-            yield pdf
+    def assign(pdf, X, C):
+        ids = _probe_sims(X, C).argmax(axis=1)  # first max = lowest id
+        return [ids.astype("int32")] + (
+            [list(X - C[ids])] if residual_col else []
+        )
 
-    return df.mapInPandas(run, schema=schema)
+    return _map_vectors(df, cent, vec_col, fields, assign)
 
 
 def probe_clusters(
@@ -385,16 +386,15 @@ def probe_clusters(
     vec_col: str,
     n_probe: int,
     out_col: str = "cluster_id",
-    engine: str = "auto",
     residual_col: str | None = None,
 ) -> DataFrame:
     """Explode each probe row into its n_probe nearest-centroid rows
     (ordering: descending cosine, ties -> highest id, matching
     _top_clusters' reversed array_sort). With residual_col set, also add
     the probe's residual against EACH probed centroid (IVF-PQ semantics).
-    Engines as in assign_clusters."""
+    Kernel chosen by centroid count as in assign_clusters."""
     cent = np.asarray(cent, dtype=np.float64)
-    if _coarse_engine(engine, len(cent)) == "column":
+    if len(cent) <= _ARROW_CENTROID_THRESHOLD:
         out = df.withColumn(
             out_col, F.explode(_top_clusters(F.col(vec_col), cent, n_probe))
         )
@@ -404,73 +404,31 @@ def probe_clusters(
             )
         return out
 
-    import pandas as pd
+    from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField
 
-    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+    def top(pdf, X, C):
+        S = _probe_sims(X, C)
+        # stable argsort over REVERSED columns: descending sim with ties
+        # broken toward the higher original cluster id — exactly
+        # reverse(array_sort(struct(s, c)))
+        idx_rev = np.argsort(-S[:, ::-1], axis=1, kind="stable")
+        return (list((len(C) - 1 - idx_rev[:, :n_probe]).astype("int32")),)
 
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(cent)
-    schema = StructType(
-        list(df.schema.fields)
-        + [StructField("_clusters", ArrayType(IntegerType()))]
+    exploded = _map_vectors(
+        df, cent, vec_col,
+        [StructField("_clusters", ArrayType(IntegerType()))], top,
+    ).select(*df.columns, F.explode("_clusters").alias(out_col))
+    if not residual_col:
+        return exploded
+    # residual against the PROBED centroid: one more arrow pass over the
+    # exploded (bounded: |probes| * n_probe) frame
+    return _map_vectors(
+        exploded, cent, vec_col,
+        [StructField(residual_col, ArrayType(DoubleType()))],
+        lambda pdf, X, C: (
+            list(X - C[np.asarray(pdf[out_col], dtype=np.int64)]),
+        ),
     )
-
-    def run(batches):
-        C = bc.value
-        k = len(C)
-        for pdf in batches:
-            if pdf.empty:
-                pdf["_clusters"] = pd.Series([], dtype=object)
-                yield pdf
-                continue
-            S = _probe_sims(np.array(list(pdf[vec_col]), dtype=np.float64), C)
-            # stable argsort over REVERSED columns: descending sim with
-            # ties broken toward the higher original cluster id — exactly
-            # reverse(array_sort(struct(s, c)))
-            idx_rev = np.argsort(-S[:, ::-1], axis=1, kind="stable")
-            ids = (k - 1 - idx_rev[:, :n_probe]).astype("int32")
-            pdf = pdf.copy()
-            pdf["_clusters"] = list(ids)
-            yield pdf
-
-    exploded = df.mapInPandas(run, schema=schema).select(
-        *df.columns, F.explode("_clusters").alias(out_col)
-    )
-    if residual_col:
-        # residual against the PROBED centroid: one more arrow pass over
-        # the exploded (bounded: |probes| * n_probe) frame
-        return _residual_arrow(exploded, cent, vec_col, out_col, residual_col)
-    return exploded
-
-
-def _residual_arrow(
-    df: DataFrame, cent, vec_col: str, cluster_col: str, out_col: str
-) -> DataFrame:
-    import pandas as pd
-
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
-
-    cent = np.asarray(cent, dtype=np.float64)
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(cent)
-    schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, ArrayType(DoubleType()))]
-    )
-
-    def run(batches):
-        C = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                pdf[out_col] = pd.Series([], dtype=object)
-                yield pdf
-                continue
-            X = np.array(list(pdf[vec_col]), dtype=np.float64)
-            ids = np.asarray(pdf[cluster_col], dtype=np.int64)
-            pdf = pdf.copy()
-            pdf[out_col] = list(X - C[ids])
-            yield pdf
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def kmeans_train_sample(
@@ -480,8 +438,6 @@ def kmeans_train_sample(
     """Mini-kmeans over a bounded seeded sample (driver-side, O(sample)).
     Fine when cluster structure is visible in a sample; see
     kmeans_train_distributed for the full-corpus trainer."""
-    import numpy as np
-
     rows = corpus.select(corpus_vec).limit(sample).collect()
     x = np.array([r[0] for r in rows], dtype=np.float64)
     x /= np.linalg.norm(x, axis=1, keepdims=True) + 1e-12
@@ -500,13 +456,12 @@ def kmeans_train_sample(
 def kmeans_train_distributed(
     corpus: DataFrame, n_centroids: int, corpus_vec: str = "embedding",
     corpus_id: str = "vec_id", iters: int = 3, seed: int = 42,
-    engine: str = "auto",
 ):
     """Spherical Lloyd iterations over the FULL corpus — no fixed-size
     driver sample (the round-1 honest caveat). Each iteration:
 
-      assign: distributed argmax over broadcast centroid literals (the
-        same pure-Column kernel the query path uses);
+      assign: distributed argmax (assign_clusters — the same kernel the
+        query path uses);
       update: vectors L2-normalize FIRST (spherical k-means — the same
         objective the sample trainer optimizes; without it large-norm
         vectors dominate the centroid sums), then posexplode(vec) ->
@@ -517,8 +472,6 @@ def kmeans_train_distributed(
     Init is kmeans-sample over a bounded seed set for stable starting
     points; every subsequent pass is corpus-wide.
     """
-    import numpy as np
-
     cent = kmeans_train_sample(
         corpus, n_centroids, corpus_vec, seed=seed,
         sample=max(8 * n_centroids, 256), iters=2,
@@ -526,7 +479,7 @@ def kmeans_train_distributed(
     for _ in range(iters):
         inv_norm = F.lit(1.0) / (_norm(F.col(corpus_vec)) + F.lit(1e-12))
         assigned = assign_clusters(
-            corpus.select(corpus_vec), cent, corpus_vec, engine=engine
+            corpus.select(corpus_vec), cent, corpus_vec
         ).select(
             "cluster_id",
             F.transform(
@@ -577,8 +530,6 @@ def pq_train(
     subspace) — the classic PQ codebook. Codebooks are tiny (m*k*dsub
     floats); training is a bounded driver sample (swap in
     kmeans_train_distributed per subspace for full-corpus training)."""
-    import numpy as np
-
     rows = corpus.select(corpus_vec).limit(sample).collect()
     x = np.array([r[0] for r in rows], dtype=np.float64)
     dim = x.shape[1]
@@ -608,8 +559,8 @@ def pq_train_distributed(
     driver sample on the PQ path (mirrors kmeans_train_distributed for
     IVF). Each iteration:
 
-      assign: pq_encode(engine="arrow") — broadcast codebooks, vectorized
-        numpy argmin per subspace inside mapInPandas;
+      assign: pq_encode — broadcast codebooks, vectorized numpy argmin
+        per subspace inside mapInPandas;
       update: posexplode(codes) -> slice the assigned subvector ->
         posexplode dims -> groupBy(subspace, code, dim).sum — ONE shuffle
         of m*k*dsub partial sums; only that tiny matrix is collected.
@@ -625,7 +576,7 @@ def pq_train_distributed(
         sample=max(8 * k, 512), iters=4,
     )
     for _ in range(iters):
-        coded = pq_encode(corpus, books, corpus_vec, engine="arrow")
+        coded = pq_encode(corpus, books, corpus_vec)
         # generators can't nest: one per select
         sub = coded.select(
             F.posexplode("codes").alias("j", "c"),
@@ -652,76 +603,41 @@ def pq_train_distributed(
     return books
 
 
+def _subspace_d2(xs: np.ndarray, book: np.ndarray) -> np.ndarray:
+    """(n, k) squared L2 from each subvector to every codeword of one
+    sub-codebook, via ||x||^2 - 2 x.c + ||c||^2."""
+    return (
+        (xs * xs).sum(axis=1, keepdims=True)
+        - 2.0 * xs @ book.T
+        + (book * book).sum(axis=1)[None, :]
+    )
+
+
 def pq_encode(
     corpus: DataFrame, codebooks, corpus_vec: str = "embedding",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Add `codes` (array<int>, length m): per-subspace argmin over the
     codebook — 8x-32x memory compression of the embedding column at 100 TB.
 
-    engine="arrow" (default): broadcast codebooks + vectorized numpy argmin
-    inside mapInPandas — scales to k=256 codewords (a Column expression
-    tree with m*k when() terms grows past the JVM JIT method-size limit
-    and falls back to interpreted evaluation).
-    engine="column": pure Column arithmetic, fine for small k (<= ~16)."""
+    Broadcast codebooks + vectorized numpy argmin inside mapInPandas —
+    scales to k=256 codewords (a Column expression tree with m*k when()
+    terms grows past the JVM JIT method-size limit and falls back to
+    interpreted evaluation)."""
+    from pyspark.sql.types import ArrayType, IntegerType, StructField
+
     m, k, dsub = codebooks.shape
 
-    if engine == "arrow":
-        import pandas as pd
+    def enc(pdf, X, books):
+        codes = np.empty((len(X), m), dtype=np.int32)
+        for j in range(m):
+            xs = X[:, j * dsub : (j + 1) * dsub]
+            codes[:, j] = _subspace_d2(xs, books[j]).argmin(axis=1)
+        return (list(codes),)
 
-        from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
-
-        spark = corpus.sparkSession
-        bc = spark.sparkContext.broadcast(np.asarray(codebooks, dtype=np.float64))
-        # StructType.add mutates in place — build a fresh schema
-        schema = StructType(
-            list(corpus.schema.fields)
-            + [StructField("codes", ArrayType(IntegerType()))]
-        )
-
-        def enc(batches):
-            books = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    pdf["codes"] = pd.Series([], dtype=object)
-                    yield pdf
-                    continue
-                X = np.array(list(pdf[corpus_vec]), dtype=np.float64)
-                codes = np.empty((len(X), m), dtype=np.int32)
-                for j in range(m):
-                    xs = X[:, j * dsub : (j + 1) * dsub]
-                    # (n, k) distances via ||x||^2 - 2 x.c + ||c||^2
-                    d2 = (
-                        (xs * xs).sum(axis=1, keepdims=True)
-                        - 2.0 * xs @ books[j].T
-                        + (books[j] * books[j]).sum(axis=1)[None, :]
-                    )
-                    codes[:, j] = d2.argmin(axis=1)
-                pdf = pdf.copy()
-                pdf["codes"] = list(codes)
-                yield pdf
-
-        return corpus.mapInPandas(enc, schema=schema)
-
-    def sub_dist(vec, j, c):
-        lit = F.array(*[F.lit(float(v)) for v in codebooks[j][c]])
-        sl = F.slice(vec, j * dsub + 1, dsub)
-        return F.aggregate(
-            F.zip_with(sl, lit, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-
-    def argmin_code(vec, j):
-        best_d = sub_dist(vec, j, 0)
-        best_c = F.lit(0)
-        for c in range(1, k):
-            d = sub_dist(vec, j, c)
-            best_c = F.when(d < best_d, c).otherwise(best_c)
-            best_d = F.least(best_d, d)
-        return best_c
-
-    codes = F.array(*[argmin_code(F.col(corpus_vec), j) for j in range(m)])
-    return corpus.withColumn("codes", codes)
+    return _map_vectors(
+        corpus, codebooks, corpus_vec,
+        [StructField("codes", ArrayType(IntegerType()))], enc,
+    )
 
 
 def pq_luts(
@@ -732,40 +648,73 @@ def pq_luts(
     every codeword of sub-codebook j at position j*k + c. Vectorized numpy
     inside mapInPandas (codebooks broadcast); never a driver collect, so
     the probe batch can itself be a big DataFrame."""
-    import pandas as pd
-
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+    from pyspark.sql.types import ArrayType, DoubleType, StructField
 
     m, kc, dsub = codebooks.shape
-    spark = probes.sparkSession
-    bc = spark.sparkContext.broadcast(np.asarray(codebooks, dtype=np.float64))
-    schema = StructType(
-        list(probes.schema.fields) + [StructField("lut", ArrayType(DoubleType()))]
+
+    def build(pdf, X, books):
+        luts = np.empty((len(X), m * kc), dtype=np.float64)
+        for j in range(m):
+            xs = X[:, j * dsub : (j + 1) * dsub]
+            luts[:, j * kc : (j + 1) * kc] = _subspace_d2(xs, books[j])
+        return (list(luts),)
+
+    return _map_vectors(
+        probes, codebooks, probe_vec,
+        [StructField("lut", ArrayType(DoubleType()))], build,
     )
 
-    def build(batches):
-        books = bc.value  # (m, kc, dsub)
-        for pdf in batches:
-            if pdf.empty:
-                pdf["lut"] = pd.Series([], dtype=object)
-                yield pdf
-                continue
-            X = np.array(list(pdf[probe_vec]), dtype=np.float64)  # (n, dim)
-            n = len(X)
-            luts = np.empty((n, m * kc), dtype=np.float64)
-            for j in range(m):
-                xs = X[:, j * dsub : (j + 1) * dsub]  # (n, dsub)
-                # (n, kc) squared distances to sub-codebook j
-                luts[:, j * kc : (j + 1) * kc] = (
-                    (xs * xs).sum(axis=1, keepdims=True)
-                    - 2.0 * xs @ books[j].T
-                    + (books[j] * books[j]).sum(axis=1)[None, :]
-                )
-            pdf = pdf.copy()
-            pdf["lut"] = list(luts)
-            yield pdf
 
-    return probes.mapInPandas(build, schema=schema)
+def _adc_dist(m: int, kc: int):
+    """ADC distance as m codegen-able element_at terms over `lut`/`codes`
+    (a fixed 16-term sum stays in whole-stage codegen; a zip_with/aggregate
+    HOF over the same data runs interpreted at ~10x the cost on the
+    10^12-pair scan)."""
+    adc = None
+    for j in range(m):
+        term = F.element_at(
+            "lut", F.element_at("codes", j + 1) + F.lit(j * kc) + 1
+        )
+        adc = term if adc is None else adc + term
+    return adc
+
+
+def _exact_rerank(
+    corpus: DataFrame,
+    short: DataFrame,
+    probes: DataFrame,
+    k: int,
+    probe_id: str,
+    probe_vec: str,
+    corpus_id: str,
+    corpus_vec: str,
+) -> DataFrame:
+    """Exact-L2 top-k over a (probe_id, corpus_id) shortlist: the vectors
+    come back through broadcasts of the shortlist and the probes — one
+    bounded corpus probe, no wide shuffle (the FAISS-style refine)."""
+    fetched = (
+        corpus.select(corpus_id, corpus_vec)
+        .join(F.broadcast(short), corpus_id)
+        .join(F.broadcast(probes.select(probe_id, probe_vec)), probe_id)
+    )
+    exact = F.aggregate(
+        F.zip_with(
+            F.col(corpus_vec), F.col(probe_vec),
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0), lambda acc, x: acc + x,
+    )
+    w = Window.partitionBy(probe_id).orderBy("exact_dist", F.col(corpus_id))
+    return (
+        fetched.withColumn("exact_dist", exact)
+        .withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select(
+            probe_id, "rank", F.col(corpus_id).alias("neighbor_id"),
+            F.col("exact_dist").alias("dist"),
+        )
+    )
 
 
 def pq_topk(
@@ -778,7 +727,6 @@ def pq_topk(
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
     refine_factor: int = 5,
-    max_broadcast_mb: float = DEFAULT_ADC_BROADCAST_MB,
 ) -> DataFrame:
     """Approximate L2 top-k by Asymmetric Distance Computation as ONE join:
     probes carry their flattened m*k lookup table (pq_luts, computed
@@ -794,42 +742,49 @@ def pq_topk(
     refine stage) — the shortlist is tiny, so the exact math never touches
     the full corpus.
 
-    max_broadcast_mb: guard on the LUT broadcast (m*kc doubles per probe).
-    A probe batch whose LUTs exceed it is split into hash-chunks, each
-    running the same broadcast plan (the join key is constant, so a shuffle
-    join would serialize into one partition — chunking keeps every chunk's
-    scan parallel); results are the union, identical to the one-shot plan."""
-    m, kc, dsub = codebooks.shape
-    if max_broadcast_mb != float("inf"):
-        n_probes = probes.count()  # bounded job on the small side
-        mb = _lut_mb(n_probes, m, kc)
-        if mb > max_broadcast_mb:
-            n_chunks = int(np.ceil(mb / max_broadcast_mb))
-            out = None
-            for i in range(n_chunks):
-                chunk = probes.filter(
-                    F.pmod(F.hash(F.col(probe_id)), F.lit(n_chunks)) == i
-                )
-                part = pq_topk(
-                    chunk, corpus_codes, codebooks, k, probe_id, probe_vec,
-                    corpus_id, corpus_vec, refine_factor,
-                    max_broadcast_mb=float("inf"),
-                )
-                out = part if out is None else out.unionByName(part)
-            return out
+    LUT broadcast guard (m*kc doubles per probe): a probe batch whose LUTs
+    exceed DEFAULT_ADC_BROADCAST_MB (read at call time) is split into
+    hash-chunks, each running the same broadcast plan (the join key is
+    constant, so a shuffle join would serialize into one partition —
+    chunking keeps every chunk's scan parallel); results are the union,
+    identical to the one-shot plan."""
+    m, kc, _ = codebooks.shape
+    mb = _lut_mb(probes.count(), m, kc)  # bounded job on the small side
+    n_chunks = int(np.ceil(mb / DEFAULT_ADC_BROADCAST_MB))
+    args = (
+        corpus_codes, codebooks, k, probe_id, probe_vec, corpus_id,
+        corpus_vec, refine_factor,
+    )
+    if n_chunks <= 1:
+        return _pq_topk_batch(probes, *args)
+    out = None
+    for i in range(n_chunks):
+        chunk = probes.filter(
+            F.pmod(F.hash(F.col(probe_id)), F.lit(n_chunks)) == i
+        )
+        part = _pq_topk_batch(chunk, *args)
+        out = part if out is None else out.unionByName(part)
+    return out
+
+
+def _pq_topk_batch(
+    probes: DataFrame,
+    corpus_codes: DataFrame,
+    codebooks,
+    k: int,
+    probe_id: str,
+    probe_vec: str,
+    corpus_id: str,
+    corpus_vec: str,
+    refine_factor: int,
+) -> DataFrame:
+    """pq_topk for one probe batch whose LUTs fit one broadcast."""
+    m, kc, _ = codebooks.shape
     shortlist = k * refine_factor
     plut = pq_luts(
         probes.select(probe_id, probe_vec), codebooks, probe_vec
     )
-    # ADC as m codegen-able element_at terms (a fixed 16-term sum stays in
-    # whole-stage codegen; a zip_with/aggregate HOF over the same data runs
-    # interpreted at ~10x the cost on the 10^12-pair scan)
-    adc = None
-    for j in range(m):
-        term = F.element_at(
-            "lut", F.element_at("codes", j + 1) + F.lit(j * kc) + 1
-        )
-        adc = term if adc is None else adc + term
+    adc = _adc_dist(m, kc)
     # narrow BEFORE the top-k shuffle: only (probe_id, corpus_id, adc_dist)
     # ever moves — never the LUT / code / vector payloads. The probe fan-out
     # is a constant-key BroadcastHASHJoin, not a crossJoin: BNLJ is excluded
@@ -859,36 +814,12 @@ def pq_topk(
     w = Window.partitionBy(probe_id).orderBy("adc_dist", F.col(corpus_id))
     ranked = scored.withColumn("rank", F.row_number().over(w).cast("long"))
     if refine_factor > 1:
-        # exact re-rank of the tiny shortlist: fetch the vectors back via a
-        # broadcast of the shortlist (k*refine_factor*|probes| rows) — one
-        # extra bounded corpus probe, no wide shuffle
         short = ranked.filter(F.col("rank") <= shortlist).select(
             probe_id, corpus_id
         )
-        fetched = (
-            corpus_codes.select(corpus_id, corpus_vec)
-            .join(F.broadcast(short), corpus_id)
-            .join(
-                F.broadcast(probes.select(probe_id, probe_vec)), probe_id
-            )
-        )
-        exact = F.aggregate(
-            F.zip_with(
-                F.col(corpus_vec), F.col(probe_vec),
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-        w2 = Window.partitionBy(probe_id).orderBy("exact_dist", F.col(corpus_id))
-        return (
-            fetched.withColumn("exact_dist", exact)
-            .withColumn("rank", F.row_number().over(w2).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select(
-                probe_id, "rank", F.col(corpus_id).alias("neighbor_id"),
-                F.col("exact_dist").alias("dist"),
-            )
+        return _exact_rerank(
+            corpus_codes, short, probes, k, probe_id, probe_vec, corpus_id,
+            corpus_vec,
         )
     return ranked.filter(F.col("rank") <= k).select(
         probe_id, "rank", F.col(corpus_id).alias("neighbor_id"),
@@ -910,7 +841,6 @@ def ivf_topk(
     sample: int = 2048,
     kmeans_iters: int = 8,
     train: str = "sample",
-    engine: str = "auto",
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors are assigned to their nearest
     centroid (inverted lists = a cluster_id column); each probe searches
@@ -918,14 +848,13 @@ def ivf_topk(
 
     train="sample" (bounded driver mini-kmeans) or "distributed"
     (full-corpus Lloyd iterations, kmeans_train_distributed). ASSIGNMENT is
-    always distributed: pure-Column broadcast-literal argmin for small
-    n_centroids, broadcast-numpy mapInPandas above (engine="auto" picks;
-    see assign_clusters) — plan size stays bounded at thousands of lists.
+    always distributed: pure-Column broadcast-literal argmin up to
+    _ARROW_CENTROID_THRESHOLD centroids, broadcast-numpy mapInPandas above
+    (see assign_clusters) — plan size stays bounded at thousands of lists.
     """
     if train == "distributed":
         cent = kmeans_train_distributed(
             corpus, n_centroids, corpus_vec, corpus_id, seed=seed,
-            engine=engine,
         )
     else:
         cent = kmeans_train_sample(
@@ -933,10 +862,8 @@ def ivf_topk(
             sample=sample, iters=kmeans_iters,
         )
 
-    c_assigned = assign_clusters(corpus, cent, corpus_vec, engine=engine)
-    p_assigned = probe_clusters(
-        probes, cent, probe_vec, n_probe, engine=engine
-    )
+    c_assigned = assign_clusters(corpus, cent, corpus_vec)
+    p_assigned = probe_clusters(probes, cent, probe_vec, n_probe)
     j = c_assigned.join(p_assigned, "cluster_id").filter(
         F.col(probe_id) != F.col(corpus_id)
     )
@@ -976,7 +903,6 @@ def ivfpq_build(
     corpus_vec: str = "embedding",
     seed: int = 42,
     train: str = "sample",
-    engine: str = "auto",
 ):
     """Build the IVF-PQ index: (indexed DataFrame, coarse centroids, PQ
     codebooks). The classic composition (FAISS IVFPQ): a coarse spherical
@@ -991,14 +917,12 @@ def ivfpq_build(
 
     train="distributed" uses the full-corpus trainers for BOTH stages
     (kmeans_train_distributed + pq_train_distributed); "sample" uses the
-    bounded-sample trainers. engine: coarse assignment + residual kernel
-    ("column" literal arithmetic for small list counts, "arrow"
-    broadcast-numpy mapInPandas above — "auto" picks; one fused pass
-    computes both)."""
+    bounded-sample trainers. Coarse assignment and residual run in one
+    fused pass (assign_clusters: literal Column arithmetic up to
+    _ARROW_CENTROID_THRESHOLD lists, broadcast-numpy mapInPandas above)."""
     if train == "distributed":
         cent = kmeans_train_distributed(
             corpus, n_centroids, corpus_vec, corpus_id, seed=seed,
-            engine=engine,
         )
     else:
         cent = kmeans_train_sample(
@@ -1006,9 +930,7 @@ def ivfpq_build(
             sample=max(2048, 8 * n_centroids),
         )
 
-    assigned = assign_clusters(
-        corpus, cent, corpus_vec, engine=engine, residual_col="_rvec"
-    )
+    assigned = assign_clusters(corpus, cent, corpus_vec, residual_col="_rvec")
     res_frame = assigned.select(F.col("_rvec").alias("rvec"))
     if train == "distributed":
         books = pq_train_distributed(res_frame, m, kc, corpus_vec="rvec", seed=seed)
@@ -1023,14 +945,11 @@ def ivfpq_encode(
     cent,
     books,
     corpus_vec: str = "embedding",
-    engine: str = "auto",
 ) -> DataFrame:
     """Encode vectors into an EXISTING IVF-PQ code space (coarse assign +
     residual + PQ codes with the given models) — the apply half of
     ivfpq_build, exposed for incremental maintenance."""
-    assigned = assign_clusters(
-        corpus, cent, corpus_vec, engine=engine, residual_col="_rvec"
-    )
+    assigned = assign_clusters(corpus, cent, corpus_vec, residual_col="_rvec")
     return pq_encode(assigned, books, corpus_vec="_rvec").drop("_rvec")
 
 
@@ -1040,7 +959,6 @@ def ivfpq_extend(
     cent,
     books,
     corpus_vec: str = "embedding",
-    engine: str = "auto",
 ) -> DataFrame:
     """Append a new vector batch to an existing IVF-PQ index WITHOUT
     retraining: the same coarse centroids + codebooks define the code
@@ -1050,7 +968,7 @@ def ivfpq_extend(
     the corpus distribution shifts) is a rebuild-time decision, the same
     posture as the n-gram OOV threshold in index_maintenance."""
     return indexed.unionByName(
-        ivfpq_encode(new_corpus, cent, books, corpus_vec, engine)
+        ivfpq_encode(new_corpus, cent, books, corpus_vec)
     )
 
 
@@ -1118,8 +1036,6 @@ def ivfpq_topk(
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
     refine_factor: int = 5,
-    engine: str = "auto",
-    max_broadcast_mb: float = DEFAULT_ADC_BROADCAST_MB,
     hot_list_salt: bool = True,
     hot_list_factor: float = 4.0,
 ) -> DataFrame:
@@ -1135,8 +1051,8 @@ def ivfpq_topk(
     probes that chose its list — candidate work is corpus_fraction *
     n_probe/n_centroids, and the big side never shuffles.
 
-    max_broadcast_mb: guard on the LUT broadcast (|probes| * n_probe rows
-    of m*kc doubles). Past it, the ADC join switches to a SHUFFLE_HASH
+    LUT broadcast guard: |probes| * n_probe rows of m*kc doubles. Past
+    DEFAULT_ADC_BROADCAST_MB (read at call time), the ADC join switches to a SHUFFLE_HASH
     join on cluster_id — a real key, so the join stays parallel (unlike
     pq_topk's constant key, which must chunk instead); identical results
     (tested).
@@ -1154,22 +1070,16 @@ def ivfpq_topk(
     shortlist = k * refine_factor
     p_assigned = probe_clusters(
         probes.select(probe_id, probe_vec), cent, probe_vec, n_probe,
-        engine=engine, residual_col="rpvec",
+        residual_col="rpvec",
     )
     plut = pq_luts(
         p_assigned.select(probe_id, "cluster_id", "rpvec"), books, "rpvec"
     ).drop("rpvec")
-    use_shuffle = False
-    if max_broadcast_mb != float("inf"):
-        mb = _lut_mb(probes.count() * n_probe, m, kc)
-        use_shuffle = mb > max_broadcast_mb
+    use_shuffle = (
+        _lut_mb(probes.count() * n_probe, m, kc) > DEFAULT_ADC_BROADCAST_MB
+    )
 
-    adc = None
-    for j in range(m):
-        term = F.element_at(
-            "lut", F.element_at("codes", j + 1) + F.lit(j * kc) + 1
-        )
-        adc = term if adc is None else adc + term
+    adc = _adc_dist(m, kc)
     corpus_sel = indexed.select(corpus_id, "cluster_id", "codes")
     if not use_shuffle:
         joined = corpus_sel.join(F.broadcast(plut), "cluster_id")
@@ -1186,26 +1096,6 @@ def ivfpq_topk(
         .filter(F.col("rank") <= shortlist)
         .select(probe_id, corpus_id)
     )
-    fetched = (
-        indexed.select(corpus_id, corpus_vec)
-        .join(F.broadcast(short), corpus_id)
-        .join(F.broadcast(probes.select(probe_id, probe_vec)), probe_id)
-    )
-    exact = F.aggregate(
-        F.zip_with(
-            F.col(corpus_vec), F.col(probe_vec),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    w2 = Window.partitionBy(probe_id).orderBy("exact_dist", F.col(corpus_id))
-    return (
-        fetched.withColumn("exact_dist", exact)
-        .withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(
-            probe_id, "rank", F.col(corpus_id).alias("neighbor_id"),
-            F.col("exact_dist").alias("dist"),
-        )
+    return _exact_rerank(
+        indexed, short, probes, k, probe_id, probe_vec, corpus_id, corpus_vec
     )

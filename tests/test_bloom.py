@@ -50,32 +50,33 @@ def test_bloom_join_pruning_preserves_join(spark):
     assert pruned_n < 500  # ~100 matches + a handful of false positives
 
 
-def test_bloom_prune_engine_parity(spark):
-    # the arrow engine (broadcast word array) must keep EXACTLY the rows
-    # the literal Column engine keeps — same hashes, same words
+def test_bloom_prune_engine_parity(spark, monkeypatch):
+    # the arrow kernel (broadcast word array) must keep EXACTLY the rows
+    # the literal Column kernel keeps — same hashes, same words
     members = _vals(spark, 0, 1000)
     words = bloom.bloom_words(bloom.bloom_build(members, "v"))
     probe = _vals(spark, 0, 5000, tag="x").unionAll(_vals(spark, 0, 300))
     col_rows = sorted(
-        r["v"]
-        for r in bloom.bloom_prune(
-            probe, words, "v", engine="column"
-        ).collect()
+        r["v"] for r in bloom.bloom_prune(probe, words, "v").collect()
     )
+    monkeypatch.setattr(bloom, "_ARROW_WORD_THRESHOLD", 0)
     arrow_rows = sorted(
-        r["v"]
-        for r in bloom.bloom_prune(
-            probe, words, "v", engine="arrow"
-        ).collect()
+        r["v"] for r in bloom.bloom_prune(probe, words, "v").collect()
     )
     assert col_rows == arrow_rows and len(col_rows) >= 300
 
 
 def test_bloom_prune_auto_picks_arrow_past_threshold(spark):
-    assert bloom._prune_engine("auto", bloom._ARROW_WORD_THRESHOLD) == "column"
-    assert (
-        bloom._prune_engine("auto", bloom._ARROW_WORD_THRESHOLD + 1) == "arrow"
+    from tests.test_plans import plan_str
+
+    probe = _vals(spark, 0, 10)
+    n = bloom._ARROW_WORD_THRESHOLD
+    at = plan_str(bloom.bloom_prune(probe, [0] * n, "v", m_bits=30 * n))
+    past = plan_str(
+        bloom.bloom_prune(probe, [0] * (n + 1), "v", m_bits=30 * (n + 1))
     )
+    assert "MapInPandas" not in at
+    assert "MapInPandas" in past
 
 
 def test_bloom_prune_large_m_arrow(spark):

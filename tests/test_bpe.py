@@ -1,5 +1,5 @@
-"""Merge-based BPE: trainer vs hand-derived merges, engine parity,
-scalar-vs-distributed apply equality, corpus training sanity."""
+"""Merge-based BPE: trainer vs hand-derived merges, Column/Arrow kernel
+parity, scalar-vs-distributed apply equality, corpus training sanity."""
 
 from pyspark.sql import functions as F
 
@@ -30,17 +30,19 @@ def test_reference_merges_pinned_tokenizations():
     assert bpe.encode_piece("interesting", rm) == ["in", "t", "erest", "ing"]
 
 
-def test_bpe_engines_and_scalar_agree(spark):
+def test_bpe_engines_and_scalar_agree(spark, monkeypatch):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     merges = bpe.bpe_train(docs, n_merges=80)
     assert len(merges) == 80
-    col = {
-        (r["doc_id"], r["n_tokens"])
-        for r in bpe.bpe_token_counts(docs, merges, engine="column").collect()
-    }
+    # 80 merges > _COLUMN_MERGE_LIMIT: the size rule picks mapInPandas
     arrow = {
         (r["doc_id"], r["n_tokens"])
-        for r in bpe.bpe_token_counts(docs, merges, engine="arrow").collect()
+        for r in bpe.bpe_token_counts(docs, merges).collect()
+    }
+    monkeypatch.setattr(bpe, "_COLUMN_MERGE_LIMIT", len(merges))
+    col = {
+        (r["doc_id"], r["n_tokens"])
+        for r in bpe.bpe_token_counts(docs, merges).collect()
     }
     assert col == arrow and len(col) > 0
     # independent scalar recomputation for a few docs
@@ -64,7 +66,7 @@ def test_bpe_training_compresses_token_count(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     m100 = bpe.bpe_train(docs, n_merges=100)
     n0 = (
-        bpe.bpe_token_counts(docs, [], engine="column")
+        bpe.bpe_token_counts(docs, [])
         .agg(F.sum("n_tokens")).collect()[0][0]
     )
     n100 = (
@@ -72,7 +74,7 @@ def test_bpe_training_compresses_token_count(spark):
         .agg(F.sum("n_tokens")).collect()[0][0]
     )
     assert n100 < n0  # merges learned from the corpus actually bind
-    # auto engine: 100 merges routes to arrow (bounded plan)
+    # size rule: 100 merges routes to mapInPandas (bounded plan)
     from tests.test_plans import plan_str
 
     df = bpe.bpe_token_counts(docs, m100)

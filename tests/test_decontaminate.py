@@ -1,6 +1,6 @@
-"""Benchmark decontamination: planted-contamination detection, prune-mode
-answer invariance (bloom literal + arrow engines, semi, none), doc-level
-flags, and the winnowing-variant guarantee."""
+"""Benchmark decontamination: planted-contamination detection, prune
+answer invariance (Bloom literal + arrow kernels vs the unpruned join),
+doc-level flags, and the winnowing-variant guarantee."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -45,18 +45,22 @@ def test_planted_contamination_flagged(spark, corpus_bench):
     assert got == {(1, 100): 1, (3, 100): 1}
 
 
-def test_prune_modes_answer_invariant(spark, corpus_bench):
+def test_prune_modes_answer_invariant(spark, corpus_bench, monkeypatch):
+    from osm_search_spark.functions import bloom
+
     docs, bench = corpus_bench
-    base = sorted(
-        map(tuple, decontaminate(docs, bench, n=13, prune=None).collect())
-    )
-    for kw in (
-        dict(prune="semi"),
-        dict(prune="bloom"),  # literal engine (auto m is small)
-        dict(prune="bloom", bloom_m=1 << 20),  # forces the arrow engine
-    ):
-        got = sorted(map(tuple, decontaminate(docs, bench, n=13, **kw).collect()))
-        assert got == base, kw
+
+    def run():
+        return sorted(map(tuple, decontaminate(docs, bench, n=13).collect()))
+
+    literal = run()  # auto m is small: the literal kernel
+    monkeypatch.setattr(bloom, "_ARROW_WORD_THRESHOLD", 0)
+    arrow = run()
+    # reference: the collision join with no prune at all
+    monkeypatch.setattr(bloom, "bloom_prune", lambda df, *a, **kw: df)
+    base = run()
+    assert literal == base
+    assert arrow == base
 
 
 def test_collision_count_is_distinct_shared_grams(spark):

@@ -104,7 +104,10 @@ def test_simhash_near_dup_small_hamming(spark):
         ],
         "doc_id long, text string",
     )
-    sims = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs).collect()}
+    sims = {
+        r["doc_id"]: r["simhash"]
+        for r in dedup.simhash_portable(docs).collect()
+    }
 
     def hamming(a, b):
         return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
@@ -404,7 +407,7 @@ def test_winnow_guarantee_and_edges(spark):
     assert len(by_doc[5]) == 1
 
 
-def test_coarse_quantizer_engine_parity(spark):
+def test_coarse_quantizer_engine_parity(spark, monkeypatch):
     # arrow (broadcast-numpy mapInPandas) and column (literal expression)
     # coarse quantizers must agree exactly: assignment (ties -> lowest id),
     # probed lists (ties -> highest id), and residuals
@@ -412,10 +415,12 @@ def test_coarse_quantizer_engine_parity(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cent = S.kmeans_train_sample(emb, 16)
+    threshold = {"column": 10**9, "arrow": 0}
     got = {}
     for eng in ("column", "arrow"):
+        monkeypatch.setattr(S, "_ARROW_CENTROID_THRESHOLD", threshold[eng])
         rows = S.assign_clusters(
-            emb, cent, "embedding", engine=eng, residual_col="r"
+            emb, cent, "embedding", residual_col="r"
         ).collect()
         got[eng] = {
             r["vec_id"]: (r["cluster_id"], tuple(r["r"])) for r in rows
@@ -432,7 +437,8 @@ def test_coarse_quantizer_engine_parity(spark):
     )
     lists = {}
     for eng in ("column", "arrow"):
-        rows = S.probe_clusters(probes, cent, "pvec", 4, engine=eng).collect()
+        monkeypatch.setattr(S, "_ARROW_CENTROID_THRESHOLD", threshold[eng])
+        rows = S.probe_clusters(probes, cent, "pvec", 4).collect()
         d = {}
         for r in rows:
             d.setdefault(r["probe_id"], set()).add(r["cluster_id"])
@@ -452,7 +458,7 @@ def _replicated_corpus(spark, sf_dir="/root/testdata/sf0.1", reps=16):
 
 
 def test_ivf_and_ivfpq_at_1024_lists(spark):
-    # the arrow coarse engine unlocks real list counts: 1024 inverted lists
+    # the arrow coarse kernel unlocks real list counts: 1024 inverted lists
     # over a 32k-row corpus, n_probe=32 — a literal-expression quantizer
     # would be an O(n_centroids * dim) plan; the arrow plan stays bounded
     from osm_search_spark.operators import similarity as S
@@ -503,8 +509,8 @@ def test_ivf_and_ivfpq_at_1024_lists(spark):
 
     cent = S.kmeans_train_sample(corpus, 1024, sample=2048)
     assert len(cent) == 1024
-    # plan stays bounded at 1024 lists (the point of the arrow engine):
-    # auto picks arrow, and the explain string is constant-size, not
+    # plan stays bounded at 1024 lists (the point of the arrow kernel):
+    # the size rule picks arrow, and the explain string is constant-size, not
     # O(n_centroids * dim) literal arrays
     assigned = S.assign_clusters(corpus, cent, "embedding")
     p = plan_str(assigned)
@@ -535,7 +541,7 @@ def test_ivf_and_ivfpq_at_1024_lists(spark):
     corpus.unpersist()
 
 
-def test_adc_broadcast_guard_paths_identical(spark):
+def test_adc_broadcast_guard_paths_identical(spark, monkeypatch):
     # past the LUT-broadcast budget, pq_topk chunks the probe batch and
     # ivfpq_topk switches to a SHUFFLE_HASH join — both must return
     # row-for-row the same results as the broadcast plan
@@ -552,9 +558,9 @@ def test_adc_broadcast_guard_paths_identical(spark):
     base = sorted(
         map(tuple, S.pq_topk(probes, codes, books, k=5).collect())
     )
-    chunked_df = S.pq_topk(
-        probes, codes, books, k=5, max_broadcast_mb=0.0005
-    )
+    with monkeypatch.context() as mp:
+        mp.setattr(S, "DEFAULT_ADC_BROADCAST_MB", 0.0005)
+        chunked_df = S.pq_topk(probes, codes, books, k=5)
     assert "Union" in plan_str(chunked_df)
     assert sorted(map(tuple, chunked_df.collect())) == base
     codes.unpersist()
@@ -567,9 +573,9 @@ def test_adc_broadcast_guard_paths_identical(spark):
             S.ivfpq_topk(probes, indexed, cent, rbooks, k=5, n_probe=4).collect(),
         )
     )
+    monkeypatch.setattr(S, "DEFAULT_ADC_BROADCAST_MB", 0.0005)
     shuffled_df = S.ivfpq_topk(
         probes, indexed, cent, rbooks, k=5, n_probe=4,
-        max_broadcast_mb=0.0005,
     )
     plan = plan_str(shuffled_df)
     assert "ShuffledHashJoin" in plan, plan
@@ -654,7 +660,7 @@ def test_ivfpq_extend_equals_full_encode(spark):
     assert ext_res == full_res
 
 
-def test_ivfpq_hot_list_salting_identical(spark):
+def test_ivfpq_hot_list_salting_identical(spark, monkeypatch):
     # a planted hot inverted list (~60% of the corpus in one cluster) on
     # the SHUFFLE_HASH path: the salting guard must spread that list over
     # sub-keys yet return row-for-row the same results as the unsalted
@@ -682,7 +688,8 @@ def test_ivfpq_hot_list_salting_identical(spark):
     indexed = indexed.persist()
     sizes = [r["count"] for r in indexed.groupBy("cluster_id").count().collect()]
     assert max(sizes) > 1.5 * (sum(sizes) / len(sizes))  # skew is planted
-    kw = dict(k=5, n_probe=2, max_broadcast_mb=0.0005)
+    monkeypatch.setattr(S, "DEFAULT_ADC_BROADCAST_MB", 0.0005)
+    kw = dict(k=5, n_probe=2)
     base = sorted(
         map(
             tuple,

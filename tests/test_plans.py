@@ -126,18 +126,17 @@ def test_autocomplete_topk_is_take_ordered_and_no_corpus_rescan(spark):
 
 
 def test_decontaminate_plan_no_nested_loop(spark):
-    # the collision join must stay an equi hash join end-to-end — never a
-    # cartesian/nested-loop — in every prune mode
+    # the Bloom-pruned collision join must stay an equi hash join
+    # end-to-end — never a cartesian/nested-loop
     from osm_search_spark.operators.decontaminate import decontaminate
 
     docs = _docs(spark)
     bench = docs.limit(5).select(
         F.col("doc_id").alias("bench_id"), "text"
     )
-    for prune in (None, "semi", "bloom"):
-        plan = plan_str(decontaminate(docs, bench, n=3, prune=prune))
-        assert "CartesianProduct" not in plan, (prune, plan)
-        assert "BroadcastNestedLoopJoin" not in plan, (prune, plan)
+    plan = plan_str(decontaminate(docs, bench, n=3))
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_langid_profiles_join_is_broadcast(spark):

@@ -81,7 +81,7 @@ def test_killed_batch_mid_commit_recovers_under_load(spark, tmp_path):
     )
 
     def merge(committed, batch_df):
-        flags = decontaminate_flags(batch_df, bench, n=13, prune="bloom")
+        flags = decontaminate_flags(batch_df, bench, n=13)
         if committed is None:
             return flags
         return committed.unionByName(flags)

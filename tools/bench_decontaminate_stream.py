@@ -6,9 +6,9 @@ VERDICT r05 item 8: the streaming decontamination path
 This tool:
 
 1. stages N_BATCHES parquet files of BATCH_SIZE synthetic docs each
-   (same generator as tools/bench_decontaminate.py, planted 13-gram
+   (~50-word docs over a 500-word vocabulary, planted 13-gram
    contamination in 0.1%% of docs) and a 5k-doc benchmark dim;
-2. runs the file-source stream (maxFilesPerTrigger=1, prune='bloom')
+2. runs the file-source stream (maxFilesPerTrigger=1, Bloom-pruned)
    and reports per-micro-batch wall from the query's progress events
    (triggerExecution durationMs — includes the merge + snapshot commit);
 3. kill-recovery drill under the same load: replays the LAST batch's
@@ -85,7 +85,7 @@ def main():
     ckpt = os.path.join(root, "ck")
     t0 = time.perf_counter()
     q = start_decontaminate_stream(
-        stream, bench, table, ckpt, n=13, prune="bloom"
+        stream, bench, table, ckpt, n=13
     )
     try:
         q.processAllAvailable()
@@ -112,7 +112,7 @@ def main():
     with open(ptr) as f:
         rec_before = json.load(f)
 
-    prep = prepare_benchmark(bench, n=13, prune="bloom")
+    prep = prepare_benchmark(bench, n=13)
 
     def merge(committed_df, batch_df):
         flags = decontaminate_flags(
@@ -153,7 +153,7 @@ def main():
     assert recovered.count() == n_rows + batch_size, "recovery lost/duped rows"
     want = decontaminate_flags(
         synth_docs(spark, 0, n_batches * batch_size, "doc_id", 1000),
-        bench, n=13, prune="bloom",
+        bench, n=13,
     ).agg(
         F.count("*"), F.sum(F.col("contaminated").cast("long"))
     ).first()

@@ -65,7 +65,9 @@ def main():
                 F.col("embedding").alias("pvec"))
         .localCheckpoint(eager=True)
     )
-    kw = dict(k=10, n_probe=8, max_broadcast_mb=0.0005)
+    # a tiny LUT budget forces the SHUFFLE_HASH ADC join being measured
+    S.DEFAULT_ADC_BROADCAST_MB = 0.0005
+    kw = dict(k=10, n_probe=8)
 
     def run(salt):
         best, chk = None, None
