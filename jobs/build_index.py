@@ -5,9 +5,11 @@ re-expression) with checkpoint/resume.
       --base /data/index \
       [--pbf extract.osm.pbf | --nodes P --ways P --relations P | --synth]
 
-Each artifact (places, cells, postings_name, postings_address, term_dict,
-doc_stats, ngram_counts) is a committed lineage stage; rerunning after a
-failure resumes from the last good stage.
+Each artifact (admin_polygons and streets when relations are given, then
+places, term_dict, ngram_counts: what SparkSearcher and jobs/query.py
+read) is a committed lineage stage; rerunning after a failure resumes from
+the last good stage. The per-field postings and doc stats are not written:
+the searcher derives them from places when it loads the index.
 """
 
 from __future__ import annotations

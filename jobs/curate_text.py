@@ -62,6 +62,11 @@ def run(
         bench = spark.read.parquet(bench_path)
         snap = f"{docs_path}|{bench_path}|{snapshot}"
 
+    # each stage's snapshot carries every parameter upstream of it, so a
+    # changed parameter rebuilds its stage and everything downstream
+    dedup_snap = f"{snap}|k={ct.DEFAULT_SHINGLE_K}"
+    spans_snap = f"{dedup_snap}|span_n={span_n}"
+    decon_snap = f"{spans_snap}|decon_n={decon_n}"
     clean = run_stage(
         spark, base, "clean",
         lambda: ct.clean_stage(docs),
@@ -75,22 +80,22 @@ def run(
     deduped = run_stage(
         spark, base, "dedup",
         lambda: ct.dedup_stage(quality),
-        input_snapshot=f"{snap}|k={ct.DEFAULT_SHINGLE_K}",
+        input_snapshot=dedup_snap,
     )
     spans = run_stage(
         spark, base, "spans",
         lambda: ct.spans_stage(deduped, n=span_n),
-        input_snapshot=f"{snap}|n={span_n}",
+        input_snapshot=spans_snap,
     )
     decon = run_stage(
         spark, base, "decon",
         lambda: ct.decontaminate_stage(spans, bench, n=decon_n),
-        input_snapshot=f"{snap}|n={decon_n}",
+        input_snapshot=decon_snap,
     )
     corpus = run_stage(
         spark, base, "corpus",
         lambda: ct.mix_pack_stage(ct.split_stage(decon), budget=budget),
-        input_snapshot=f"{snap}|budget={budget}",
+        input_snapshot=f"{decon_snap}|budget={budget}",
         partition_by="shard",
     )
     return clean, quality, deduped, spans, decon, corpus

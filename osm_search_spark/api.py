@@ -35,20 +35,13 @@ VALID_QUERY = re.compile(r"^[A-Za-z0-9_ +,.()]+$")
 
 
 class SparkSearcher:
-    def __init__(
-        self, spark: SparkSession, index_base: str,
-        stem_roots: "frozenset | None" = None,
-    ):
-        """stem_roots: enable Indonesian confix-stripping on both the index
-        and query sides, like the reference's always-on sastrawi stemming
-        (pkg/util.go:12-14; functions/stemmer.DEFAULT_ROOTS gives the
-        bundled dictionary, or pass your own root set)."""
+    def __init__(self, spark: SparkSession, index_base: str):
         self.spark = spark
         self.places = read_table(spark, f"{index_base}/places").cache()
         self.term_dict = read_table(spark, f"{index_base}/term_dict").cache()
         self.ngram_counts = read_table(spark, f"{index_base}/ngram_counts").cache()
         # load-once index (Searcher.LoadMainIndex, searcher.go:84-133)
-        self.index = BM25FIndex(self.places, stem_roots=stem_roots)
+        self.index = BM25FIndex(self.places)
 
     def _validate(self, query: str) -> None:
         if not query:

@@ -229,20 +229,6 @@ def bbox_cover(
     return (res * RES_BITS_SHIFT + gx.ravel() * IX_SHIFT + gy.ravel())
 
 
-def polygon_cover(ring_lat, ring_lon, res: int) -> np.ndarray:
-    """Cell cover of a polygon ring: bbox cells, keeping cells that either
-    contain a ring vertex, intersect the ring, or whose center is inside.
-
-    Conservative superset guarantee: any cell containing a point that is
-    inside the polygon is kept. We keep it simple (and provably a superset)
-    by returning the full bbox cover — the exact PIP refine stage removes
-    false positives. Tighter covers are a pure optimization knob.
-    """
-    ring_lat = np.asarray(ring_lat, dtype=np.float64)
-    ring_lon = np.asarray(ring_lon, dtype=np.float64)
-    return bbox_cover(ring_lat.min(), ring_lon.min(), ring_lat.max(), ring_lon.max(), res)
-
-
 # Optional: real H3 if present (not in this container) — same API surface.
 try:  # pragma: no cover
     import h3 as _h3  # noqa: F401

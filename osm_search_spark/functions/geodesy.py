@@ -47,21 +47,6 @@ def haversine_km_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
     )
 
 
-def equirect_km(
-    lat1: Column | str, lon1: Column | str, lat2: Column | str, lon2: Column | str
-) -> Column:
-    """Fast approximate distance used as cheap pre-rank (distance.go:31-35).
-
-    NOTE: the reference takes cos of the mean latitude in *degrees* (a bug it
-    only uses for relative ordering); we keep proper radians but the operator
-    contract is 'cheap monotonic-ish pre-rank', never a user-facing distance.
-    """
-    lat1, lon1, lat2, lon2 = (F.radians(_col(c)) for c in (lat1, lon1, lat2, lon2))
-    x = (lon2 - lon1) * F.cos((lat1 + lat2) / 2.0)
-    y = lat2 - lat1
-    return F.sqrt(x * x + y * y) * EARTH_RADIUS_KM
-
-
 def midpoint(
     lat1: Column | str, lon1: Column | str, lat2: Column | str, lon2: Column | str
 ) -> Column:

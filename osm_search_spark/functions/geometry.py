@@ -145,12 +145,6 @@ def reference_pip_scalar(plat: float, plon: float, ring_lat, ring_lon) -> bool:
     return wn != 0
 
 
-def bbox_of(ring_lat, ring_lon) -> tuple[float, float, float, float]:
-    ring_lat = np.asarray(ring_lat, dtype=np.float64)
-    ring_lon = np.asarray(ring_lon, dtype=np.float64)
-    return float(ring_lat.min()), float(ring_lon.min()), float(ring_lat.max()), float(ring_lon.max())
-
-
 def haversine_km_np(lat1, lon1, lat2, lon2) -> np.ndarray:
     """Numpy twin of functions.geodesy.haversine_km (distance.go:19-28)."""
     lat1, lon1, lat2, lon2 = (np.radians(np.asarray(x, dtype=np.float64)) for x in (lat1, lon1, lat2, lon2))

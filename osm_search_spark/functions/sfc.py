@@ -394,11 +394,3 @@ def key_range_filter(key: Column | str, ranges: list[tuple[int, int]]) -> Column
         return build(lo, mid) | build(mid + 1, hi)
 
     return build(0, len(ranges) - 1)
-
-
-def key_range_filter_sql(key: str, ranges: list[tuple[int, int]]) -> str:
-    if not ranges:
-        return "false"
-    return "(" + " or ".join(
-        f"{key} between {lo} and {hi}" for lo, hi in ranges
-    ) + ")"

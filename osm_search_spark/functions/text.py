@@ -65,14 +65,6 @@ def ngrams(tokens: Column | str, n: int, sep: str = " ") -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def ngrams_sql(tokens_sql: str, n: int, sep: str = " ") -> str:
-    """DuckDB twin: list comprehension over generate_series (1-indexed)."""
-    parts = f" || '{sep}' || ".join(f"({tokens_sql})[i + {j}]" for j in range(n))
-    return (
-        f"[{parts} for i in generate_series(1, len({tokens_sql}) - {n - 1})]"
-    )
-
-
 def char_shingles(text: Column | str, k: int) -> Column:
     """Array of k-character shingles of a string (for MinHash/Jaccard).
     Empty below k chars (sequence(1, 0) is the DESCENDING [1, 0] in Spark

@@ -129,30 +129,6 @@ def clip_polygon_cell_py(
     return outer[0], outer[1], h_lat, h_lon
 
 
-def _clip_rings_np(ys_list, xs_list, bounds):
-    """Vectorized Sutherland–Hodgman over MANY (ring, rect) rows at once
-    (round-7 VERDICT item 6): all rows' vertices flatten into one array
-    and each of the four half-plane passes runs as a single numpy step —
-    per-vertex emission slots (current vertex, then crossing intersection)
-    compact in order, so output vertex VALUES and ORDER are bit-identical
-    to the scalar `_clip_ring_rect` (same IEEE ops in the same order; the
-    scalar stays as the oracle/VALUES reference).
-
-    ys_list/xs_list: per-row CLOSED or open ring arrays;
-    bounds: float64 array (R, 4) of (minlat, minlon, maxlat, maxlon).
-    Returns list of (closed_lat_list, closed_lon_list) or None per row.
-    """
-    R = len(ys_list)
-    opens = []
-    for ys, xs in zip(ys_list, xs_list):
-        ys, xs = _open_ring(ys, xs)
-        opens.append((ys, xs))
-    counts = np.array([len(ys) for ys, _ in opens], dtype=np.int64)
-    Y = np.concatenate([ys for ys, _ in opens]) if R else np.empty(0)
-    X = np.concatenate([xs for _, xs in opens]) if R else np.empty(0)
-    return _clip_flat(X, Y, counts, bounds)
-
-
 def _open_ring(ys, xs):
     ys = np.asarray(ys, dtype=np.float64)
     xs = np.asarray(xs, dtype=np.float64)

@@ -66,11 +66,6 @@ def _check_px(px: int) -> int:
     return e
 
 
-def pixel_size_deg(res: int, px: int) -> float:
-    """Edge length of one raster pixel in degrees (= cell size at res+e)."""
-    return C.cell_size_deg(res + _check_px(px))
-
-
 def _tile_mask(rl, rn, cell: int, px: int, size_p: float, holes=()):
     """Lattice mask of one tile vs one closed ring (minus any holes):
     (n_set, packed bytes). Pixel centers use the GLOBAL lattice formula

@@ -28,7 +28,6 @@ from ..functions.text import tokenize, tokenize_simple
 from ..sources.synth import dlit
 
 # Reference scoring constants (searcher.go:28-38)
-BM25F_K1, BM25F_NAME_W, BM25F_NAME_B, BM25F_ADDR_W, BM25F_ADDR_B = 10.0, 20.0, 0.95, 1.0, 0.3
 BM25PLUS_K1, BM25PLUS_B, BM25PLUS_DELTA = 1.2, 0.98, 1.0
 # Pinned single-field config for oracle-checked BM25 (classic defaults)
 BM25_K1, BM25_B = 1.2, 0.75

@@ -34,10 +34,10 @@ from pyspark.sql import functions as F
 
 from . import ngram_lm, search
 
-# searcher.go:28-38
+# searcher.go:28-38; no ADDRESS_B — both fields use NAME_B (see above)
 K1_BM25F = 10.0
 NAME_WEIGHT, NAME_B = 20.0, 0.95
-ADDRESS_WEIGHT, ADDRESS_B = 1.0, 0.3
+ADDRESS_WEIGHT = 1.0
 
 
 # Per-token candidate bound shared by the per-query AND batch spell paths:
@@ -59,30 +59,6 @@ ADDRESS_WEIGHT, ADDRESS_B = 1.0, 0.3
 DEFAULT_MAX_CANDIDATES_PER_TOKEN = 64
 
 
-def spell_candidates(
-    term_dict: DataFrame, token: str, max_dist: int = 2,
-    max_candidates: int = 10000,
-) -> list[str]:
-    """Vocab terms within edit distance 1, then 2 (each block sorted).
-
-    The collect is BOUNDED (deterministic (d, term) order, max_candidates
-    rows) — a pathological token against a web-scale dictionary cannot OOM
-    the driver; the cap never binds on realistic vocabularies."""
-    cand = (
-        term_dict.select(
-            "term", F.levenshtein(F.lit(token), F.col("term")).alias("d")
-        )
-        .filter(F.col("d") <= max_dist)
-        .orderBy("d", "term")
-        .limit(max_candidates)
-        .collect()
-    )
-    out = []
-    for d in range(1, max_dist + 1):
-        out.extend(sorted(r["term"] for r in cand if r["d"] == d))
-    return out
-
-
 def candidate_queries(per_token: list[list[str]]) -> list[list[str]]:
     """Cartesian product fold (GetCorrectQueryCandidates)."""
     temp: list[list[str]] = [[]]
@@ -97,20 +73,16 @@ def correct_query(
     term_dict: DataFrame,
     counts: DataFrame,
     top: int = 1,
-    prefix_last: bool = False,
     stem_roots: "frozenset | None" = None,
     max_candidates_per_token: int = DEFAULT_MAX_CANDIDATES_PER_TOKEN,
 ) -> list[list[str]]:
-    """Tokenize + (optional stem) + vocab check + spell/prefix expand + LM
-    rank.
+    """Tokenize + (optional stem) + vocab check + spell expand + LM rank;
+    the `top` best interpretations. (Autocomplete's prefix expansion of
+    the last token runs through _batch_interps(prefix_last=True).)
 
     stem_roots: stem query tokens through the same Indonesian
     confix-stripper as the index side — searcher.go:158 stems every query
     token before the vocabulary check, so a stemmed index REQUIRES this.
-    prefix_last=True gives autocomplete semantics: the last token expands by
-    prefix match (GetMatchedWordBasedOnPrefix, spell_corrector.go:160-188)
-    instead of edit distance, and `top` interpretations return (3 in the
-    reference).
 
     Round 4: a batch of one on the batched spell spine (_batch_interps) —
     the per-query path previously issued one bounded levenshtein collect
@@ -118,7 +90,7 @@ def correct_query(
     generation + LM rank are each one job regardless of token count, and
     per-query and batch corrections share one audited code path."""
     return _batch_interps(
-        spark, [query], term_dict, counts, top=top, prefix_last=prefix_last,
+        spark, [query], term_dict, counts, top=top,
         max_candidates_per_token=max_candidates_per_token,
         stem_roots=stem_roots,
     )[0]
@@ -310,26 +282,47 @@ class BM25FIndex:
             avgdl = stats.agg(F.avg("dl")).collect()[0][0] or 1.0
             self.fields[field] = (postings, stats, float(avgdl))
 
-    def field_frame(self, field: str, query_terms: list[str]) -> DataFrame:
+    def field_frame(self, field: str, terms: "list[str] | DataFrame") -> DataFrame:
+        """The field's postings of `terms` with doc length and avgdl. A
+        list filters with isin (the per-query plan); a frame with a `term`
+        column is a broadcast semi-join (the batch plan, whose term set
+        comes from a whole query batch)."""
         postings, stats, avgdl = self.fields[field]
+        if isinstance(terms, DataFrame):
+            postings = postings.join(
+                F.broadcast(terms.select("term")), "term", "leftsemi"
+            )
+        else:
+            postings = postings.filter(F.col("term").isin(terms))
         return (
-            postings.filter(F.col("term").isin(query_terms))
-            .join(stats, "doc_id")
+            postings.join(stats, "doc_id")
             .withColumn("field", F.lit(field))
             .withColumn("avgdl", F.lit(avgdl))
         )
 
-    def field_frame_df(self, field: str, terms_df: DataFrame) -> DataFrame:
-        """field_frame with the term filter as a broadcast semi-join — the
-        batch form (the term set comes from a whole query batch, not a
-        Python list)."""
-        postings, stats, avgdl = self.fields[field]
-        return (
-            postings.join(F.broadcast(terms_df.select("term")), "term", "leftsemi")
-            .join(stats, "doc_id")
-            .withColumn("field", F.lit(field))
-            .withColumn("avgdl", F.lit(avgdl))
-        )
+
+def _term_contribs(index: BM25FIndex, terms: "list[str] | DataFrame") -> DataFrame:
+    """One posting row per (term, doc_id, field) of `terms` with its BM25F
+    `contrib` — the one scoring formula (scoreBM25Field, searcher.go:
+    249-315); a doc's score is the sum of its rows' contribs."""
+    tf = index.field_frame("name", terms).unionByName(
+        index.field_frame("address", terms)
+    )
+    df_t = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
+    idf = F.log10(F.lit(float(index.n_docs)) - F.col("df") + 0.5) - F.log10(
+        F.col("df") + 0.5
+    )
+    w = F.when(
+        F.col("field") == "name",
+        NAME_WEIGHT * (F.col("tf") / (1.0 + NAME_B * (F.col("dl") / F.col("avgdl") - 1.0))),
+    ).otherwise(
+        ADDRESS_WEIGHT * (F.col("tf") / (1.0 + NAME_B * (F.col("dl") / F.col("avgdl") - 1.0)))
+    )
+    return (
+        tf.join(F.broadcast(df_t), "term")
+        .withColumn("wtd", w)
+        .withColumn("contrib", (F.col("wtd") / (K1_BM25F + F.col("wtd"))) * idf)
+    )
 
 
 def bm25f_scores(
@@ -338,34 +331,16 @@ def bm25f_scores(
     doc_id: str = "id",
     name_col: str = "name",
     address_col: str = "address",
-    k1: float = K1_BM25F,
-    name_w: float = NAME_WEIGHT,
-    name_b: float = NAME_B,
-    addr_w: float = ADDRESS_WEIGHT,
-    addr_b: float = NAME_B,  # faithful: reference uses NAME_B for both
     index: BM25FIndex | None = None,
 ) -> DataFrame:
     """(doc_id, score) — field-weighted BM25F over name + address."""
     if index is None:
         index = BM25FIndex(places, doc_id, name_col, address_col)
-    n_docs = index.n_docs
-    tf = index.field_frame("name", query_terms).unionByName(
-        index.field_frame("address", query_terms)
+    return (
+        _term_contribs(index, query_terms)
+        .groupBy("doc_id")
+        .agg(F.sum("contrib").alias("score"))
     )
-    df_t = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    idf = F.log10(F.lit(float(n_docs)) - F.col("df") + 0.5) - F.log10(F.col("df") + 0.5)
-    w = F.when(
-        F.col("field") == "name",
-        name_w * (F.col("tf") / (1.0 + name_b * (F.col("dl") / F.col("avgdl") - 1.0))),
-    ).otherwise(
-        addr_w * (F.col("tf") / (1.0 + addr_b * (F.col("dl") / F.col("avgdl") - 1.0)))
-    )
-    scored = (
-        tf.join(F.broadcast(df_t), "term")
-        .withColumn("wtd", w)
-        .withColumn("contrib", (F.col("wtd") / (k1 + F.col("wtd"))) * idf)
-    )
-    return scored.groupBy("doc_id").agg(F.sum("contrib").alias("score"))
 
 
 def freeform_search(
@@ -410,51 +385,19 @@ def autocomplete(
 ) -> DataFrame:
     """Autocomplete (searcher.go:402-491): prefix-expand last token, top-3
     LM interpretations, AND-intersection semantics per interpretation
-    (scoreBM25FAutocomplete :493-532), BM25F rank, merge."""
+    (scoreBM25FAutocomplete :493-532), BM25F rank, merge. Scores a batch
+    of one on the batch_autocomplete plan; only the top-k differs — one
+    query needs no per-query window, so it is a TakeOrderedAndProject."""
     if index is None:
         index = BM25FIndex(places)
-    interps = correct_query(
-        spark, query, term_dict, counts, top=3, prefix_last=True,
-        stem_roots=index.stem_roots,
-    )
-    results = None
-    for qi, terms in enumerate(interps):
-        scores = bm25f_scores(places, terms, index=index)
-        # AND semantics (scoreBM25FAutocomplete, searcher.go:493-532): doc
-        # must contain every query term in name+address. Derived from the
-        # PREBUILT per-field postings — a term is in the doc iff it has a
-        # posting in either field — so no corpus re-tokenize per
-        # interpretation (the postings already carry exactly this).
-        have_all = _docs_with_all_terms(index, terms)
-        part = scores.join(have_all, "doc_id", "leftsemi").withColumn(
-            "interp", F.lit(qi)
-        )
-        results = part if results is None else results.unionByName(part)
+    scores = _autocomplete_scores(spark, term_dict, counts, [query], index)
     top = search._ranked_topk(
-        results, [F.col("interp"), F.desc("score"), F.col("doc_id")], k
+        scores, [F.col("interp"), F.desc("score"), F.col("doc_id")], k
     )
     return (
         places.join(F.broadcast(top), places["id"] == top["doc_id"])
         .select("rank", "interp", "score", "id", "name", "address")
         .orderBy("rank")
-    )
-
-
-def _docs_with_all_terms(index: "BM25FIndex", terms: list[str]) -> DataFrame:
-    """(doc_id) docs whose name+address postings cover EVERY query term —
-    the autocomplete AND-intersection from the prebuilt index (zero corpus
-    scans; the postings frames are persisted and term-filtered)."""
-    name_p, _, _ = index.fields["name"]
-    addr_p, _, _ = index.fields["address"]
-    both = name_p.select("doc_id", "term").unionByName(
-        addr_p.select("doc_id", "term")
-    )
-    return (
-        both.filter(F.col("term").isin(terms))
-        .groupBy("doc_id")
-        .agg(F.countDistinct("term").alias("nt"))
-        .filter(F.col("nt") == len(set(terms)))
-        .select("doc_id")
     )
 
 
@@ -464,11 +407,6 @@ def batch_bm25f_scores(
     index: BM25FIndex,
     interps: DataFrame,
     require_all: bool = False,
-    k1: float = K1_BM25F,
-    name_w: float = NAME_WEIGHT,
-    name_b: float = NAME_B,
-    addr_w: float = ADDRESS_WEIGHT,
-    addr_b: float = NAME_B,  # faithful: reference uses NAME_B for both
 ) -> DataFrame:
     """(query_id, interp, doc_id, score) for a whole batch of query
     interpretations — `interps` is (query_id long, interp int,
@@ -482,47 +420,24 @@ def batch_bm25f_scores(
     AND-intersection (every distinct query term must have a posting in
     name or address — searcher.go:493-532) from the same joined rows, so
     the AND check costs no extra corpus pass."""
-    n_docs = index.n_docs
     qt = interps.select(
         "query_id", "interp",
         F.explode(F.array_distinct("terms")).alias("term"),
+        F.size(F.array_distinct("terms")).alias("_n_terms"),
     )
-    terms_df = qt.select("term").distinct()
-    tf = index.field_frame_df("name", terms_df).unionByName(
-        index.field_frame_df("address", terms_df)
-    )
-    df_t = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    idf = F.log10(F.lit(float(n_docs)) - F.col("df") + 0.5) - F.log10(
-        F.col("df") + 0.5
-    )
-    w = F.when(
-        F.col("field") == "name",
-        name_w * (F.col("tf") / (1.0 + name_b * (F.col("dl") / F.col("avgdl") - 1.0))),
-    ).otherwise(
-        addr_w * (F.col("tf") / (1.0 + addr_b * (F.col("dl") / F.col("avgdl") - 1.0)))
-    )
-    contrib = (
-        tf.join(F.broadcast(df_t), "term")
-        .withColumn("wtd", w)
-        .withColumn("contrib", (F.col("wtd") / (k1 + F.col("wtd"))) * idf)
-    )
+    # a semi-join needs no distinct term set: duplicate keys on the
+    # broadcast side change nothing
     scored = (
-        F.broadcast(qt).join(contrib, "term")
+        F.broadcast(qt).join(_term_contribs(index, qt), "term")
         .repartition("query_id")
-        .groupBy("query_id", "interp", "doc_id")
+        .groupBy("query_id", "interp", "doc_id", "_n_terms")
         .agg(
             F.sum("contrib").alias("score"),
             F.countDistinct("term").alias("_nt"),
         )
     )
     if require_all:
-        need = interps.select(
-            "query_id", "interp",
-            F.size(F.array_distinct("terms")).alias("_n_terms"),
-        )
-        scored = scored.join(F.broadcast(need), ["query_id", "interp"]).filter(
-            F.col("_nt") == F.col("_n_terms")
-        )
+        scored = scored.filter(F.col("_nt") == F.col("_n_terms"))
     return scored.select("query_id", "interp", "doc_id", "score")
 
 
@@ -567,26 +482,16 @@ def batch_freeform_search(
     )
 
 
-def batch_autocomplete(
+def _autocomplete_scores(
     spark: SparkSession,
-    places: DataFrame,
     term_dict: DataFrame,
     counts: DataFrame,
     queries: list[str],
-    k: int = 10,
-    index: "BM25FIndex | None" = None,
+    index: BM25FIndex,
 ) -> DataFrame:
-    """Autocomplete over a whole query batch with a CONSTANT number of
-    Spark jobs in both query count and interpretation count: one batched
-    prefix+spell+LM pass picks the top-3 interpretations per query, then
-    ONE batched BM25F plan scores every (query, interpretation) with AND
-    semantics derived from the same joined posting rows (no corpus
-    re-tokenize — the round-2 per-interpretation rescan is gone on both
-    the batch and serving paths). Per query, rows match autocomplete().
-
-    Returns (query_id, rank, interp, score, id, name, address)."""
-    if index is None:
-        index = BM25FIndex(places)
+    """(query_id, interp, doc_id, score): one batched prefix+spell+LM pass
+    picks the top-3 interpretations per query, then ONE batched BM25F plan
+    scores every (query, interpretation) with AND semantics."""
     per_q = _batch_interps(
         spark, queries, term_dict, counts, top=3, prefix_last=True,
         stem_roots=index.stem_roots,
@@ -599,7 +504,28 @@ def batch_autocomplete(
         ],
         "query_id long, interp int, terms array<string>",
     )
-    scores = batch_bm25f_scores(index, interps, require_all=True)
+    return batch_bm25f_scores(index, interps, require_all=True)
+
+
+def batch_autocomplete(
+    spark: SparkSession,
+    places: DataFrame,
+    term_dict: DataFrame,
+    counts: DataFrame,
+    queries: list[str],
+    k: int = 10,
+    index: "BM25FIndex | None" = None,
+) -> DataFrame:
+    """Autocomplete over a whole query batch with a CONSTANT number of
+    Spark jobs in both query count and interpretation count
+    (_autocomplete_scores), ranked by a per-query top-k window. AND
+    semantics derive from the same joined posting rows (no corpus
+    re-tokenize). Per query, rows match autocomplete().
+
+    Returns (query_id, rank, interp, score, id, name, address)."""
+    if index is None:
+        index = BM25FIndex(places)
+    scores = _autocomplete_scores(spark, term_dict, counts, queries, index)
     wq = Window.partitionBy("query_id").orderBy(
         "interp", F.desc("score"), F.col("doc_id")
     )

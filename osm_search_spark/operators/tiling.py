@@ -103,29 +103,3 @@ def write_vector_tiles(
         .partitionBy("tile_coarse")
         .parquet(path)
     )
-
-
-def sfc_cluster(
-    df: DataFrame,
-    cell: str = "tile_id",
-    res: int = C.TILE_RES,
-    key: str = "hkey",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Hilbert-cluster a tiled frame: append the SFC key of ``cell`` and
-    range-partition + sort on it, so the written files' key min/max stats
-    are TIGHT 2-D neighborhoods (functions/sfc.py — the S2-id property).
-    A bbox read then touches O(perimeter) row groups via
-    ``sfc.bbox_key_ranges`` + ``sfc.key_range_filter`` instead of one
-    thin stripe per bbox column (the row-major cell_id layout); measured
-    in tools/bench_sfc.py. Opt-in: the default write_tiles layout is
-    unchanged (its oracles pin the row-major contract)."""
-    from ..functions import sfc
-
-    keyed = sfc.with_hilbert_key(df, cell, res=res, out=key)
-    parted = (
-        keyed.repartitionByRange(num_partitions, key)
-        if num_partitions
-        else keyed.repartitionByRange(key)
-    )
-    return parted.sortWithinPartitions(key)

@@ -17,8 +17,10 @@ places build:
 5. address enrichment: explicit addr:street, else nearest street 1-NN
    (indexer.go:1032-1038) — plus admin-polygon names via the PIP join.
 
-index build: postings per field + term dict + doc stats + ngram counts +
-the cells table — each one groupBy/write, replacing SPIMI spill+merge.
+index build: the term dict + ngram counts, each one groupBy/write,
+replacing SPIMI spill+merge. These and `places` are the whole served
+index: the per-field postings and doc stats derive from `places` when the
+searcher loads it (spell.BM25FIndex), so the build writes neither.
 """
 
 from __future__ import annotations
@@ -26,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import cells as C
 from ..operators import search
 from ..sources.osm import TYPE_PRECEDENCE, VALID_NODE_SEARCH_TAGS, VALID_SEARCH_TAGS
 from ..sources.osm import assemble_ways
@@ -280,46 +281,27 @@ def build_places(
 
 
 def build_index_tables(places: DataFrame) -> dict[str, DataFrame]:
-    """All index artifacts as tables (the Spark fate of the reference's five
-    on-disk artifacts, cmd/indexing/main.go:46-107 — see SURVEY §1.4):
+    """The index artifacts SparkSearcher serves (the Spark fate of the
+    reference's five on-disk artifacts, cmd/indexing/main.go:46-107 — see
+    SURVEY §1.4):
 
-      places        the doc store (bbolt kv_db.go:38-64)
-      cells         the spatial index as data (replaces rtree.dat)
-      postings_name / postings_address   per-field inverted indexes
+      places        the doc store (bbolt kv_db.go:38-64); the per-field
+                    postings and doc stats (meta.metadata) derive from it
+                    at load (spell.BM25FIndex), the kNN probes read its
+                    lat/lon (no rtree.dat)
       term_dict     string<->id dictionary (pkg/util.go:16-49)
-      doc_stats     field lengths + avg (meta.metadata, indexer.go:904-983)
       ngram_counts  n=1..4 LM counts (ngram.index, ngram_lm.go:340-418)
     """
-    from ..functions.text import ngrams
     from ..operators.ngram_lm import ngram_counts
 
-    name_toks = search.doc_tokens(places, doc_id="id", text="name")
-    addr_toks = search.doc_tokens(places, doc_id="id", text="address")
-
-    term_dict = search.term_dict(
-        name_toks.unionByName(addr_toks)
+    toks = search.doc_tokens(places, doc_id="id", text="name").unionByName(
+        search.doc_tokens(places, doc_id="id", text="address")
     )
-    out = {
+    return {
         "places": places,
-        "cells": places.select(
-            F.col("id").alias("object_id"),
-            C.latlng_to_cell("lat", "lon", C.TILE_RES).alias("cell_id"),
-        ),
-        "postings_name": search.build_postings(name_toks),
-        "postings_address": search.build_postings(addr_toks),
-        "term_dict": term_dict,
-        "doc_stats": search.doc_stats(name_toks)
-        .withColumnRenamed("dl", "len_name")
-        .join(
-            search.doc_stats(addr_toks).withColumnRenamed("dl", "len_address"),
-            "doc_id",
-            "outer",
-        ),
-        "ngram_counts": ngram_counts(
-            name_toks.unionByName(addr_toks), max_n=4
-        ),
+        "term_dict": search.term_dict(toks),
+        "ngram_counts": ngram_counts(toks, max_n=4),
     }
-    return out
 
 
 def write_tables(tables: dict[str, DataFrame], base: str) -> None:
@@ -329,10 +311,8 @@ def write_tables(tables: dict[str, DataFrame], base: str) -> None:
     new version directory, so ``base`` may be the index the input frames
     lazily read from; readers resolve tables through commit.read_table."""
     for name, df in tables.items():
-        key = {"places": "id", "cells": "cell_id"}.get(name)
-        w = df.repartitionByRange(4, key) if key else df
-        commit(df.sparkSession, f"{base}/{name}", w,
-               cell_col="cell_id" if name == "cells" else None)
+        w = df.repartitionByRange(4, "id") if name == "places" else df
+        commit(df.sparkSession, f"{base}/{name}", w)
 
 
 def build_all(
@@ -345,13 +325,15 @@ def build_all(
 ) -> dict[str, DataFrame]:
     """Full indexing program (the cmd/indexing re-expression) with
     checkpoint/resume: every artifact is a committed lineage stage, so a
-    rerun after failure resumes from the last good stage."""
+    rerun after failure resumes from the last good stage. Commits
+    `admin_polygons` and `streets` (when relations are given) and the
+    build_index_tables artifacts, and returns them by name."""
     from ..sources.osm import assemble_relation_polygons
     from . import lineage
 
-    def stage(name, build, cell_col=None):
+    def stage(name, build):
         return lineage.run_stage(
-            spark, base, name, build, input_snapshot=input_snapshot, cell_col=cell_col
+            spark, base, name, build, input_snapshot=input_snapshot
         )
 
     polys = None
@@ -372,13 +354,11 @@ def build_all(
         "places",
         lambda: build_places(ways, nodes, streets=streets, admin_polygons=polys),
     )
-    tables = build_index_tables(places)
-    out = {"places": places}
-    for name in ("cells", "postings_name", "postings_address", "term_dict",
-                 "doc_stats", "ngram_counts"):
-        df = tables[name]
-        out[name] = stage(name, lambda df=df: df,
-                          cell_col="cell_id" if name == "cells" else None)
+    out = {
+        name: df if name == "places" else stage(name, lambda df=df: df)
+        for name, df in build_index_tables(places).items()
+    }
     if polys is not None:
         out["admin_polygons"] = polys
+        out["streets"] = streets
     return out

@@ -33,6 +33,14 @@ def get_spark(
         # finer partitions keep each sort in memory and cost little
         shuffle_partitions = max(32, 2 * cpus)
 
+    # Python workers import the engine by module path and inherit the
+    # JVM's environment, not the driver's sys.path: export the package
+    # root before the JVM starts, whatever the working directory
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root, *paths])
+
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

@@ -1,18 +1,34 @@
 """SparkSearcher facade: endpoint parity with the reference's HTTP API."""
 
+import os
+
 import pytest
 
 from osm_search_spark.api import SparkSearcher
 from osm_search_spark.plans import build_pipeline as bp
 from osm_search_spark.sources import osm as osm_src
+from osm_search_spark.streaming.commit import read_pointer
 
 
 @pytest.fixture(scope="module")
-def searcher(spark, tmp_path_factory):
+def index(spark, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("index"))
     nodes, ways, rels = osm_src.synth_osm(spark)
-    bp.build_all(spark, base, ways, nodes, rels)
-    return SparkSearcher(spark, base)
+    return base, bp.build_all(spark, base, ways, nodes, rels)
+
+
+@pytest.fixture(scope="module")
+def searcher(spark, index):
+    return SparkSearcher(spark, index[0])
+
+
+def test_index_is_the_served_tables(index):
+    # the build writes what SparkSearcher reads and nothing else
+    base, tables = index
+    served = {"places", "term_dict", "ngram_counts"}
+    assert set(bp.build_index_tables(tables["places"])) == served
+    committed = {d for d in os.listdir(base) if read_pointer(f"{base}/{d}")}
+    assert committed == set(tables) == served | {"admin_polygons", "streets"}
 
 
 def test_search_endpoint(searcher):

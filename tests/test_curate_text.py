@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from osm_search_spark.plans import curate_text as ct
 from osm_search_spark.sources import synth
-from osm_search_spark.streaming.commit import read_table
+from osm_search_spark.streaming.commit import read_pointer, read_table
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "jobs"))
 
@@ -128,3 +128,28 @@ def test_curate_text_job_resume(spark, tmp_path):
     }
     assert set(c3) == set(c1)
     assert any(c3[k] != c1[k] for k in c3)
+
+
+def test_curate_text_job_span_n_rebuilds_downstream(spark, tmp_path):
+    # a changed span_n rebuilds spans AND every stage downstream of it
+    # (decon, corpus); the stages upstream of it resume
+    import curate_text as job
+
+    base = str(tmp_path / "text")
+    stages = ("clean", "quality", "dedup", "spans", "decon", "corpus")
+
+    def seqs():
+        return {s: read_pointer(f"{base}/{s}")["seq"] for s in stages}
+
+    job.run(spark, base, use_synth=True)
+    before = seqs()
+    *_, spans, decon, _ = job.run(
+        spark, base, use_synth=True, span_n=ct.DEFAULT_SPAN_N - 3
+    )
+    after = seqs()
+    assert {s for s in stages if after[s] != before[s]} == {
+        "spans", "decon", "corpus"
+    }
+    assert _ids(decon) == _ids(
+        ct.decontaminate_stage(spans, synth.curation_bench(spark))
+    )

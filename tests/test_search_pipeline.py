@@ -112,24 +112,30 @@ def test_batch_freeform_matches_per_query(spark, corpus):
 
 
 def test_batch_autocomplete_matches_per_query(spark, corpus):
+    # a batch of N ranks each query exactly as N batches of one, and
+    # autocomplete() (a batch of one with a take-ordered top-k) agrees
     places, td, counts = corpus
     queries = ["monumen nasi", "kebun binatang ra", "dunia f"]
     idx = spell.BM25FIndex(places)
+
+    def key(rows):
+        return [
+            (r["rank"], r["interp"], r["id"], round(r["score"], 9))
+            for r in rows
+        ]
+
     batch = spell.batch_autocomplete(
         spark, places, td, counts, queries, k=5, index=idx
     ).collect()
     for qid, q in enumerate(queries):
-        per = spell.autocomplete(
+        got = key(r for r in batch if r["query_id"] == qid)
+        one = key(spell.batch_autocomplete(
+            spark, places, td, counts, [q], k=5, index=idx
+        ).collect())
+        per = key(spell.autocomplete(
             spark, places, td, counts, q, k=5, index=idx
-        ).collect()
-        got = [
-            (r["rank"], r["interp"], r["id"], round(r["score"], 9))
-            for r in batch if r["query_id"] == qid
-        ]
-        want = [
-            (r["rank"], r["interp"], r["id"], round(r["score"], 9)) for r in per
-        ]
-        assert got == want, (q, got, want)
+        ).collect())
+        assert got and got == one == per, (q, got, one, per)
 
 
 def test_batch_autocomplete_job_count_constant(spark, corpus):

@@ -17,6 +17,7 @@ e.g.
 """
 
 import json
+import os
 import statistics
 import subprocess
 import sys
@@ -46,9 +47,11 @@ print("ABRESULT " + json.dumps(out))
 
 
 def run_tree(tree: str, sf_dir: str, qnames: list[str]) -> dict:
+    # Python workers import the tree's engine by module path
+    env = {**os.environ, "PYTHONPATH": os.path.abspath(tree)}
     p = subprocess.run(
         [sys.executable, "-c", RUNNER, tree, sf_dir, ",".join(qnames)],
-        capture_output=True, text=True, timeout=1200,
+        capture_output=True, text=True, timeout=1200, env=env,
     )
     for line in p.stdout.splitlines():
         if line.startswith("ABRESULT "):
