@@ -33,7 +33,7 @@ This module adds that property over the same ``(res, ix, iy)`` grid:
   range-partitioned on the key answers a bbox query with a handful of
   BETWEENs; parquet row-group stats do the seek. Hilbert merges to
   O(perimeter) ranges where the row-major id needs one range per
-  bbox row — the measurable locality win (tools/bench_sfc.py).
+  bbox row — the measurable locality win (sfc_* in tools/bench_registry.py).
 - ``morton_cte_sql`` / ``hilbert_cte_sql`` — DuckDB twin generators
   (chained CTEs, one per bit level; exact integer ops: ``xor()``,
   ``&``, ``<<`` on values far below the sign bit).

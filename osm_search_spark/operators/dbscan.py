@@ -51,7 +51,7 @@ is tiny for sub-critical densities); measured 1.5x end-to-end at 1M
 points / local[32] (44.5s -> 29.2s, identical output checksum) vs
 feeding the CC every core-core edge — the residue is fixed per-round job
 latency, which is also why small inputs don't speed up further (see
-tools/bench_dbscan.py). `block_shift=None` disables the contraction
+the dbscan entry of tools/bench_registry.py). `block_shift=None` disables the contraction
 (direct CC over all core-core edges, same output).
 """
 

@@ -99,7 +99,7 @@ def minhash_sql(
     )
 
 
-DEFAULT_LSH_MAX_BUCKET = 1000  # see tools/bench_lsh_skew.py for the cutoff
+DEFAULT_LSH_MAX_BUCKET = 1000  # cutoff: the lsh_skew bench (tools/bench_registry.py)
 _HEAVY_GRAM_LITERALS = 1000  # heavy-hitter grams kept as a literal filter
 # connected_components driver fast path cap (2 ids/edge collected; above
 # this the distributed pointer-jumping loop runs unchanged)
@@ -122,7 +122,7 @@ def lsh_candidate_pairs(
     group, cheaper handled as a GROUP by exact_dedup/cluster logic than as
     m^2/2 pairs). The cap is ON BY DEFAULT (1000: a single planted 2%
     mega-bucket in a 100k-doc corpus would otherwise emit 2x10^6 junk
-    pairs and dominate the join, tools/bench_lsh_skew.py) — pass None to
+    pairs and dominate the join; lsh_skew in tools/bench_registry.py) — pass None to
     keep every bucket on corpora known to be boilerplate-free."""
     pairs = None
     for band in bands:

@@ -25,7 +25,7 @@ is `new_docs`, the index tables are the sink state.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import ngram_lm, search
@@ -59,8 +59,8 @@ def extend_term_dict(
     """term_dict ∪ {new terms}: existing ids are untouched (queries and
     stored postings referencing them stay valid); unseen terms get
     consecutive ids starting at max_id+1, in first-seen order within the
-    new batch — the same range-partition + partition-offset assignment as
-    search.term_dict, shifted by the current max (one 1-row agg)."""
+    new batch — search.assign_term_ids, shifted by the current max (one
+    1-row agg)."""
     base_max = term_dict.agg(F.max("term_id").alias("m")).collect()[0]["m"]
     base_max = -1 if base_max is None else base_max
     fresh = (
@@ -69,40 +69,7 @@ def extend_term_dict(
         .groupBy("term")
         .agg(F.min(F.struct("doc_id", "pos")).alias("first"))
     )
-    parts = (
-        fresh.repartitionByRange(
-            id_partitions, F.col("first.doc_id"), F.col("first.pos")
-        )
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    counts = sorted(
-        parts.groupBy("_pid").count().collect(), key=lambda r: r["_pid"]
-    )
-    if not counts:
-        parts.unpersist(blocking=False)
-        return term_dict
-    offsets, acc = {}, base_max + 1
-    for r in counts:
-        offsets[r["_pid"]] = acc
-        acc += r["count"]
-    off = F.create_map(
-        *[F.lit(x) for pid_acc in offsets.items() for x in pid_acc]
-    )
-    w = Window.partitionBy("_pid").orderBy(
-        F.col("first.doc_id"), F.col("first.pos")
-    )
-    new_ids = parts.select(
-        "term",
-        (off[F.col("_pid")] + F.row_number().over(w) - 1)
-        .cast("long")
-        .alias("term_id"),
-    )
-    # materialize while the ranged layout is pinned, then free the cache
-    # (same rationale as search.term_dict: no session-lifetime leak, no
-    # boundary-resample hazard)
-    new_ids = new_ids.localCheckpoint(eager=True)
-    parts.unpersist(blocking=False)
+    new_ids = search.assign_term_ids(fresh, base_max + 1, id_partitions)
     return term_dict.unionByName(new_ids)
 
 

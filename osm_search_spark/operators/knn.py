@@ -184,7 +184,10 @@ def knn_join(
     have_extent = False
     r_prev = -1
     r = max(1, initial_ring)
+    # pend is counted once per checkpoint: the count feeds both the empty
+    # exit and the next round's fast-path comparison
     pend = pend.localCheckpoint(eager=True)
+    n_pend = pend.count()
     for _ in range(max_rounds):
         e = _coarse_scale(r)
         ring = C.annulus_cells(F.col("pix"), F.col("piy"), r, r_prev, e, res)
@@ -287,17 +290,15 @@ def knn_join(
         # finish-in-one-round case was paying. Duplicate probe ids or
         # candidate-less exhaustion finishes simply fail the equality and
         # fall through to the exact pend update below.
-        if (
-            ranked.filter(F.col("fin") & (F.col("rank") == 1)).count()
-            == pend.count()
-        ):
+        if ranked.filter(F.col("fin") & (F.col("rank") == 1)).count() == n_pend:
             carried = None
             break
         fin_ids = ranked.filter("fin").select(probe_id)
         pend = pend.filter(~exhausted_cond).join(
             fin_ids, probe_id, "leftanti"
         ).localCheckpoint(eager=True)
-        if pend.isEmpty():
+        n_pend = pend.count()
+        if n_pend == 0:
             carried = None
             break
         if not obj_persisted:
@@ -309,8 +310,9 @@ def knn_join(
         if not have_extent:
             # another round IS coming: attach the domain extent exactly
             # once, reading the persisted obj index. Deliberately AFTER
-            # the isEmpty check — the common finish-in-one-round case
-            # never pays the extent aggregate.
+            # the empty check — the common finish-in-one-round case never
+            # pays the extent aggregate. The cross join is with a 1-row
+            # aggregate, so n_pend still counts this pend.
             pend = (
                 pend.drop("r_needed")
                 .crossJoin(F.broadcast(ext))

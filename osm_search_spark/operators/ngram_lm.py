@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .search import doc_tokens  # noqa: F401  (re-export convenience)
-
 START, END, UNK = "<s>", "</s>", "<UNK>"
 BACKOFF_LAMBDA = 0.4
 

@@ -69,7 +69,22 @@ def doc_stats(tokens_df: DataFrame) -> DataFrame:
 
 def term_dict(tokens_df: DataFrame, id_partitions: int = 64) -> DataFrame:
     """Deterministic term ids: order by (first_doc, first_pos) — the
-    reference's first-seen order (pkg/util.go:30-42) made race-free.
+    reference's first-seen order (pkg/util.go:30-42) made race-free."""
+    first_seen = (
+        tokens_df.select(
+            "doc_id", F.posexplode("tokens").alias("pos", "term")
+        )
+        .groupBy("term")
+        .agg(F.min(F.struct("doc_id", "pos")).alias("first"))
+    )
+    return assign_term_ids(first_seen, 0, id_partitions)
+
+
+def assign_term_ids(
+    first_seen: DataFrame, first_id: int, id_partitions: int = 64
+) -> DataFrame:
+    """(term, term_id) for `first_seen` (term, first: struct<doc_id, pos>):
+    consecutive ids from `first_id` in (first.doc_id, first.pos) order.
 
     Ids are assigned WITHOUT a global sort window (a web-scale vocabulary
     must not funnel through one task): range-partition on the sort key,
@@ -79,13 +94,6 @@ def term_dict(tokens_df: DataFrame, id_partitions: int = 64) -> DataFrame:
     non-overlapping and the sort key (first doc, first pos) is unique per
     term, so offset + local rank == global rank regardless of where the
     sampled range boundaries fall."""
-    first_seen = (
-        tokens_df.select(
-            "doc_id", F.posexplode("tokens").alias("pos", "term")
-        )
-        .groupBy("term")
-        .agg(F.min(F.struct("doc_id", "pos")).alias("first"))
-    )
     # persist so the offsets job and the id job see one partition layout
     parts = (
         first_seen.repartitionByRange(
@@ -98,10 +106,11 @@ def term_dict(tokens_df: DataFrame, id_partitions: int = 64) -> DataFrame:
         parts.groupBy("_pid").count().collect(), key=lambda r: r["_pid"]
     )
     if not counts:
-        return parts.select(
+        parts.unpersist(blocking=False)
+        return first_seen.select(
             "term", F.lit(0).cast("long").alias("term_id")
         ).limit(0)
-    offsets, acc = {}, 0
+    offsets, acc = {}, first_id
     for r in counts:
         offsets[r["_pid"]] = acc
         acc += r["count"]

@@ -40,23 +40,13 @@ NAME_WEIGHT, NAME_B = 20.0, 0.95
 ADDRESS_WEIGHT = 1.0
 
 
-# Per-token candidate bound shared by the per-query AND batch spell paths:
-# the cartesian interpretation fold is multiplicative in it (two OOV tokens
-# at 10k candidates each would be 10^8 interpretations), and both paths
-# must agree so batch_freeform_search stays row-for-row identical to
-# freeform_search. Candidates are taken in (d, term) order either way.
-#
-# BEHAVIOR CHANGE (round 4, documented round 5): before the paths were
-# unified, the single-query correct_query pooled up to 10,000 candidates
-# per OOV token; it now shares this 64-candidate default so that
-# batch_correct_queries == [correct_query(q) for q] holds row-for-row
-# (tested). On a large dictionary where an OOV token has >64 terms within
-# edit distance 2, the LM may therefore no longer see the best candidate
-# and the correction can differ from the old behavior. Single-query
-# callers who want the old pool can afford it — pass
-# max_candidates_per_token=10000 explicitly (the fold is multiplicative,
-# so only do this when queries have few OOV tokens).
-DEFAULT_MAX_CANDIDATES_PER_TOKEN = 64
+# Spell candidates per OOV token: vocab terms within MAX_EDIT_DISTANCE,
+# the first MAX_CANDIDATES_PER_TOKEN in (d, term) order. The cartesian
+# interpretation fold is multiplicative in the bound (two OOV tokens at 10k
+# candidates each would be 10^8 interpretations); per-query and batch
+# correction share it, so batch_correct_queries == [correct_query(q) ...].
+MAX_EDIT_DISTANCE = 2
+MAX_CANDIDATES_PER_TOKEN = 64
 
 
 def candidate_queries(per_token: list[list[str]]) -> list[list[str]]:
@@ -72,13 +62,11 @@ def correct_query(
     query: str,
     term_dict: DataFrame,
     counts: DataFrame,
-    top: int = 1,
     stem_roots: "frozenset | None" = None,
-    max_candidates_per_token: int = DEFAULT_MAX_CANDIDATES_PER_TOKEN,
-) -> list[list[str]]:
+) -> list[str]:
     """Tokenize + (optional stem) + vocab check + spell expand + LM rank;
-    the `top` best interpretations. (Autocomplete's prefix expansion of
-    the last token runs through _batch_interps(prefix_last=True).)
+    the best interpretation. (Autocomplete's prefix expansion of the last
+    token runs through _batch_interps(prefix_last=True).)
 
     stem_roots: stem query tokens through the same Indonesian
     confix-stripper as the index side — searcher.go:158 stems every query
@@ -89,10 +77,8 @@ def correct_query(
     PER OOV token (linear jobs per query); now vocab probe + candidate
     generation + LM rank are each one job regardless of token count, and
     per-query and batch corrections share one audited code path."""
-    return _batch_interps(
-        spark, [query], term_dict, counts, top=top,
-        max_candidates_per_token=max_candidates_per_token,
-        stem_roots=stem_roots,
+    return batch_correct_queries(
+        spark, [query], term_dict, counts, stem_roots=stem_roots
     )[0]
 
 
@@ -101,34 +87,27 @@ def batch_correct_queries(
     queries: list[str],
     term_dict: DataFrame,
     counts: DataFrame,
-    max_dist: int = 2,
-    max_candidates_per_token: int = DEFAULT_MAX_CANDIDATES_PER_TOKEN,
     stem_roots: "frozenset | None" = None,
 ) -> list[list[str]]:
     """Spell-correct N queries with a CONSTANT number of Spark jobs.
 
-    The per-query path (correct_query) runs a vocab probe + one levenshtein
-    scan per OOV token + one LM job per query — fine for a REPL, linear in
-    jobs for a batch. This path does, for the whole batch at once:
+    For the whole batch at once:
 
       1. ONE semi-join for vocab membership of every distinct token;
       2. ONE levenshtein join of the distinct OOV tokens against the term
-         dictionary (d<=2 candidates, deterministic (d, term) order,
-         bounded per token);
+         dictionary (d<=MAX_EDIT_DISTANCE candidates, deterministic
+         (d, term) order, bounded per token);
       3. ONE query_log_prob call scoring every candidate interpretation of
          every query (the 7 count-table joins amortize across the batch);
       4. driver-side argmax per original query (tiny).
 
-    Returns the best interpretation per query, same semantics as
-    correct_query(top=1) for each.
+    Returns the best interpretation per query; correct_query is a batch of
+    one.
     """
     return [
         interps[0]
         for interps in _batch_interps(
-            spark, queries, term_dict, counts, top=1, prefix_last=False,
-            max_dist=max_dist,
-            max_candidates_per_token=max_candidates_per_token,
-            stem_roots=stem_roots,
+            spark, queries, term_dict, counts, top=1, stem_roots=stem_roots
         )
     ]
 
@@ -140,8 +119,6 @@ def _batch_interps(
     counts: DataFrame,
     top: int = 1,
     prefix_last: bool = False,
-    max_dist: int = 2,
-    max_candidates_per_token: int = DEFAULT_MAX_CANDIDATES_PER_TOKEN,
     max_prefix: int = 10000,
     stem_roots: "frozenset | None" = None,
 ) -> list[list[list[str]]]:
@@ -184,9 +161,9 @@ def _batch_interps(
         rows = (
             term_dict.crossJoin(unk_frame)
             .withColumn("d", F.levenshtein(F.col("token"), F.col("term")))
-            .filter((F.col("d") >= 1) & (F.col("d") <= max_dist))
+            .filter((F.col("d") >= 1) & (F.col("d") <= MAX_EDIT_DISTANCE))
             .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= max_candidates_per_token)
+            .filter(F.col("rn") <= MAX_CANDIDATES_PER_TOKEN)
             .select("token", "term", "d")
             .collect()
         )
@@ -358,9 +335,7 @@ def freeform_search(
     With a stemmed index, query tokens stem through the same dictionary
     (searcher.go:158)."""
     roots = index.stem_roots if index is not None else None
-    corrected = correct_query(
-        spark, query, term_dict, counts, top=1, stem_roots=roots
-    )[0]
+    corrected = correct_query(spark, query, term_dict, counts, stem_roots=roots)
     scores = bm25f_scores(places, corrected, index=index)
     # TakeOrderedAndProject top-k: per-partition top-(offset+k) + driver
     # merge; the rank window after it only sees <= offset+k rows

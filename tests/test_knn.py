@@ -145,11 +145,21 @@ def test_single_round_fast_path_skips_pend_jobs(spark, monkeypatch):
     # fast-path exit (two tiny counts) — no isEmpty probe job, and the
     # object index is never persisted (deferred persist: caching pays only
     # when a second round actually reads it). A far probe that needs many
-    # rounds must persist the index exactly once and release it on return.
+    # rounds must persist the index exactly once and release it on return,
+    # and count each pend checkpoint once: one count for pend plus one for
+    # the ranked frame per round, never a second pass (isEmpty) over the
+    # same pend rows.
     from pyspark.sql.classic.dataframe import DataFrame as CDF
 
-    persists, empties = [], []
+    persists, empties, counts, rounds = [], [], [], []
     orig_persist, orig_empty = CDF.persist, CDF.isEmpty
+    orig_count, orig_ckpt = CDF.count, CDF.localCheckpoint
+
+    def ckpt(self, *a, **k):
+        if "fin" in self.columns:  # the per-round ranked frame
+            rounds.append(1)
+        return orig_ckpt(self, *a, **k)
+
     monkeypatch.setattr(
         CDF, "persist",
         lambda self, *a, **k: (persists.append(1), orig_persist(self, *a, **k))[1],
@@ -158,6 +168,10 @@ def test_single_round_fast_path_skips_pend_jobs(spark, monkeypatch):
         CDF, "isEmpty",
         lambda self: (empties.append(1), orig_empty(self))[1],
     )
+    monkeypatch.setattr(
+        CDF, "count", lambda self: (counts.append(1), orig_count(self))[1]
+    )
+    monkeypatch.setattr(CDF, "localCheckpoint", ckpt)
 
     objects = _objects(spark)
     dense = _probes(spark, -6.05, 106.6)  # inside the random cloud
@@ -165,9 +179,15 @@ def test_single_round_fast_path_skips_pend_jobs(spark, monkeypatch):
     assert len(res) == 3
     assert not persists, "single-round call must not persist the index"
     assert not empties, "single-round call must exit via the count fast path"
+    assert len(rounds) == 1 and len(counts) == 2
 
     persists.clear()
+    counts.clear()
+    rounds.clear()
     far = _probes(spark, -7.55, 110.8)  # ~200 km away: multi-round
     res2 = knn_join(far, objects, k=3, res=14).collect()
     assert len(res2) == 3
     assert len(persists) == 1, "multi-round call persists the index once"
+    assert len(rounds) > 1
+    assert not empties, "pend is counted once, not counted and probed"
+    assert len(counts) == 2 * len(rounds), (len(counts), len(rounds))

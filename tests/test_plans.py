@@ -5,6 +5,7 @@ already limited to <= offset+k rows by TakeOrderedAndProject (top-k serving
 paths — the exchange sits ABOVE the limit in the plan tree, so it can never
 see more than a constant number of rows)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from osm_search_spark.operators import search
@@ -85,6 +86,20 @@ def test_bm25_search_topk_is_take_ordered(spark):
     assert [r["rank"] for r in sorted(rows, key=lambda r: r["rank"])] == [
         3, 4, 5, 6, 7
     ]
+
+
+@pytest.mark.parametrize(
+    "scorer",
+    [search.bm25_scores, search.bm25plus_scores, search.tfidf_scores],
+    ids=lambda f: f.__name__,
+)
+def test_text_scores_run_without_exchange(spark, scorer):
+    # round 9: the single-field scorers are map passes over the docs with
+    # the corpus statistics folded in place — no shuffle and no broadcast
+    df = scorer(_docs(spark), ["warung", "makan", "pemuda"])
+    plan = plan_str(df)
+    assert "Exchange" not in plan, plan
+    assert df.count() == 40
 
 
 def test_freeform_search_topk_is_take_ordered(spark):

@@ -74,7 +74,7 @@ def test_autocomplete_kebun_binatang_ra(spark, corpus):
 
 
 def test_batch_correct_matches_per_query(spark, corpus):
-    # the batched path must agree with correct_query(top=1) per query
+    # the batched path must agree with correct_query per query
     places, td, counts = corpus
     queries = [
         "dunia fantasi",          # all in-vocab, single candidate
@@ -84,7 +84,7 @@ def test_batch_correct_matches_per_query(spark, corpus):
         "zzzyx qwqwq",            # no candidates at all -> passthrough
     ]
     batch = spell.batch_correct_queries(spark, queries, td, counts)
-    loop = [spell.correct_query(spark, q, td, counts, top=1)[0] for q in queries]
+    loop = [spell.correct_query(spark, q, td, counts) for q in queries]
     assert batch == loop
     assert batch[1] == ["dunia", "fantasi"]
     assert batch[4] == ["zzzyx", "qwqwq"]

@@ -1,0 +1,1022 @@
+"""One bench harness: a workload registry and one runner.
+
+WORKLOADS maps a name to ``builder(spark, size) -> DataFrame``. ``size`` is
+one integer knob per workload (rows, queries, replication factor, ...);
+each builder's default is the size its BENCH/BASELINE.md rows used. A name
+not in WORKLOADS resolves to ``__spark_entry__.queries()``: gate queries
+and the sf-reading entries read ``$SPARK_GRAFT_SF_DIR``, as bench.py does,
+and gate queries ignore ``size``. Builders cache their synthetic inputs
+once per session (localCheckpoint), so the first timed run pays input
+synthesis and best-of-N with N >= 2 drops it.
+
+Usage (NAMES is a comma list, ``headline`` = bench.py's nine queries; ``-``
+keeps a default):
+
+  python tools/bench_registry.py time    NAMES [SIZE] [REPS]
+      noop sink, best-of-REPS (default 2), Spark jobs of the last run
+      (counted through a job group), then an untimed order-insensitive
+      checksum pass; one JSON line per workload plus a total line
+  python tools/bench_registry.py scaling NAMES [SIZE] [N] [REPS]
+      `time` in a fresh JVM at local[N] and local[4N] (default N = cores/4);
+      rows and checksum must match; efficiency =
+      throughput(4N) / (4 * throughput(N)), target >= 0.8
+  python tools/bench_registry.py abba    TREE_A TREE_B NAMES [SIZE] [ROUNDS]
+      same-epoch A/B: `time` against each tree's own engine and
+      __spark_entry__, a fresh JVM per tree and round, tree order
+      alternating per round (default 4 rounds); session size from
+      $SPARK_GRAFT_CPUS; prints per-workload medians and B/A
+  python tools/bench_registry.py plan    NAMES [SIZE]
+      explain("formatted") of each workload's frame
+
+e.g.  SPARK_GRAFT_SF_DIR=<sf dir> python tools/bench_registry.py time headline
+      python tools/bench_registry.py scaling dbscan 500000 2
+"""
+
+from __future__ import annotations
+
+import atexit
+import functools
+import json
+import math
+import os
+import shutil
+import statistics
+import subprocess
+import sys
+import tempfile
+import time
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SPLITS = 32  # input splits: a property of the data, fixed across core counts
+BOX = (-5.0, 105.0, 5.0, 115.0)  # minlat, minlon, maxlat, maxlon of synthetic fact tables
+UNIFORM = "(cast(xxhash64({c}, {s}) as double) / 9.223372036854776e18 + 1.0) / 2.0"
+
+_MEMO: dict = {}
+
+
+def _memo(spark, key: tuple, make):
+    """make() once per session and key: inputs built before any timed run."""
+    k = (spark.sparkContext.applicationId, *key)
+    if k not in _MEMO:
+        _MEMO[k] = make()
+    return _MEMO[k]
+
+
+def _sf() -> str:
+    try:
+        return os.environ["SPARK_GRAFT_SF_DIR"]
+    except KeyError:
+        raise SystemExit("set SPARK_GRAFT_SF_DIR to the sf directory") from None
+
+
+def _pinned(df: DataFrame, splits: int | None = SPLITS) -> DataFrame:
+    return (df if splits is None else df.repartition(splits)).localCheckpoint(eager=True)
+
+
+def _tmpdir() -> str:
+    path = tempfile.mkdtemp(prefix="bench_registry_")
+    atexit.register(shutil.rmtree, path, True)
+    return path
+
+
+def _replicated(spark, table: str, id_col: str, reps: int, *cols) -> DataFrame:
+    src = spark.read.parquet(f"{_sf()}/{table}.parquet")
+    return src.select(
+        F.explode(F.array(*[F.lit(i) for i in range(reps)])).alias("rep"), id_col, *cols
+    ).select((F.col(id_col) * reps + F.col("rep")).alias(id_col), *cols)
+
+
+# -- spatial joins and tiling ---------------------------------------------
+
+
+def flagship_scaled(spark, size=24):
+    """sf points x size (shifted copies) -> cell-cover join vs the admin
+    polygons -> exact PIP -> tile id. 128 splits stand for the file splits
+    of a large scan (the sf parquet is one small file)."""
+    from osm_search_spark.functions import cells as C
+    from osm_search_spark.operators.spatial_join import spatial_join
+    from osm_search_spark.sources import synth
+
+    def make():
+        base = synth.derive_points(spark, _sf()).repartition(128, "point_id")
+        pid = F.col("point_id") * size + F.col("rep")
+        return _pinned(
+            base.select(
+                "lat", "lon", F.explode(F.sequence(F.lit(0), F.lit(size - 1))).alias("rep"),
+                "point_id",
+            ).select(
+                pid.alias("point_id"),
+                (F.col("lat") + (pid % 1000) * 1e-7).alias("lat"),
+                (F.col("lon") + (pid % 997) * 1e-7).alias("lon"),
+            ),
+            None,
+        )
+
+    points = _memo(spark, ("flagship", _sf(), size), make)
+    joined = spatial_join(points, synth.admin_polygons(spark), res=C.JOIN_RES)
+    return joined.select(
+        "point_id", "polygon_id", C.latlng_to_cell("lat", "lon", C.TILE_RES).alias("tile_id")
+    )
+
+
+def cover_holes(spark, size=None):
+    """sf points vs one donut whose hole spans ~78% of its bbox, at grid
+    res `size` (default JOIN_RES): cover size follows the perimeter."""
+    from osm_search_spark.functions import cells as C
+    from osm_search_spark.operators.spatial_join import spatial_join
+    from osm_search_spark.sources import synth
+
+    donut = spark.createDataFrame(
+        [(0, [-7.95, -7.95, -7.40, -7.40, -7.95], [110.20, 111.00, 111.00, 110.20, 110.20],
+          [[-7.90, -7.90, -7.45, -7.45, -7.90]], [[110.25, 110.95, 110.95, 110.25, 110.25]])],
+        "polygon_id long, ring_lat array<double>, ring_lon array<double>, "
+        "holes_lat array<array<double>>, holes_lon array<array<double>>",
+    )
+    return spatial_join(synth.derive_points(spark, _sf()), donut, res=size or C.JOIN_RES)
+
+
+def _spatial_join_large_dim(spark, size=25_000, hinted=False):
+    """`size` overlapping quads (above BROADCAST_MAX_POLYGONS: the plan
+    runs unhinted) x 200k points; `hinted` raises the constant past the
+    dim so the same plan carries the broadcast hints."""
+    from osm_search_spark.operators import spatial_join as SJ
+
+    def make():
+        lat0, lon0, step, ext, cols = -7.9, 110.2, 0.02, 0.03, 160
+        la = F.lit(lat0) + (F.col("id") % cols) * step
+        lo = F.lit(lon0) + (F.col("id") / cols).cast("long") * step
+        polys = spark.range(size).select(
+            F.col("id").alias("polygon_id"),
+            F.array(la, la, la + ext, la + ext, la).alias("ring_lat"),
+            F.array(lo, lo + ext, lo + ext, lo, lo).alias("ring_lon"),
+        )
+        u = lambda c: F.pmod(F.xxhash64(c) / F.lit(2.0 ** 63) + 1.0, F.lit(1.0))  # noqa: E731
+        pts = spark.range(200_000).select(
+            F.col("id").alias("point_id"),
+            (F.lit(lat0) + u(F.col("id")) * (cols * step + ext)).alias("lat"),
+            (F.lit(lon0) + u(F.col("id") + 1) * ((size // cols) * step + ext)).alias("lon"),
+        )
+        return _pinned(pts), _pinned(polys)
+
+    pts, polys = _memo(spark, ("large_dim", size), make)
+    default = SJ.BROADCAST_MAX_POLYGONS
+    SJ.BROADCAST_MAX_POLYGONS = size if hinted else default
+    try:
+        return SJ.spatial_join(pts, polys).select("point_id", "polygon_id")
+    finally:
+        SJ.BROADCAST_MAX_POLYGONS = default
+
+
+def overlap_join(spark, size=50_000):
+    """Two layers of `size` rectangles (exact 1/32-degree steps), res 8."""
+    from osm_search_spark.operators.overlap_join import polygon_overlap_join
+
+    def layer(salt):
+        k = F.col("id") + 1
+        x0 = F.pmod(k * (7919 + salt), 4000) * 0.03125
+        y0 = F.pmod(k * (104729 + 2 * salt), 2500) * 0.03125
+        x1 = x0 + (F.pmod(k, 40) + 1) * 0.03125
+        y1 = y0 + (F.pmod(k * 31, 40) + 1) * 0.03125
+        return _pinned(spark.range(size).repartition(SPLITS).select(
+            k.cast("long").alias("polygon_id"),
+            F.array(y0, y0, y1, y1, y0).alias("ring_lat"),
+            F.array(x0, x1, x1, x0, x0).alias("ring_lon"),
+        ), None)
+
+    a, b = _memo(spark, ("overlap", size), lambda: (layer(0), layer(17)))
+    return polygon_overlap_join(a, b, res=8)
+
+
+def clip(spark, size=5000):
+    """clip_to_tiles at res 12 over `size` jagged 36-68-vertex polygons."""
+    from osm_search_spark.operators.clip import clip_to_tiles
+
+    def make():
+        rows = []
+        for pid in range(size):
+            m = 36 + 8 * (pid % 5)
+            c_lat, c_lon = -25.0 + 0.37 * (pid % 137), 90.0 + 0.41 * (pid % 149)
+            rs = [0.12 + 0.03 * ((k * 7 + pid) % 5) for k in range(m)]
+            lat = [c_lat + r * math.sin(2 * math.pi * k / m) for k, r in enumerate(rs)]
+            lon = [c_lon + r * math.cos(2 * math.pi * k / m) for k, r in enumerate(rs)]
+            rows.append((pid, lat + lat[:1], lon + lon[:1]))
+        return _pinned(spark.createDataFrame(
+            rows, "polygon_id long, ring_lat array<double>, ring_lon array<double>"
+        ))
+
+    return clip_to_tiles(_memo(spark, ("clip", size), make), res=12)
+
+
+def _star_polygons(spark, n: int) -> DataFrame:
+    """Deterministic concave 12-point stars over the fixture country box."""
+    base = spark.range(n).select(
+        F.col("id").alias("polygon_id"),
+        (F.lit(-7.88) + (F.col("id") % 40) * F.lit(0.0102)).alias("clat"),
+        (F.lit(110.27) + (F.col("id") / 40).cast("long") * F.lit(0.0137)).alias("clon"),
+        (F.lit(0.012) + (F.col("id") % 7) * F.lit(0.0026)).alias("r1"),
+    )
+
+    def ring(center, trig):
+        def vertex(k):
+            r = F.when(k % 2 == 0, F.col("r1")).otherwise(F.col("r1") * 0.45)
+            return F.col(center) + r * trig(k.cast("double") * F.lit(2.0 * math.pi / 12.0))
+        return F.transform(F.sequence(F.lit(0), F.lit(12)), vertex)
+
+    return base.select(
+        "polygon_id", ring("clat", F.cos).alias("ring_lat"), ring("clon", F.sin).alias("ring_lon")
+    )
+
+
+def rasterize(spark, size=1000):
+    """rasterize_polygons of `size` star polygons at res 14, 16 px."""
+    from osm_search_spark.operators import raster as R
+
+    return R.rasterize_polygons(_star_polygons(spark, size), res=14, px=16)
+
+
+def vectorize(spark, size=1000):
+    """vectorize_masks of the `rasterize` output (cached)."""
+    from osm_search_spark.operators import raster as R
+
+    masks = _memo(spark, ("masks", size), lambda: _pinned(rasterize(spark, size), None))
+    return R.vectorize_masks(masks, 14, 16)
+
+
+def _stitch(spark, size=800, hierarchical=False):
+    """Ring chaining of one comb raster (`size` teeth, 40 tiles tall, res
+    12, 8 px): the whole boundary in one task, or split over 2^10-tile
+    blocks and stitched."""
+    import numpy as np
+
+    from osm_search_spark.functions import cells as C
+    from osm_search_spark.operators import raster as R
+
+    def make():
+        full = bytearray(np.packbits(np.ones((8, 8), dtype=bool)).tobytes())
+        xy = [(3000 + 2 * t, y) for t in range(size) for y in range(1501, 1541)]
+        xy += [(x, 1500) for x in range(3000, 3000 + 2 * size)]  # spine
+        rast = _pinned(spark.createDataFrame(
+            [(1, 12 * C.RES_BITS_SHIFT + x * C.IX_SHIFT + y, 64, full) for x, y in xy],
+            "polygon_id long, cell_id long, n_set int, mask binary",
+        ))
+        return _pinned(R.cancel_edges(R.boundary_edges(rast, 8)), None)
+
+    edges = _memo(spark, ("comb", size), make)
+    if hierarchical:
+        return R.chain_rings_hierarchical(edges, 12, 8, 10)
+    return R.chain_rings(edges, 12, 8)
+
+
+def dissolve(spark, size=512):
+    """dissolve of a size x size lattice of unit squares in 32 x 32 blocks."""
+    from osm_search_spark.operators.dissolve import dissolve as dissolve_op
+
+    def make():
+        cells = spark.range(0, size * size, 1, 128).select(
+            (F.col("id") % size).alias("i"), (F.col("id") / size).cast("long").alias("j")
+        )
+        i, j = F.col("i").cast("double"), F.col("j").cast("double")
+        return _pinned(cells.select(
+            F.concat_ws("_", (F.col("i") / 32).cast("long"), (F.col("j") / 32).cast("long"))
+            .alias("group_key"),
+            F.array(j, j, j + 1, j + 1, j).alias("ring_lat"),
+            F.array(i, i + 1, i + 1, i, i).alias("ring_lon"),
+        ), None)
+
+    return dissolve_op(_memo(spark, ("lattice", size), make))
+
+
+def hull(spark, size=20_000_000):
+    """Per-group convex hull: `size` points in size // 2000 hashed clouds."""
+    from osm_search_spark.operators.hull import convex_hull
+
+    def make():
+        g = f"(id % {size // 2000})"
+        return _pinned(spark.range(0, size, 1, SPLITS).select(
+            F.expr(g).alias("g"),
+            F.expr(f"-5.0 + {UNIFORM.format(c=g, s=1)} * 10.0"
+                   f" + ({UNIFORM.format(c='id', s=3)} - 0.5) * 0.01").alias("lat"),
+            F.expr(f"105.0 + {UNIFORM.format(c=g, s=2)} * 10.0"
+                   f" + ({UNIFORM.format(c='id', s=4)} - 0.5) * 0.01").alias("lon"),
+        ), None)
+
+    return convex_hull(_memo(spark, ("hull", size), make), group="g")
+
+
+def dbscan(spark, size=5_000_000):
+    """Exact DBSCAN (min_pts 4) over `size` hashed-uniform points in BOX,
+    eps set for a mean eps-ball occupancy of 2 (sub-critical)."""
+    from osm_search_spark.operators.dbscan import dbscan as dbscan_op
+
+    minlat, minlon, maxlat, maxlon = BOX
+    density = size / ((maxlat - minlat) * (maxlon - minlon))
+    eps = math.sqrt(2.0 / (math.pi * density))
+    pts = _memo(spark, ("dbscan", size), lambda: _pinned(spark.range(0, size, 1, SPLITS).select(
+        F.col("id").alias("point_id"),
+        F.expr(f"{minlat} + {UNIFORM.format(c='id', s=1)} * {maxlat - minlat}").alias("lat"),
+        F.expr(f"{minlon} + {UNIFORM.format(c='id', s=2)} * {maxlon - minlon}").alias("lon"),
+    ), None))
+    return dbscan_op(pts, eps, 4, lon_scale=1.0)
+
+
+def geofence(spark, size=100_000):
+    """geofence_status of 200k track points vs `size` fences (nearest 3)."""
+    from osm_search_spark.operators.geofence import geofence_status
+
+    fences = spark.range(size).select(
+        F.concat(F.lit("f"), F.col("id")).alias("fence_name"),
+        (F.lit(-8.0) + (F.col("id") % 450) * 0.01).alias("lat"),
+        (F.lit(106.0) + (F.col("id") / 450).cast("long") * 0.02).alias("lon"),
+        F.lit(0.8).alias("radius_km"),
+    )
+    tracks = spark.range(200_000).select(
+        F.concat(F.lit("e"), (F.col("id") % 20000)).alias("query_point_id"),
+        (F.col("id") / 20000).cast("int").alias("seq"),
+        (F.lit(-8.0) + ((F.col("id") * 7919) % 4490) * 0.001).alias("lat"),
+        (F.lit(106.0) + ((F.col("id") * 104729) % 4450) * 0.001).alias("lon"),
+    )
+    return geofence_status(tracks, fences, nearest_n=3)
+
+
+def _street_grid(spark, g: int) -> DataFrame:
+    """g horizontal + g vertical 20-segment polylines over BOX."""
+    minlat, minlon, maxlat, maxlon = BOX
+    lons = [minlon + k * (maxlon - minlon) / 20 for k in range(21)]
+    lats = [minlat + k * (maxlat - minlat) / 20 for k in range(21)]
+    rows = [(1 + i, [minlat + (i + 0.5) * (maxlat - minlat) / g] * 21, lons) for i in range(g)]
+    rows += [(1 + g + i, lats, [minlon + (i + 0.5) * (maxlon - minlon) / g] * 21)
+             for i in range(g)]
+    return _pinned(spark.createDataFrame(rows, "id long, lats array<double>, lons array<double>"))
+
+
+def snap(spark, size=2_000_000):
+    """snap_to_segments of `size` points to a 100 x 2 street grid (8 km)."""
+    from osm_search_spark.operators.snap import snap_to_segments
+
+    minlat, minlon, maxlat, maxlon = BOX
+    pts = _memo(spark, ("snap", size), lambda: _pinned(spark.range(0, size, 1, SPLITS).select(
+        F.col("id").alias("point_id"),
+        (minlat + (F.col("id") * 40503 % 1000003) / 1000003.0 * (maxlat - minlat)).alias("lat"),
+        (minlon + (F.col("id") * 69621 % 999983) / 999983.0 * (maxlon - minlon)).alias("lon"),
+    ), None))
+    return snap_to_segments(pts, _memo(spark, ("grid", 100), lambda: _street_grid(spark, 100)),
+                            radius_km=8.0)
+
+
+def hmm_match(spark, size=100_000):
+    """hmm_match of `size` 10-ping trips riding the horizontal roads of a
+    100 x 2 street grid (closed-form noise)."""
+    from osm_search_spark.operators.map_match import hmm_match as hmm_match_op
+
+    minlat, minlon, maxlat, maxlon = BOX
+    trip, seq = F.col("trip_id"), F.col("seq")
+    noise = lambda salt: ((trip * salt + seq * 7919) % 2001 - 1000) / 1000.0 * 0.002  # noqa: E731
+    road_lat = minlat + ((trip % 100) + 0.5) * (maxlat - minlat) / 100
+    start_lon = minlon + (trip * 40503 % 999983) / 999983.0 * ((maxlon - minlon) * 0.5)
+    pings = _memo(spark, ("pings", size), lambda: _pinned(
+        spark.range(0, size, 1, SPLITS).select(
+            F.col("id").alias("trip_id"),
+            F.explode(F.sequence(F.lit(0), F.lit(9))).alias("seq"),
+        ).select(
+            "trip_id", seq.cast("int").alias("seq"),
+            (road_lat + noise(69621)).alias("lat"),
+            (start_lon + seq * 0.01 + noise(40503)).alias("lon"),
+        ), None))
+    return hmm_match_op(pings, _memo(spark, ("grid", 100), lambda: _street_grid(spark, 100)),
+                        radius_km=8.0)
+
+
+def hausdorff_join(spark, size=200_000):
+    """Hausdorff threshold join (d 0.002) of `size` 32-vertex random walks;
+    every 16th trip is a 2e-4-degree shifted copy of its predecessor."""
+    from osm_search_spark.operators.traj_sim import hausdorff_join as hausdorff_op
+
+    base = "(cast(id as bigint) - (case when id % 16 = 15 then 1 else 0 end))"
+    off = "(case when id % 16 = 15 then 2.0e-4 else 0.0e0 end)"
+    walk = ("transform(sequence(1, 32), (x, i) -> {c}0 + aggregate(sequence(1, i + 1), "
+            "cast(0.0 as double), (acc, j) -> acc + (case when xxhash64(b, j, {s}) % 2 = 0 "
+            "then 0.0015 else -0.0015 end)))")
+    trips = _memo(spark, ("trips", size), lambda: _pinned(
+        spark.range(0, size, 1, SPLITS).select(
+            F.col("id").alias("trip_id"),
+            F.expr(f"-5.0 + {UNIFORM.format(c=base, s=1)} * 10.0 + {off}").alias("lat0"),
+            F.expr(f"105.0 + {UNIFORM.format(c=base, s=2)} * 10.0 + {off}").alias("lon0"),
+            F.expr(base).alias("b"),
+        ).select(
+            "trip_id", F.expr(walk.format(c="lat", s=1)).alias("lats"),
+            F.expr(walk.format(c="lon", s=2)).alias("lons"),
+        ), None))
+    return hausdorff_op(trips, 0.002, lon_scale=1.0)
+
+
+def _sfc_scan(spark, size=20_000_000, curve="hilbert"):
+    """Five bbox scans over `size` world-uniform points written
+    range-partitioned + sorted on the curve's key (res 14; key ranges
+    planned at res 10)."""
+    from osm_search_spark.functions import cells as C
+    from osm_search_spark.functions import sfc
+
+    key = {"hilbert": "hkey", "morton": "zkey", "rowmajor": "cell_id"}[curve]
+
+    def make():
+        pts = spark.range(size).select(
+            F.col("id").alias("point_id"),
+            (F.pmod(F.col("id") * 40503, 1000003) / 1000003.0 * 178 - 89).alias("lat"),
+            (F.pmod(F.col("id") * 69621, 999983) / 999983.0 * 359 - 179.5).alias("lon"),
+        ).withColumn("cell_id", C.latlng_to_cell("lat", "lon", 14))
+        keyed = sfc.with_hilbert_key(pts, "cell_id", res=14, out="hkey").withColumn(
+            "zkey", sfc.morton_key("cell_id", 14))
+        root = _tmpdir()
+        for k in ("hkey", "zkey", "cell_id"):
+            keyed.repartitionByRange(SPLITS, k).sortWithinPartitions(k).write.parquet(
+                os.path.join(root, k))
+        return root
+
+    df = spark.read.parquet(os.path.join(_memo(spark, ("sfc", size), make), key))
+    scans = []
+    for bbox in [(-7.9, 110.3, -7.2, 111.1), (40.5, -74.4, 41.2, -73.3), (51.2, -0.8, 51.8, 0.5),
+                 (-34.0, 150.5, -33.4, 151.6), (35.4, 139.2, 36.0, 140.2)]:
+        kw = {} if curve == "rowmajor" else {"plan_res": 10}
+        ranges = sfc.bbox_key_ranges(14, *bbox, curve=curve, **kw)
+        exact = ((F.col("lat") >= bbox[0]) & (F.col("lon") >= bbox[1])
+                 & (F.col("lat") <= bbox[2]) & (F.col("lon") <= bbox[3]))
+        scans.append(df.filter(sfc.key_range_filter(key, ranges)).filter(exact))
+    return functools.reduce(DataFrame.unionByName, scans)
+
+
+def asof_join(spark, size=5_000_000, n_salt=None):
+    """asof_join of `size` events against size // 50 states with one hot
+    key holding ~90% of both sides; `n_salt` splits its timeline."""
+    from osm_search_spark.operators.asof import asof_join as asof_op
+
+    def side(rows, mult, val):
+        cold = F.pmod("id", F.lit(10)) == 0
+        return _pinned(spark.range(rows).select(
+            F.when(cold, F.pmod("id", 1000) + 1).otherwise(F.lit(0)).alias("k"),
+            F.pmod(F.col("id") * mult, 86_400_000).alias("ts"), val,
+        ))
+
+    left, right = _memo(spark, ("asof", size), lambda: (
+        side(size, 2654435761, F.col("id").alias("event_id")),
+        side(size // 50, 40503, (F.col("id").cast("double") / 7.0).alias("sv")),
+    ))
+    return asof_op(left, right, on="k", n_salt=n_salt)
+
+
+# -- text: search, spell, dedup, curation ---------------------------------
+
+
+def _top_terms(spark, docs: DataFrame, n: int) -> list[str]:
+    from osm_search_spark.operators import search
+
+    return [r["term"] for r in search.build_postings(search.doc_tokens(docs))
+            .groupBy("term").count().orderBy(F.desc("count"), "term").limit(n).collect()]
+
+
+def bm25_batch(spark, size=5000, vocab=60):
+    """batch_bm25_search (k 15) of `size` 3-term queries drawn from the
+    corpus's `vocab` most frequent terms, over the sf documents."""
+    from osm_search_spark.operators import search
+
+    docs = _memo(spark, ("documents", _sf()), lambda: _pinned(
+        spark.read.parquet(f"{_sf()}/documents.parquet")))
+    terms = _memo(spark, ("top_terms", _sf(), vocab), lambda: _top_terms(spark, docs, vocab))
+    pick = [F.element_at(F.array(*[F.lit(v) for v in terms]),
+                         (F.pmod(F.col("id") * m + 7, F.lit(len(terms))) + 1).cast("int"))
+            for m in (13, 29, 47)]
+    queries = spark.range(size).select(F.col("id").alias("query_id"), F.array(*pick).alias("terms"))
+    return search.batch_bm25_search(docs, queries, k=15)
+
+
+def bm25_batch_top40(spark, size=8000):
+    """bm25_batch over the 40 most frequent terms (the text scaling row)."""
+    return bm25_batch(spark, size, vocab=40)
+
+
+def _spell_index(spark, docs_key: str):
+    """(places, term_dict, ngram counts, sorted vocab) over the sf
+    documents (places None), or over places named after them (first 3
+    words = name, next 3 = address)."""
+    from osm_search_spark.operators import ngram_lm, search
+
+    def make():
+        docs = spark.read.parquet(f"{_sf()}/documents.parquet")
+        places = None
+        if docs_key == "places":
+            words = F.split(F.lower("text"), " ")
+            places = _pinned(docs.select(
+                F.col("doc_id").alias("id"),
+                F.concat_ws(" ", F.slice(words, 1, 3)).alias("name"),
+                F.concat_ws(" ", F.slice(words, 4, 3)).alias("address"),
+                F.lit(0.0).alias("lat"), F.lit(0.0).alias("lon"), F.lit("place").alias("type"),
+            ), None)
+            docs = places.select("id", F.concat_ws(" ", "name", "address").alias("text"))
+        toks = _pinned(search.doc_tokens(docs, doc_id="id" if places else "doc_id"), None)
+        term_dict = search.term_dict(toks)
+        counts = _pinned(ngram_lm.ngram_counts(toks, max_n=4, oov_threshold=None), None)
+        vocab = sorted(r["term"] for r in term_dict.select("term").collect())
+        return places, term_dict, counts, vocab
+
+    return _memo(spark, ("spell_index", _sf(), docs_key), make)
+
+
+def autocomplete_batch(spark, size=200):
+    """batch_autocomplete (k 10) of `size` "<term> <prefix>" queries over
+    places built from the sf documents."""
+    from osm_search_spark.operators import spell
+
+    places, term_dict, counts, vocab = _spell_index(spark, "places")
+    index = _memo(spark, ("bm25f", _sf()), lambda: spell.BM25FIndex(places))
+    queries = []
+    for i in range(size):
+        b = vocab[(i * 13 + 3) % len(vocab)]
+        queries.append(f"{vocab[(i * 7) % len(vocab)]} {b[: max(2, len(b) // 2)]}")
+    return spell.batch_autocomplete(spark, places, term_dict, counts, queries, k=10, index=index)
+
+
+def _spell(spark, size=100, batch=True):
+    """Spell-correct `size` two-term queries (one 1-edit typo each), as one
+    batch or one correct_query per query; a DataFrame of the corrections."""
+    from osm_search_spark.operators import spell
+
+    _, term_dict, counts, vocab = _spell_index(spark, "documents")
+
+    def mangle(t, i):
+        return t[:-1] + "zq"[i % 2] if len(t) > 3 else t
+
+    queries = []
+    for i in range(size):
+        a, b = vocab[(i * 7) % len(vocab)], vocab[(i * 13 + 3) % len(vocab)]
+        queries.append(f"{a} {mangle(b, i)}" if i % 2 else f"{mangle(a, i)} {b}")
+    if batch:
+        fixed = spell.batch_correct_queries(spark, queries, term_dict, counts)
+    else:
+        fixed = [spell.correct_query(spark, q, term_dict, counts) for q in queries]
+    return spark.createDataFrame(list(enumerate(fixed)), "query_id long, terms array<string>")
+
+
+def _skewed_docs(spark, reps: int, every: int, text) -> DataFrame:
+    """sf documents x reps; every `every`-th doc gets `text(original)`."""
+    docs = _replicated(spark, "documents", "doc_id", reps, "text")
+    return _pinned(docs.select("doc_id", F.when(
+        F.pmod("doc_id", F.lit(every)) == 0, text(F.col("text"))
+    ).otherwise(F.col("text")).alias("text")))
+
+
+def _jaccard(spark, size=10, cap="default"):
+    """ngram_jaccard_pairs (3-grams, 0.8) over sf documents x `size` where
+    1 doc in 5 ends in one shared trigram; `cap` = "default", None
+    (uncapped) or "candidates" (the replicas of the first 50 originals as
+    the candidate pair set)."""
+    from osm_search_spark.operators import dedup
+
+    docs = _memo(spark, ("jaccard", _sf(), size), lambda: _skewed_docs(
+        spark, size, 5, lambda t: F.concat(t, F.lit(" please try again"))))
+    if cap != "candidates":
+        cap = dedup.DEFAULT_LSH_MAX_BUCKET if cap == "default" else None
+        return dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.8, max_gram_freq=cap)
+
+    def make():
+        first = docs.filter((F.col("doc_id") / size).cast("long") < 50)
+        return _pinned(first.select(F.col("doc_id").alias("doc_a")).crossJoin(
+            first.select(F.col("doc_id").alias("doc_b"))
+        ).filter(F.col("doc_a") < F.col("doc_b")), None)
+
+    cand = _memo(spark, ("jaccard_candidates", _sf(), size), make)
+    return dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.8, candidates=cand)
+
+
+def _lsh(spark, size=20, capped=True):
+    """lsh_candidate_pairs over MinHash signatures of sf documents x
+    `size` where 1 doc in 50 is the same boilerplate page."""
+    from osm_search_spark.operators import dedup
+
+    def make():
+        docs = _skewed_docs(spark, size, 50, lambda t: F.lit(
+            "server error page please try again later contact support"))
+        return _pinned(dedup.minhash_signatures(docs), None)
+
+    sigs = _memo(spark, ("lsh", _sf(), size), make)
+    return dedup.lsh_candidate_pairs(
+        sigs, max_bucket_size=dedup.DEFAULT_LSH_MAX_BUCKET if capped else None)
+
+
+def cc(spark, size=200_000):
+    """connected_components of `size` 5-doc star clusters plus one
+    4096-node path (diameter 4095)."""
+    from osm_search_spark.operators.dedup import connected_components
+
+    hub = (F.col("id") / 4).cast("long") * 5
+    stars = spark.range(size * 4).select(hub.alias("doc_a"), (hub + F.col("id") % 4 + 1).alias("doc_b"))
+    chain = spark.range(4095).select((F.col("id") + size * 5).alias("doc_a"),
+                                     (F.col("id") + size * 5 + 1).alias("doc_b"))
+    return connected_components(stars.unionByName(chain))
+
+
+_VOCAB = "array(" + ",".join(f"'w{i:03d}'" for i in range(500)) + ")"
+
+
+def _words(n: int, seed: str, salt: str) -> str:
+    """SQL: n words drawn from a 500-word literal vocabulary by xxhash64."""
+    return (f"array_join(transform(sequence(1, {n}), j -> element_at({_VOCAB}, "
+            f"cast(pmod(xxhash64({seed} + j, '{salt}'), 500) as int) + 1)), ' ')")
+
+
+def dedup_spans(spark, size=200_000):
+    """dedup_spans (13-grams) over `size` ~55-word docs: 1 in 10 appends
+    one of 1000 13-token boilerplate runs, 1 in 200 clones doc i-100."""
+    from osm_search_spark.operators.dedup import dedup_spans as dedup_spans_op
+
+    def make():
+        run = "array_join(transform(sequence(1, 13), j -> concat('b', pmod(id, 1000), '_', j)), ' ')"
+        base = spark.sql(f"""
+            select id as doc_id,
+                   case when pmod(id, 10) = 0 then concat({_words(55, 'id * 97', 'corpus')}, ' ', {run})
+                        else {_words(55, 'id * 97', 'corpus')} end as text
+            from range({size}) where not (pmod(id, 200) = 199 and id >= 200)""")
+        clones = spark.range(200, size).filter(F.pmod("id", F.lit(200)) == 199).select(
+            F.col("id").alias("doc_id"), (F.col("id") - 100).alias("src")
+        ).join(base.select(F.col("doc_id").alias("src"), "text"), "src").select("doc_id", "text")
+        return _pinned(base.unionByName(clones))
+
+    return dedup_spans_op(_memo(spark, ("spans", size), make), n=13)
+
+
+def _curation_rows(n: int) -> list[tuple]:
+    """n planted-curation docs: 90% unique, 5% exact dups, 4% near dups
+    (last word changed), 1% embedding a benchmark line."""
+    from osm_search_spark.sources.synth import _cur_good_text, curation_bench_py
+
+    bench = curation_bench_py()
+    rows = []
+    for i in range(n):
+        r = i % 100
+        if r in (90, 92, 94, 96, 98):
+            text = _cur_good_text(100_000 + i - 1)
+        elif r in (91, 93, 95, 97):
+            lines = _cur_good_text(100_000 + i - 2).split("\n")
+            lines[0] = " ".join(lines[0].split(" ")[:-1] + ["variant."])
+            text = "\n".join(lines)
+        else:
+            lines = _cur_good_text(100_000 + i).split("\n")
+            if r == 99:
+                lines.insert(2, bench[i % len(bench)][1].split("\n")[0])
+            text = "\n".join(lines)
+        rows.append((i, f"src{i % 4}", "en", text))
+    return rows
+
+
+def curate_text(spark, size=20_000):
+    """plans.curate_text over `size` planted-curation docs."""
+    from osm_search_spark.plans.curate_text import curate_text as curate
+    from osm_search_spark.sources import synth
+
+    docs = _memo(spark, ("curation", size), lambda: _pinned(spark.createDataFrame(
+        _curation_rows(size), "doc_id long, source string, lang string, text string")))
+    return curate(docs, synth.curation_bench(spark))
+
+
+def decontaminate_stream(spark, size=100_000):
+    """The decontamination stream (Bloom-pruned 13-gram verdicts, one
+    parquet file per trigger) over 3 batches of `size` 50-word docs, 1 in
+    1000 carrying a planted 13-gram run, against a 5k-doc benchmark; the
+    committed verdict table."""
+    from osm_search_spark.streaming.decontaminate_stream import (
+        read_verdicts, start_decontaminate_stream,
+    )
+
+    run13 = F.lit(" " + " ".join(f"planted{i}" for i in range(13)))
+
+    def docs(lo, hi, id_col, every):
+        body = F.expr(_words(50, "id * 64", id_col))
+        return spark.range(lo, hi).select(F.col("id").alias(id_col), F.when(
+            F.pmod("id", F.lit(every)) == 0, F.concat(body, run13)).otherwise(body).alias("text"))
+
+    def make():
+        root = _tmpdir()
+        for b in range(3):
+            docs(b * size, (b + 1) * size, "doc_id", 1000).coalesce(1).write.parquet(
+                os.path.join(root, "in", f"b{b}.parquet"))
+        return root, _pinned(docs(0, 5_000, "bench_id", 500), None)
+
+    root, bench = _memo(spark, ("decon_stream", size), make)
+    out = tempfile.mkdtemp(dir=root)
+    stream = spark.readStream.schema("doc_id long, text string").option(
+        "maxFilesPerTrigger", 1).parquet(os.path.join(root, "in", "*.parquet"))
+    q = start_decontaminate_stream(stream, bench, os.path.join(out, "verdicts"),
+                                   os.path.join(out, "ck"), n=13)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return read_verdicts(spark, os.path.join(out, "verdicts"))
+
+
+# -- vectors, Bloom filters, images ---------------------------------------
+
+
+def _pq_corpus(spark, reps: int):
+    emb = spark.read.parquet(f"{_sf()}/embeddings.parquet")
+    corpus = _replicated(spark, "embeddings", "vec_id", reps, "embedding").repartition(SPLITS)
+    probes = emb.limit(1000).select(
+        (F.col("vec_id") * reps).alias("probe_id"), F.col("embedding").alias("pvec"))
+    return emb, corpus, probes
+
+
+def pq_topk(spark, size=16):
+    """pq_topk (k 10, refine 5) of 1000 probes over sf embeddings x `size`
+    (m 16, 32 centroids per subspace)."""
+    from osm_search_spark.operators import similarity as S
+
+    def make():
+        emb, corpus, probes = _pq_corpus(spark, size)
+        books = S.pq_train(emb, m=16, k=32)
+        return _pinned(S.pq_encode(corpus, books), None), books, probes
+
+    codes, books, probes = _memo(spark, ("pq", _sf(), size), make)
+    return S.pq_topk(probes, codes, books, k=10, refine_factor=5)
+
+
+def ivfpq_topk(spark, size=16):
+    """ivfpq_topk (k 10, 4 of 16 lists probed) of the pq_topk probes over
+    the same corpus."""
+    from osm_search_spark.operators import similarity as S
+
+    def make():
+        _, corpus, probes = _pq_corpus(spark, size)
+        indexed, cent, books = S.ivfpq_build(corpus, n_centroids=16, m=16, kc=32)
+        return _pinned(indexed, None), cent, books, probes
+
+    indexed, cent, books, probes = _memo(spark, ("ivfpq", _sf(), size), make)
+    return S.ivfpq_topk(probes, indexed, cent, books, k=10, n_probe=4)
+
+
+def _ivfpq_hotlist(spark, size=2_000_000, salt=False):
+    """ivfpq_topk (k 10, 8 of 64 lists probed) of 64 probes over `size`
+    32-d vectors, half in one inverted list, with the LUT broadcast budget
+    forced below the LUT size (shuffled ADC join); `salt` spreads the hot
+    list."""
+    from osm_search_spark.operators import similarity as S
+
+    def make():
+        hot = ", ".join(["10.0d + rand_u * 0.01d"] + ["rand_v * 0.01d"] * 31)
+        spread = ", ".join(f"sin(cast(id * {3 + j} as double)) * 3.0d" for j in range(32))
+        corpus = spark.range(size).withColumn(
+            "rand_u", F.sin(F.col("id").cast("double"))
+        ).withColumn("rand_v", F.cos(F.col("id").cast("double"))).select(
+            F.col("id").alias("vec_id"),
+            F.when(F.pmod("id", F.lit(2)) == 0, F.expr(f"array({hot})"))
+            .otherwise(F.expr(f"array({spread})")).alias("embedding"),
+        )
+        indexed, cent, books = S.ivfpq_build(corpus, n_centroids=64, m=8, kc=16)
+        probes = corpus.filter(F.col("vec_id") < 64).select(
+            F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pvec"))
+        return _pinned(indexed, None), cent, books, _pinned(probes, None)
+
+    indexed, cent, books, probes = _memo(spark, ("hotlist", size), make)
+    budget = S.DEFAULT_ADC_BROADCAST_MB
+    S.DEFAULT_ADC_BROADCAST_MB = 0.0005
+    try:
+        return S.ivfpq_topk(probes, indexed, cent, books, hot_list_salt=salt, k=10, n_probe=8)
+    finally:
+        S.DEFAULT_ADC_BROADCAST_MB = budget
+
+
+def bloom_prune(spark, size=16):
+    """bloom_prune of the sf lineitem keys by 50k order keys with an
+    m = 2^size bit filter (2^16: Column kernel, 2^24: Arrow kernel)."""
+    from osm_search_spark.functions import bloom
+
+    def make():
+        orders = spark.read.parquet(f"{_sf()}/orders.parquet")
+        small = orders.filter(F.col("o_orderkey") % 3 == 0).limit(50_000).select(
+            F.col("o_orderkey").cast("string").alias("k"))
+        big = spark.read.parquet(f"{_sf()}/lineitem.parquet").select(
+            F.col("l_orderkey").cast("string").alias("k"), "l_quantity")
+        return _pinned(small, None), _pinned(big, None)
+
+    small, big = _memo(spark, ("bloom", _sf()), make)
+    m = 1 << size
+    words = _memo(spark, ("bloom_words", _sf(), m),
+                  lambda: bloom.bloom_words(bloom.bloom_build(small, "k", m_bits=m), m))
+    return bloom.bloom_prune(big, words, "k", m_bits=m)
+
+
+def phash_verify(spark, size=4000):
+    """verify_phash over `size` synthesized images (synthesis in the plan)."""
+    from osm_search_spark.operators import image_ops
+    from osm_search_spark.sources import images
+
+    return image_ops.verify_phash(images.images_table(spark, size, partitions=64))
+
+
+def bucket_resize(spark, size=4000):
+    """bucket_resize (decode, exact resample, PNG encode) of `size` images."""
+    from osm_search_spark.operators import image_ops
+    from osm_search_spark.sources import images
+
+    return image_ops.bucket_resize(_memo(spark, ("images", size), lambda: _pinned(
+        images.images_table(spark, size))))
+
+
+WORKLOADS = {
+    "flagship_scaled": flagship_scaled,
+    "cover_holes": cover_holes,
+    "spatial_join_large_dim": _spatial_join_large_dim,
+    "spatial_join_large_dim_hinted": functools.partial(_spatial_join_large_dim, hinted=True),
+    "overlap_join": overlap_join,
+    "clip": clip,
+    "rasterize": rasterize,
+    "vectorize": vectorize,
+    "stitch_single": _stitch,
+    "stitch_hierarchical": functools.partial(_stitch, hierarchical=True),
+    "dissolve": dissolve,
+    "hull": hull,
+    "dbscan": dbscan,
+    "geofence": geofence,
+    "snap": snap,
+    "hmm_match_grid": hmm_match,
+    "hausdorff_join": hausdorff_join,
+    "sfc_hilbert": _sfc_scan,
+    "sfc_morton": functools.partial(_sfc_scan, curve="morton"),
+    "sfc_rowmajor": functools.partial(_sfc_scan, curve="rowmajor"),
+    "asof_join": asof_join,
+    "asof_join_salted": functools.partial(asof_join, n_salt=32),
+    "bm25_batch": bm25_batch,
+    "bm25_batch_top40": bm25_batch_top40,
+    "autocomplete_batch": autocomplete_batch,
+    "spell_batch": _spell,
+    "spell_loop": functools.partial(_spell, batch=False),
+    "jaccard_skew": _jaccard,
+    "jaccard_skew_uncapped": functools.partial(_jaccard, cap=None),
+    "jaccard_skew_candidates": functools.partial(_jaccard, cap="candidates"),
+    "lsh_skew": _lsh,
+    "lsh_skew_uncapped": functools.partial(_lsh, capped=False),
+    "cc": cc,
+    "dedup_spans_planted": dedup_spans,
+    "curate_text_planted": curate_text,
+    "decontaminate_stream": decontaminate_stream,
+    "pq_topk": pq_topk,
+    "ivfpq_topk": ivfpq_topk,
+    "ivfpq_hotlist": _ivfpq_hotlist,
+    "ivfpq_hotlist_salted": functools.partial(_ivfpq_hotlist, salt=True),
+    "bloom_prune": bloom_prune,
+    "phash_verify": phash_verify,
+    "bucket_resize": bucket_resize,
+}
+
+
+# -- runner -----------------------------------------------------------------
+
+
+def resolve(name: str):
+    """The registry builder, else the gate query of that name."""
+    if name in WORKLOADS:
+        return WORKLOADS[name]
+    import __spark_entry__
+
+    query = __spark_entry__.queries()[name]
+    return lambda spark, size=None: query(spark, _sf())
+
+
+def _build(spark, name: str, size: int | None) -> DataFrame:
+    build = resolve(name)
+    return build(spark) if size is None else build(spark, size)
+
+
+def _noop(df: DataFrame) -> None:
+    # every column materializes (count() would let Catalyst prune them)
+    df.write.format("noop").mode("overwrite").save()
+
+
+def checksum(df: DataFrame) -> tuple[int, int | None]:
+    """(rows, bit_xor of xxhash64 over every column): order-insensitive;
+    top-level floats are rounded to 6 dp, maps hashed as sorted entries."""
+    cols = []
+    for f in df.schema.fields:
+        c = df[f"`{f.name}`"]
+        if isinstance(f.dataType, (T.DoubleType, T.FloatType)):
+            c = F.round(c, 6)
+        elif isinstance(f.dataType, T.MapType):
+            c = F.array_sort(F.map_entries(c))
+        cols.append(c)
+    row = df.agg(F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64(*cols)).alias("x")).first()
+    return row["n"], row["x"]
+
+
+def time_workloads(spark, names: list[str], size: int | None = None, reps: int = 2) -> list[dict]:
+    """Best-of-`reps` noop-sink wall time (builder call included) per
+    workload, Spark jobs of the last run, and an untimed checksum pass."""
+    sc = spark.sparkContext
+    if any(n not in WORKLOADS for n in names):
+        _noop(resolve("tile_assign")(spark))  # JVM + parquet footers, as bench.py
+    results = []
+    for name in names:
+        best, jobs = float("inf"), 0
+        for i in range(reps):
+            group = f"bench-{name}-{i}"
+            sc.setJobGroup(group, name)
+            t0 = time.perf_counter()
+            df = _build(spark, name, size)
+            _noop(df)
+            best = min(best, time.perf_counter() - t0)
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setJobGroup("bench-checksum", name)
+        rows, ck = checksum(df)
+        results.append(dict(name=name, size=size, best_s=round(best, 3), jobs=jobs,
+                            rows=rows, checksum=ck))
+        print(json.dumps(results[-1]), flush=True)
+    sc.setJobGroup("bench-idle", "idle")
+    return results
+
+
+def _time_child(names: str, size, reps, env: dict, cwd: str | None = None) -> dict:
+    """`time` in a fresh JVM; {name: result}."""
+    p = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "time", names, str(size or "-"), str(reps)],
+        capture_output=True, text=True, env={**os.environ, **env}, cwd=cwd,
+    )
+    rows = [json.loads(line) for line in p.stdout.splitlines() if line.startswith('{"name"')]
+    if p.returncode or not rows:
+        raise RuntimeError(f"time {names} failed:\n{p.stderr[-3000:]}")
+    return {r["name"]: r for r in rows}
+
+
+def scaling(names: list[str], size, n: int, reps: int) -> None:
+    for name in names:
+        lo, hi = (_time_child(name, size, reps, {"SPARK_GRAFT_CPUS": str(c)})[name]
+                  for c in (n, 4 * n))
+        if (lo["rows"], lo["checksum"]) != (hi["rows"], hi["checksum"]):
+            raise RuntimeError(f"{name}: output differs between levels: {lo} vs {hi}")
+        eff = lo["best_s"] / (4 * hi["best_s"])
+        print(json.dumps(dict(name=name, n=lo, n4=hi, efficiency=round(eff, 3))), flush=True)
+
+
+def abba(tree_a: str, tree_b: str, names: list[str], size, rounds: int) -> None:
+    runs: dict[str, dict[str, list[dict]]] = {"A": {}, "B": {}}
+    trees = [("A", tree_a), ("B", tree_b)]
+    for r in range(rounds):
+        for label, tree in trees if r % 2 == 0 else trees[::-1]:
+            # the child imports the tree's engine, __spark_entry__ and bench.py
+            tree = os.path.abspath(tree)
+            res = _time_child(",".join(names), size, 2, {"PYTHONPATH": tree}, cwd=tree)
+            for name, row in res.items():
+                runs[label].setdefault(name, []).append(row)
+            print(f"round {r} {label}: " + json.dumps({n: v["best_s"] for n, v in res.items()}),
+                  flush=True)
+    print(f"\n{'workload':28s} {'A_med':>8s} {'B_med':>8s} {'B/A':>6s}  same_output")
+    tot = {"A": 0.0, "B": 0.0}
+    for name in names:
+        med = {k: statistics.median(x["best_s"] for x in runs[k][name]) for k in "AB"}
+        same = len({(x["rows"], x["checksum"]) for k in "AB" for x in runs[k][name]}) == 1
+        for k in "AB":
+            tot[k] += med[k]
+        print(f"{name:28s} {med['A']:8.3f} {med['B']:8.3f} {med['B'] / med['A']:6.3f}  {same}")
+    print(f"{'TOTAL':28s} {tot['A']:8.3f} {tot['B']:8.3f} {tot['B'] / tot['A']:6.3f}")
+
+
+def plan(spark, names: list[str], size) -> None:
+    for name in names:
+        df = _build(spark, name, size)
+        print(f"== {name}\n" + df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"))
+
+
+def main(argv: list[str]) -> None:
+    def arg(i, default=None):
+        return argv[i] if len(argv) > i and argv[i] != "-" else default
+
+    def names(i):
+        from bench import HEADLINE
+
+        return [q for n in argv[i].split(",") for q in (HEADLINE if n == "headline" else [n])]
+
+    def size(i):
+        return None if arg(i) is None else int(arg(i))
+
+    mode = argv[0]
+    if mode == "abba":
+        return abba(argv[1], argv[2], names(3), size(4), int(arg(5, 4)))
+    if mode == "scaling":
+        n = int(arg(3, max(1, (os.cpu_count() or 4) // 4)))
+        return scaling(names(1), size(2), n, int(arg(4, 2)))
+
+    from osm_search_spark.session import get_spark
+
+    spark = get_spark("bench_registry")
+    spark.sparkContext.setLogLevel("ERROR")
+    if mode == "plan":
+        return plan(spark, names(1), size(2))
+    results = time_workloads(spark, names(1), size(2), int(arg(3, 2)))
+    print(json.dumps(dict(total_s=round(sum(r["best_s"] for r in results), 3),
+                          cpus=spark.sparkContext.defaultParallelism)))
+
+
+if __name__ == "__main__":
+    # appended, not prepended: an abba child's PYTHONPATH picks the tree
+    sys.path.append(ROOT)
+    main(sys.argv[1:] or ["time", "headline"])
