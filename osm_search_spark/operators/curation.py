@@ -253,7 +253,6 @@ def pack_sequences(
     budget: int,
     doc_id: str = "doc_id",
     text: str = "text",
-    id_partitions: int = 64,
 ) -> DataFrame:
     """(doc_id, n_tokens, tok_offset, chunk_first, chunk_last) — concat-
     chunk sequence packing (the GPT training-data shape): documents
@@ -263,8 +262,9 @@ def pack_sequences(
     doc.
 
     The global cumsum never funnels through a single-partition window:
-    range-partition on doc_id, per-partition token totals (one bounded
-    collect of <= id_partitions rows) become partition offsets, and a
+    range-partition on doc_id (no partition count: AQE sizes the shuffle
+    and merges only adjacent ranges), per-partition token totals (one
+    collect of a row per partition) become partition offsets, and a
     partition-LOCAL running sum completes the prefix — the zipWithIndex
     pattern generalized from ranks to weighted prefix sums (same recipe
     as search.term_dict ids). Empty docs get chunk_last == chunk_first.
@@ -279,17 +279,18 @@ def pack_sequences(
         F.col(doc_id).alias("doc_id"),
         F.size(tokenize_simple(F.col(text))).cast("long").alias("n_tokens"),
     )
+    # checkpoint so the offsets job and the offset window see one layout
+    # (a persisted plan would keep its final shuffle uncoalesced)
     parts = (
-        base.repartitionByRange(id_partitions, "doc_id")
+        base.repartitionByRange("doc_id")
         .withColumn("_pid", F.spark_partition_id())
-        .persist()
+        .localCheckpoint(eager=True)
     )
     totals = sorted(
         parts.groupBy("_pid").agg(F.sum("n_tokens").alias("t")).collect(),
         key=lambda r: r["_pid"],
     )
     if not totals:
-        parts.unpersist(blocking=False)
         return base.select(
             "doc_id", "n_tokens",
             F.lit(0).cast("long").alias("tok_offset"),
@@ -325,12 +326,8 @@ def pack_sequences(
             F.floor(F.col("tok_offset") / budget),
         ).cast("long").alias("chunk_last"),
     )
-    # materialize while the ranged layout is pinned, then free the cache
-    # (search.term_dict discipline: an unpersist-then-recompute could
-    # resample range boundaries => wrong offsets)
-    out = out.localCheckpoint(eager=True)
-    parts.unpersist(blocking=False)
-    return out
+    # materialize: the window would otherwise re-shuffle on every use
+    return out.localCheckpoint(eager=True)
 
 
 def perplexity_filter(

@@ -53,9 +53,7 @@ def upsert_doc_stats(stats: DataFrame, new_tokens: DataFrame) -> DataFrame:
     return kept.unionByName(delta)
 
 
-def extend_term_dict(
-    term_dict: DataFrame, new_tokens: DataFrame, id_partitions: int = 64
-) -> DataFrame:
+def extend_term_dict(term_dict: DataFrame, new_tokens: DataFrame) -> DataFrame:
     """term_dict ∪ {new terms}: existing ids are untouched (queries and
     stored postings referencing them stay valid); unseen terms get
     consecutive ids starting at max_id+1, in first-seen order within the
@@ -69,7 +67,7 @@ def extend_term_dict(
         .groupBy("term")
         .agg(F.min(F.struct("doc_id", "pos")).alias("first"))
     )
-    new_ids = search.assign_term_ids(fresh, base_max + 1, id_partitions)
+    new_ids = search.assign_term_ids(fresh, base_max + 1)
     return term_dict.unionByName(new_ids)
 
 

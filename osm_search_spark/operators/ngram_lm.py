@@ -73,26 +73,28 @@ def _padded(tokens_col, n: int):
 def ngram_counts(
     tokens_df: DataFrame, max_n: int = 4, oov_threshold: int | None = 2
 ) -> DataFrame:
-    """(n, gram, count) for n=1..max_n — one explode+groupBy pass."""
+    """(n, gram, count) for n=1..max_n — one explode+groupBy pass, so
+    the map stage runs one task per input partition for every n."""
     if oov_threshold:
         tokens_df = replace_oov(tokens_df, oov_threshold)
     def grams_for(n: int):
         padded = _padded(F.col("tokens"), n)
         count_expr = F.greatest(F.size(padded) - (n - 1), F.lit(0))
 
-        def slice_gram(i):  # one-arg lambda: pyspark passes (elem, idx) to 2-arg
-            return F.concat_ws(" ", F.slice(padded, i, n))
+        def tagged_gram(i):  # one-arg lambda: pyspark passes (elem, idx) to 2-arg
+            return F.struct(
+                F.lit(n).alias("n"),
+                F.concat_ws(" ", F.slice(padded, i, n)).alias("gram"),
+            )
 
-        return F.transform(F.sequence(F.lit(1), count_expr), slice_gram)
+        return F.transform(F.sequence(F.lit(1), count_expr), tagged_gram)
 
-    parts = [
-        tokens_df.select(F.lit(n).alias("n"), F.explode(grams_for(n)).alias("gram"))
-        for n in range(1, max_n + 1)
-    ]
-    allg = parts[0]
-    for p in parts[1:]:
-        allg = allg.unionByName(p)
-    return allg.groupBy("n", "gram").agg(F.count("*").alias("count"))
+    grams = F.flatten(F.array(*[grams_for(n) for n in range(1, max_n + 1)]))
+    return (
+        tokens_df.select(F.inline(grams))
+        .groupBy("n", "gram")
+        .agg(F.count("*").alias("count"))
+    )
 
 
 def total_word_freq(counts: DataFrame) -> int:

@@ -67,7 +67,7 @@ def doc_stats(tokens_df: DataFrame) -> DataFrame:
     return tokens_df.select("doc_id", F.size("tokens").alias("dl"))
 
 
-def term_dict(tokens_df: DataFrame, id_partitions: int = 64) -> DataFrame:
+def term_dict(tokens_df: DataFrame) -> DataFrame:
     """Deterministic term ids: order by (first_doc, first_pos) — the
     reference's first-seen order (pkg/util.go:30-42) made race-free."""
     first_seen = (
@@ -77,12 +77,10 @@ def term_dict(tokens_df: DataFrame, id_partitions: int = 64) -> DataFrame:
         .groupBy("term")
         .agg(F.min(F.struct("doc_id", "pos")).alias("first"))
     )
-    return assign_term_ids(first_seen, 0, id_partitions)
+    return assign_term_ids(first_seen, 0)
 
 
-def assign_term_ids(
-    first_seen: DataFrame, first_id: int, id_partitions: int = 64
-) -> DataFrame:
+def assign_term_ids(first_seen: DataFrame, first_id: int) -> DataFrame:
     """(term, term_id) for `first_seen` (term, first: struct<doc_id, pos>):
     consecutive ids from `first_id` in (first.doc_id, first.pos) order.
 
@@ -90,23 +88,22 @@ def assign_term_ids(
     must not funnel through one task): range-partition on the sort key,
     partition-LOCAL row_number, then add per-partition offsets (the
     zipWithIndex pattern, SURVEY §2.11). The only collect is one count per
-    partition (<= id_partitions rows). Range partitions are ordered and
-    non-overlapping and the sort key (first doc, first pos) is unique per
-    term, so offset + local rank == global rank regardless of where the
-    sampled range boundaries fall."""
-    # persist so the offsets job and the id job see one partition layout
+    partition. The range shuffle takes no partition count, so AQE sizes it
+    to the vocabulary (coalescing merges only adjacent ranges). Range
+    partitions are ordered and non-overlapping and the sort key (first
+    doc, first pos) is unique per term, so offset + local rank == global
+    rank regardless of where the range boundaries fall."""
+    # checkpoint so the offsets job and the id job see one partition
+    # layout (a persisted plan would keep its final shuffle uncoalesced)
     parts = (
-        first_seen.repartitionByRange(
-            id_partitions, F.col("first.doc_id"), F.col("first.pos")
-        )
+        first_seen.repartitionByRange(F.col("first.doc_id"), F.col("first.pos"))
         .withColumn("_pid", F.spark_partition_id())
-        .persist()
+        .localCheckpoint(eager=True)
     )
     counts = sorted(
         parts.groupBy("_pid").count().collect(), key=lambda r: r["_pid"]
     )
     if not counts:
-        parts.unpersist(blocking=False)
         return first_seen.select(
             "term", F.lit(0).cast("long").alias("term_id")
         ).limit(0)
@@ -126,13 +123,9 @@ def assign_term_ids(
         .cast("long")
         .alias("term_id"),
     )
-    # materialize the ids while the ranged layout is pinned, then free the
-    # cache — returning a frame that still depends on `parts` would leak
-    # the cached blocks for the session's lifetime (and an unpersist-then-
-    # recompute could resample different range boundaries => wrong ids)
-    ids = ids.localCheckpoint(eager=True)
-    parts.unpersist(blocking=False)
-    return ids
+    # materialize the ids: the window would otherwise re-shuffle the
+    # vocabulary on every use of the returned frame
+    return ids.localCheckpoint(eager=True)
 
 
 def bm25_scores(

@@ -39,6 +39,8 @@ doubles).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -83,7 +85,7 @@ def _hillshade_expr(azimuth_deg: float, zenith_deg: float) -> str:
 def _d8_expr() -> str:
     """ESRI D8 code via a greatest-of-8 cascade over drop/distance —
     ONE text both engines; ties to the smallest code."""
-    s2 = "1.4142135623730951"  # repr(math.sqrt(2)) — identical literal
+    s2 = dlit(math.sqrt(2.0))
     drops = [
         ("1", "(z_c - z_e)"),
         ("2", f"((z_c - z_se) / {s2})"),

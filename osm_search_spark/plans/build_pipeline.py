@@ -311,7 +311,7 @@ def write_tables(tables: dict[str, DataFrame], base: str) -> None:
     new version directory, so ``base`` may be the index the input frames
     lazily read from; readers resolve tables through commit.read_table."""
     for name, df in tables.items():
-        w = df.repartitionByRange(4, "id") if name == "places" else df
+        w = df.repartitionByRange("id") if name == "places" else df
         commit(df.sparkSession, f"{base}/{name}", w)
 
 

@@ -18,7 +18,7 @@ its whole subtree N times). Each operator keeps its own 100 TB
 discipline (hash-grouped dedup, banded LSH — never all-pairs; scan-side
 Bloom prune in decontamination; range-partitioned prefix sums in
 packing), so the composition inherits it: the only frames ever collected
-are bounded (partition token totals, <= id_partitions rows).
+are bounded (partition token totals, one row per range partition).
 
 No reference analog: the reference's end-to-end program is the indexing
 chain (cmd/indexing/main.go:46-107), whose Spark analog is

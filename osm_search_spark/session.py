@@ -1,8 +1,9 @@
 """SparkSession factory tuned for the spatial-join + tiling workload.
 
 Local-mode defaults mirror what we would set on a real multi-executor
-cluster: AQE on (runtime re-plan + skew-join splitting), Arrow enabled for
-all pandas-UDF exchange, shuffle partitions sized to the parallelism level.
+cluster: AQE on (runtime re-plan, partition coalescing, skew-join
+splitting), Arrow enabled for all pandas-UDF exchange, and an initial
+shuffle width that AQE coalesces down to what each shuffle carries.
 """
 
 from __future__ import annotations
@@ -18,19 +19,26 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession.
+    """Build a SparkSession, or return the live one untouched.
 
     ``cpus`` controls local[] parallelism; defaults to $SPARK_GRAFT_CPUS or
-    all cores. ``shuffle_partitions`` defaults to 2x cpus — small enough to
-    avoid tiny-task overhead at test scale, and on a real cluster it would
-    be set to ~2-3x total executor cores.
+    all cores. ``shuffle_partitions`` is the initial shuffle width AQE
+    coalesces from; defaults to max(32, 2x cpus).
+
+    A live session keeps its settings: its local[] width cannot change,
+    and re-applying another call's shuffle width or ``extra_conf`` would
+    silently change every later query in the process.
     """
+    live = SparkSession.getActiveSession()
+    if live is not None:
+        return live
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
         # floor of 32: with few cores, 2x-cores partitions make huge
         # per-partition sorts that spill (measured superlinear slowdowns);
-        # finer partitions keep each sort in memory and cost little
+        # finer partitions keep each sort in memory, and AQE coalesces
+        # the ones a small shuffle leaves nearly empty
         shuffle_partitions = max(32, 2 * cpus)
 
     # Python workers import the engine by module path and inherit the
@@ -48,10 +56,14 @@ def get_spark(
         .config("spark.default.parallelism", str(cpus))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
-        # coalescing measured 2.6x SLOWER on shuffle-heavy stages in this
-        # single-JVM sandbox (BENCH/BASELINE.md); skew splitting stays on.
-        # On a real cluster revisit: coalescing trims tiny-task overhead.
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        # coalescing merges adjacent small shuffle partitions, so a shuffle
+        # runs as many tasks as its bytes need: cold batch work pays per
+        # task, not per byte. At 4 cores the tile_geocode_serve perfbench
+        # cycle went 62.7 -> 44.6 s (median of 4 pairs) and its index
+        # build 973 -> 31 tasks (BENCH/BASELINE.md, AQE coalescing).
+        # Stages that are CPU-heavy over few bytes spread explicitly
+        # (repartition(defaultParallelism), which AQE never coalesces).
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")

@@ -197,19 +197,29 @@ def test_deterministic_sample_stability(spark):
         deterministic_sample(docs, 1.5)
 
 
-def test_pack_sequences_offsets_and_chunks(spark):
-    from pyspark.sql import functions as F
-
+def test_pack_sequences_offsets_and_chunks(spark, set_conf):
     from osm_search_spark.operators.curation import pack_sequences
 
     docs = spark.createDataFrame(
         [(i, " ".join(["w"] * (3 + i % 5))) for i in range(200)],
         "doc_id long, text string",
     )
-    out = sorted(
-        (r["doc_id"], r["n_tokens"], r["tok_offset"], r["chunk_first"], r["chunk_last"])
-        for r in pack_sequences(docs, budget=16, id_partitions=8).collect()
-    )
+    # offsets must not depend on the range layout: 7 vs 64 range
+    # partitions, and those 64 after AQE coalesces adjacent ones (a
+    # 256-byte target merges them into 22 uneven groups)
+    set_conf("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    set_conf("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
+    set_conf("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256b")
+    layouts = []
+    for n, coalesce in ((7, "false"), (64, "false"), (64, "true")):
+        set_conf("spark.sql.shuffle.partitions", n)
+        set_conf("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
+        layouts.append(sorted(
+            (r["doc_id"], r["n_tokens"], r["tok_offset"], r["chunk_first"], r["chunk_last"])
+            for r in pack_sequences(docs, budget=16).collect()
+        ))
+    out = layouts[0]
+    assert layouts[1] == layouts[2] == out
     # offsets are the exact prefix sums in doc_id order (range partition +
     # local window must reproduce the single-stream cumsum)
     acc = 0

@@ -69,13 +69,22 @@ def test_term_dict_has_no_single_partition_exchange(spark):
     assert got == want
 
 
-def test_term_dict_many_partitions_ids_stay_global(spark):
+def test_term_dict_many_partitions_ids_stay_global(spark, set_conf):
+    # ids must not depend on the range layout: 7 ranges, one range per
+    # term (64 asked for 11 terms), and those ranges after AQE coalesces
+    # adjacent ones (a 256-byte target merges them into uneven groups)
     toks = search.doc_tokens(_docs(spark)).repartition(16)
-    a = {r["term"]: r["term_id"]
-         for r in search.term_dict(toks, id_partitions=7).collect()}
-    b = {r["term"]: r["term_id"]
-         for r in search.term_dict(toks, id_partitions=64).collect()}
-    assert a == b
+    set_conf("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    set_conf("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
+    set_conf("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256b")
+    layouts = []
+    for n, coalesce in ((7, "false"), (64, "false"), (64, "true")):
+        set_conf("spark.sql.shuffle.partitions", n)
+        set_conf("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
+        layouts.append(
+            {r["term"]: r["term_id"] for r in search.term_dict(toks).collect()}
+        )
+    assert layouts[0] == layouts[1] == layouts[2]
 
 
 def test_bm25_search_topk_is_take_ordered(spark):
@@ -362,3 +371,35 @@ def test_spread_scan_stats_guard(spark, tmp_path):
         assert spread_scan(df2) is df2, "wide-estimate scan must be a no-op"
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_index_build_fan_out_is_sized_to_the_data(spark, set_conf):
+    # every shuffle of a small index build coalesces to what it carries.
+    # At the production floor of 32 initial partitions, 200 places run 66
+    # tasks; pinning the term-id range to 64 partitions ran 255, turning
+    # coalescing off 376, and the former build (both, plus an n-gram count
+    # that read its input once per n) 520
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools"))
+    from bench_registry import group_tasks
+
+    from osm_search_spark.plans import build_pipeline as bp
+
+    places = spark.createDataFrame(
+        [(i, f"warung {i % 23} makan {i}", f"jalan pemuda {i % 11}")
+         for i in range(200)],
+        "id long, name string, address string",
+    )
+    set_conf("spark.sql.shuffle.partitions", 32)
+    sc = spark.sparkContext
+    sc.setJobGroup("fan-out", "build_index_tables")
+    try:
+        for df in bp.build_index_tables(places).values():
+            df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert group_tasks(sc, "fan-out") <= 100

@@ -13,9 +13,10 @@ Usage (NAMES is a comma list, ``headline`` = bench.py's nine queries; ``-``
 keeps a default):
 
   python tools/bench_registry.py time    NAMES [SIZE] [REPS]
-      noop sink, best-of-REPS (default 2), Spark jobs of the last run
-      (counted through a job group), then an untimed order-insensitive
-      checksum pass; one JSON line per workload plus a total line
+      noop sink, best-of-REPS (default 2), Spark jobs and tasks of the
+      last run (counted through a job group), then an untimed
+      order-insensitive checksum pass; one JSON line per workload plus a
+      total line
   python tools/bench_registry.py scaling NAMES [SIZE] [N] [REPS]
       `time` in a fresh JVM at local[N] and local[4N] (default N = cores/4);
       rows and checksum must match; efficiency =
@@ -24,7 +25,7 @@ keeps a default):
       same-epoch A/B: `time` against each tree's own engine and
       __spark_entry__, a fresh JVM per tree and round, tree order
       alternating per round (default 4 rounds); session size from
-      $SPARK_GRAFT_CPUS; prints per-workload medians and B/A
+      $SPARK_GRAFT_CPUS; prints per-workload medians, B/A and median tasks
   python tools/bench_registry.py plan    NAMES [SIZE]
       explain("formatted") of each workload's frame
 
@@ -908,15 +909,25 @@ def checksum(df: DataFrame) -> tuple[int, int | None]:
     return row["n"], row["x"]
 
 
+def group_tasks(sc, group: str) -> int:
+    """Tasks that the job group's jobs ran, summed over their distinct
+    stages (a skipped stage, whose shuffle output was reused, ran none)."""
+    st = sc.statusTracker()
+    jobs = (st.getJobInfo(j) for j in st.getJobIdsForGroup(group))
+    stages = (st.getStageInfo(s) for s in {s for j in jobs if j for s in j.stageIds})
+    return sum(s.numCompletedTasks for s in stages if s)
+
+
 def time_workloads(spark, names: list[str], size: int | None = None, reps: int = 2) -> list[dict]:
     """Best-of-`reps` noop-sink wall time (builder call included) per
-    workload, Spark jobs of the last run, and an untimed checksum pass."""
+    workload, Spark jobs and tasks of the last run, and an untimed
+    checksum pass."""
     sc = spark.sparkContext
     if any(n not in WORKLOADS for n in names):
         _noop(resolve("tile_assign")(spark))  # JVM + parquet footers, as bench.py
     results = []
     for name in names:
-        best, jobs = float("inf"), 0
+        best, jobs, tasks = float("inf"), 0, 0
         for i in range(reps):
             group = f"bench-{name}-{i}"
             sc.setJobGroup(group, name)
@@ -925,10 +936,11 @@ def time_workloads(spark, names: list[str], size: int | None = None, reps: int =
             _noop(df)
             best = min(best, time.perf_counter() - t0)
             jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            tasks = group_tasks(sc, group)
         sc.setJobGroup("bench-checksum", name)
         rows, ck = checksum(df)
         results.append(dict(name=name, size=size, best_s=round(best, 3), jobs=jobs,
-                            rows=rows, checksum=ck))
+                            tasks=tasks, rows=rows, checksum=ck))
         print(json.dumps(results[-1]), flush=True)
     sc.setJobGroup("bench-idle", "idle")
     return results
@@ -968,14 +980,17 @@ def abba(tree_a: str, tree_b: str, names: list[str], size, rounds: int) -> None:
                 runs[label].setdefault(name, []).append(row)
             print(f"round {r} {label}: " + json.dumps({n: v["best_s"] for n, v in res.items()}),
                   flush=True)
-    print(f"\n{'workload':28s} {'A_med':>8s} {'B_med':>8s} {'B/A':>6s}  same_output")
+    print(f"\n{'workload':28s} {'A_med':>8s} {'B_med':>8s} {'B/A':>6s} "
+          f"{'A_tasks':>8s} {'B_tasks':>8s}  same_output")
     tot = {"A": 0.0, "B": 0.0}
     for name in names:
         med = {k: statistics.median(x["best_s"] for x in runs[k][name]) for k in "AB"}
+        tasks = {k: statistics.median(x["tasks"] for x in runs[k][name]) for k in "AB"}
         same = len({(x["rows"], x["checksum"]) for k in "AB" for x in runs[k][name]}) == 1
         for k in "AB":
             tot[k] += med[k]
-        print(f"{name:28s} {med['A']:8.3f} {med['B']:8.3f} {med['B'] / med['A']:6.3f}  {same}")
+        print(f"{name:28s} {med['A']:8.3f} {med['B']:8.3f} {med['B'] / med['A']:6.3f} "
+              f"{tasks['A']:8.0f} {tasks['B']:8.0f}  {same}")
     print(f"{'TOTAL':28s} {tot['A']:8.3f} {tot['B']:8.3f} {tot['B'] / tot['A']:6.3f}")
 
 
