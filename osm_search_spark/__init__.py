@@ -14,7 +14,8 @@ operators/   composite DataFrame operators (spatial join, kNN, search,
              dedup, similarity, geofence, tiling)
 sources/     deterministic synthesis of input tables + readers
 plans/       build pipeline + lineage/checkpoint plumbing
-streaming/   Structured Streaming variants (geofence state machine)
+streaming/   snapshot-pointer commits (batch stages, index tables,
+             exactly-once micro-batch folds) + streaming decontamination
 """
 
 __version__ = "0.1.0"

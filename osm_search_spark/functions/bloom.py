@@ -68,15 +68,6 @@ def bloom_build(
     )
 
 
-def bloom_merge(*filters: DataFrame) -> DataFrame:
-    """bit_or by word: merge(bloom(A), bloom(B)) == bloom(A ∪ B) exactly
-    (tested)."""
-    out = filters[0]
-    for f in filters[1:]:
-        out = out.unionByName(f)
-    return out.groupBy("word").agg(F.bit_or("bits").alias("bits"))
-
-
 def bloom_words(bloom_df: DataFrame, m_bits: int = DEFAULT_M) -> list[int]:
     """Dense word list (driver-side, bounded: m_bits/30 longs — ~2.2k at
     the default m, a few kB)."""

@@ -5,9 +5,8 @@ depth d x width w integer counters; item x adds its count to counter
 (i, h_i(x) % w) for each of the d rows; the frequency estimate is the MIN
 over rows — always an OVER-estimate (never under), within eps*N with
 probability 1-delta for w = ceil(e/eps), d = ceil(ln 1/delta). Counters
-merge by element-wise SUM: merge(cm(A), cm(B)) == cm(A ⊎ B) EXACTLY
-(integer counts; tested). Build is ONE map-side-combined aggregation —
-shuffle volume is d*w counters, not items.
+of disjoint inputs add element-wise (integer counts). Build is ONE
+map-side-combined aggregation — shuffle volume is d*w counters, not items.
 
 Where it earns its place next to exact groupBy counts: per-shard /
 per-day sketches compose without re-reading data, and a bounded d*w
@@ -64,14 +63,6 @@ def cms_build(
         .groupBy("row", "pos")
         .agg(F.sum("n").alias("n"))
     )
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Element-wise sum: merge(cm(A), cm(B)) == cm(A ⊎ B) exactly."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("row", "pos").agg(F.sum("n").alias("n"))
 
 
 def cms_lookup(

@@ -125,7 +125,6 @@ def geohash_sql(lat: str, lon: str, precision: int) -> str:
 def _decode_codes(gh: Column, precision: int) -> tuple[Column, Column]:
     """(lat_code, lon_code) recovered from a geohash string — exact
     integer reassembly of the interleaved bits."""
-    lonbits, latbits = _bit_split(precision)
     alphabet = F.array(*[F.lit(ch) for ch in B32])
     lat_code = F.lit(0).cast("long")
     lon_code = F.lit(0).cast("long")

@@ -59,15 +59,6 @@ def hll_registers(df: DataFrame, col: str, p: int = 8) -> DataFrame:
     )
 
 
-def hll_merge(*register_frames: DataFrame) -> DataFrame:
-    """Register-wise max across sketches — merge(regs(A), regs(B)) ==
-    regs(A ∪ B) EXACTLY (register tables are deterministic; tested)."""
-    out = register_frames[0]
-    for f in register_frames[1:]:
-        out = out.unionByName(f)
-    return out.groupBy("register").agg(F.max("rho").alias("rho"))
-
-
 def hll_estimate(registers: DataFrame, p: int = 8) -> float:
     """Cardinality estimate from a register table (Flajolet et al. 2007,
     with linear counting below 2.5m). Driver-side math on <= 2^p rows."""

@@ -392,9 +392,3 @@ def bpe_pieces_sql(text: str) -> str:
     """DuckDB twin (RE2 accepts the same pattern)."""
     pat = BPE_PIECE_RE.replace("'", "''")
     return f"regexp_extract_all(lower({text}), '{pat}')"
-
-
-def rolling_fingerprint(text: Column | str) -> Column:
-    """Deterministic 64-bit document fingerprint: xxhash64 of the normalized
-    token stream — stable under whitespace differences."""
-    return F.xxhash64(F.concat_ws(" ", tokenize(_col(text))))

@@ -12,8 +12,6 @@ Operators (per the training-pipeline surface required by the brief):
   the stored phash column.
 - phash_near_dup_pairs: near-duplicate image pairs by pHash band join
   (exact hamming <= threshold refine after a 16-bit band bucket join).
-- resize_thumbnail: decode -> area resize -> re-encode (feature-extract /
-  resize stage shape).
 """
 
 from __future__ import annotations
@@ -130,31 +128,6 @@ def phash_near_dup_pairs(images: DataFrame, max_hamming: int = 10) -> DataFrame:
         .filter(F.col("hamming") <= max_hamming)
         .select("image_a", "image_b", "hamming")
     )
-
-
-def resize_thumbnail(images: DataFrame, out_size: int = 16) -> DataFrame:
-    """(image_id, thumb:binary, w, h) — decode, area-resize to out_size^2,
-    re-encode as PNG. The resize/feature-extract stage shape."""
-    schema = "image_id string, thumb binary, w int, h int"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for img_id, data, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = I.decode(bytes(data), fmt)
-                g = I._resize_area_gray(px, out_size)
-                rgb = np.repeat(
-                    g.clip(0, 255).astype(np.uint8)[..., None], 3, axis=2
-                )
-                out.append(
-                    dict(
-                        image_id=img_id, thumb=I.png_encode(rgb),
-                        w=out_size, h=out_size,
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(run, schema=schema)
 
 
 def image_dedup(images: DataFrame, max_hamming: int = 10) -> DataFrame:

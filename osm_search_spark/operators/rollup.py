@@ -1,17 +1,10 @@
-"""Hypertable-style time-bucketed rollups with incremental maintenance.
+"""Hypertable-style time-bucketed rollups.
 
 `time_rollup` is the continuous-aggregate base: ONE partial-aggregated
 groupBy on (time bucket, keys). Sums are kept in integer cents so the
 aggregate is exact and order-independent — a float sum would drift by
-summation order across partitionings and break both the merge-equality
-invariant and the DuckDB oracle.
-
-`merge_rollup` is the maintenance path: fold a new micro-batch into a
-committed rollup WITHOUT recomputing history — union + re-aggregate on
-the bucket keys (counts and integer sums are associative, so
-merge(rollup(A), B) == rollup(A ∪ B) exactly; tested). Composes with
-foreachBatch / streaming/commit.commit the same way the incremental
-index maintenance does (operators/index_maintenance.py).
+summation order across partitionings and break the DuckDB oracle; it
+also makes rollups of disjoint batches add up exactly.
 """
 
 from __future__ import annotations
@@ -38,26 +31,5 @@ def time_rollup(
             F.sum(F.round(F.col(value) * 100, 0).cast("long")).alias(
                 "sum_cents"
             ),
-        )
-    )
-
-
-def merge_rollup(
-    committed: DataFrame,
-    delta_events: DataFrame,
-    bucket: str = "hour",
-    keys: tuple[str, ...] = ("event_type",),
-    ts: str = "ts",
-    value: str = "value",
-) -> DataFrame:
-    """Committed rollup + new events -> updated rollup; only the delta is
-    aggregated from raw rows, history merges by its bucket keys."""
-    delta = time_rollup(delta_events, bucket, keys, ts, value)
-    return (
-        committed.unionByName(delta)
-        .groupBy("bucket_ts", *keys)
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_cents").alias("sum_cents"),
         )
     )

@@ -77,12 +77,12 @@ def term_dict(tokens_df: DataFrame) -> DataFrame:
         .groupBy("term")
         .agg(F.min(F.struct("doc_id", "pos")).alias("first"))
     )
-    return assign_term_ids(first_seen, 0)
+    return assign_term_ids(first_seen)
 
 
-def assign_term_ids(first_seen: DataFrame, first_id: int) -> DataFrame:
+def assign_term_ids(first_seen: DataFrame) -> DataFrame:
     """(term, term_id) for `first_seen` (term, first: struct<doc_id, pos>):
-    consecutive ids from `first_id` in (first.doc_id, first.pos) order.
+    consecutive ids from 0 in (first.doc_id, first.pos) order.
 
     Ids are assigned WITHOUT a global sort window (a web-scale vocabulary
     must not funnel through one task): range-partition on the sort key,
@@ -107,7 +107,7 @@ def assign_term_ids(first_seen: DataFrame, first_id: int) -> DataFrame:
         return first_seen.select(
             "term", F.lit(0).cast("long").alias("term_id")
         ).limit(0)
-    offsets, acc = {}, first_id
+    offsets, acc = {}, 0
     for r in counts:
         offsets[r["_pid"]] = acc
         acc += r["count"]

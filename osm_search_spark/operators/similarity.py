@@ -2,19 +2,22 @@
 
 - brute_force_topk: exact cosine top-k — the correctness baseline. Dot
   products via `aggregate(zip_with(...))` (JVM-side, no Python).
-- lsh_topk: random-hyperplane LSH bucketing as the scale path — candidates
-  share a signs-signature bucket; exact re-rank inside buckets. Hyperplanes
-  are deterministic (seeded numpy) and shipped as literal arrays, so the
-  plan is still pure Catalyst.
-- ivf_topk: kmeans centroids (sample or DISTRIBUTED full-corpus training)
-  + inverted lists + n_probe restriction; assignment is a literal-centroid
-  Column argmin up to _ARROW_CENTROID_THRESHOLD lists, one broadcast-numpy
-  mapInPandas (_map_vectors) above.
+- hyperplanes/lsh_signature: random-hyperplane LSH buckets for the
+  near-dup pair joins — candidates share a signs-signature bucket; exact
+  re-rank inside buckets. Hyperplanes are deterministic (seeded numpy)
+  and shipped as literal arrays, so the plan is still pure Catalyst.
+- kmeans_train_sample/kmeans_train_distributed + assign_clusters/
+  probe_clusters: the coarse quantizer (inverted lists + n_probe
+  restriction); assignment is a literal-centroid Column argmin up to
+  _ARROW_CENTROID_THRESHOLD lists, one broadcast-numpy mapInPandas
+  (_map_vectors) above.
 - pq_train/pq_train_distributed/pq_encode/pq_luts/pq_topk: product
   quantization — 8x-32x compressed codes, ADC lookup-table scan as ONE
   broadcast join (no dot products, flat plan in probe count), exact
   re-rank of the shortlist (FAISS-style refine); training either from a
   bounded sample or full-corpus per-subspace Lloyd.
+- ivfpq_build/ivfpq_topk: the coarse quantizer's lists over residual PQ
+  codes (FAISS IVFPQ).
 
 At 10^12-row scale brute force is O(P*N) arithmetic; LSH/IVF cut the
 candidate set, PQ cuts per-candidate cost and memory. All share the exact
@@ -86,34 +89,6 @@ def lsh_signature(vec, planes: list[list[float]]):
         for p in planes
     ]
     return F.concat(*bits)
-
-
-def lsh_topk(
-    probes: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    dim: int,
-    n_planes: int = 8,
-    probe_id: str = "probe_id",
-    probe_vec: str = "pvec",
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: bucket join on hyperplane sign signature, exact
-    cosine re-rank within buckets. Recall grows with fewer planes / multiple
-    tables; this is the scale path — correctness baseline is brute force."""
-    planes = hyperplanes(dim, n_planes, seed)
-    c = corpus.withColumn("sig", lsh_signature(F.col(corpus_vec), planes))
-    p = probes.withColumn("sig", lsh_signature(F.col(probe_vec), planes))
-    j = c.join(F.broadcast(p), "sig").filter(F.col(probe_id) != F.col(corpus_id))
-    scored = j.withColumn("cos", cosine(F.col(probe_vec), F.col(corpus_vec)))
-    w = Window.partitionBy(probe_id).orderBy(F.desc("cos"), F.col(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(probe_id, "rank", F.col(corpus_id).alias("neighbor_id"), "cos")
-    )
 
 
 def embedding_near_dup_pairs(
@@ -827,55 +802,6 @@ def _pq_topk_batch(
     )
 
 
-def ivf_topk(
-    probes: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    probe_id: str = "probe_id",
-    probe_vec: str = "pvec",
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    seed: int = 42,
-    sample: int = 2048,
-    kmeans_iters: int = 8,
-    train: str = "sample",
-) -> DataFrame:
-    """IVF approximate top-k: corpus vectors are assigned to their nearest
-    centroid (inverted lists = a cluster_id column); each probe searches
-    only its n_probe nearest centroids' lists with exact cosine re-rank.
-
-    train="sample" (bounded driver mini-kmeans) or "distributed"
-    (full-corpus Lloyd iterations, kmeans_train_distributed). ASSIGNMENT is
-    always distributed: pure-Column broadcast-literal argmin up to
-    _ARROW_CENTROID_THRESHOLD centroids, broadcast-numpy mapInPandas above
-    (see assign_clusters) — plan size stays bounded at thousands of lists.
-    """
-    if train == "distributed":
-        cent = kmeans_train_distributed(
-            corpus, n_centroids, corpus_vec, corpus_id, seed=seed,
-        )
-    else:
-        cent = kmeans_train_sample(
-            corpus, n_centroids, corpus_vec, seed=seed,
-            sample=sample, iters=kmeans_iters,
-        )
-
-    c_assigned = assign_clusters(corpus, cent, corpus_vec)
-    p_assigned = probe_clusters(probes, cent, probe_vec, n_probe)
-    j = c_assigned.join(p_assigned, "cluster_id").filter(
-        F.col(probe_id) != F.col(corpus_id)
-    )
-    scored = j.withColumn("cos", cosine(F.col(probe_vec), F.col(corpus_vec)))
-    w = Window.partitionBy(probe_id).orderBy(F.desc("cos"), F.col(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(probe_id, "rank", F.col(corpus_id).alias("neighbor_id"), "cos")
-    )
-
-
 # --- IVF-PQ: coarse inverted lists + residual product quantization ------------
 
 def _centroid_lit(cent):
@@ -938,38 +864,6 @@ def ivfpq_build(
         books = pq_train(res_frame, m, kc, corpus_vec="rvec", seed=seed)
     indexed = pq_encode(assigned, books, corpus_vec="_rvec").drop("_rvec")
     return indexed, cent, books
-
-
-def ivfpq_encode(
-    corpus: DataFrame,
-    cent,
-    books,
-    corpus_vec: str = "embedding",
-) -> DataFrame:
-    """Encode vectors into an EXISTING IVF-PQ code space (coarse assign +
-    residual + PQ codes with the given models) — the apply half of
-    ivfpq_build, exposed for incremental maintenance."""
-    assigned = assign_clusters(corpus, cent, corpus_vec, residual_col="_rvec")
-    return pq_encode(assigned, books, corpus_vec="_rvec").drop("_rvec")
-
-
-def ivfpq_extend(
-    indexed: DataFrame,
-    new_corpus: DataFrame,
-    cent,
-    books,
-    corpus_vec: str = "embedding",
-) -> DataFrame:
-    """Append a new vector batch to an existing IVF-PQ index WITHOUT
-    retraining: the same coarse centroids + codebooks define the code
-    space, so only the delta is assigned/encoded and unioned — encoding
-    is deterministic given the models, so extending equals re-encoding
-    the whole corpus bit-for-bit (tested). Retraining (centroid drift as
-    the corpus distribution shifts) is a rebuild-time decision, the same
-    posture as the n-gram OOV threshold in index_maintenance."""
-    return indexed.unionByName(
-        ivfpq_encode(new_corpus, cent, books, corpus_vec)
-    )
 
 
 _HOT_LIST_MAX_SALT = 64

@@ -210,45 +210,3 @@ def simplify_rings_py(
     if s is None:
         return list(ring_lat), list(ring_lon)
     return s[0].tolist(), s[1].tolist()
-
-
-def simplify_lines(
-    lines: DataFrame,
-    tolerance: float,
-    lat_col: str = "line_lat",
-    lon_col: str = "line_lon",
-) -> DataFrame:
-    """Open-polyline variant (streets/ways, the reference's street table
-    shape): endpoints always kept, same subsequence / within-tolerance
-    guarantees, no ring anchoring. Adds n_points_before/n_points_after."""
-    if tolerance < 0:
-        raise ValueError("tolerance must be >= 0")
-    fields = [StructField(f.name, f.dataType, True) for f in lines.schema.fields]
-    fields.append(StructField("n_points_before", IntegerType(), True))
-    fields.append(StructField("n_points_after", IntegerType(), True))
-    schema = StructType(fields)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_lat, out_lon, nb, na = [], [], [], []
-            for i in range(len(pdf)):
-                lat = np.asarray(pdf[lat_col].iloc[i], dtype=np.float64)
-                lon = np.asarray(pdf[lon_col].iloc[i], dtype=np.float64)
-                nb.append(int(lat.size))
-                if lat.size <= 2:
-                    out_lat.append(lat.tolist())
-                    out_lon.append(lon.tolist())
-                    na.append(int(lat.size))
-                    continue
-                keep = _dp_keep_mask(lat, lon, tolerance)
-                out_lat.append(lat[keep].tolist())
-                out_lon.append(lon[keep].tolist())
-                na.append(int(keep.sum()))
-            res = pdf.copy()
-            res[lat_col] = out_lat
-            res[lon_col] = out_lon
-            res["n_points_before"] = pd.array(nb, dtype="int32")
-            res["n_points_after"] = pd.array(na, dtype="int32")
-            yield res
-
-    return lines.mapInPandas(run, schema=schema)

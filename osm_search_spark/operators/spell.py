@@ -254,7 +254,9 @@ class BM25FIndex:
         self.fields: dict[str, tuple[DataFrame, DataFrame, float]] = {}
         for field, col in (("name", name_col), ("address", address_col)):
             toks = search.doc_tokens(places, doc_id, col, stem_roots=stem_roots)
-            postings = search.build_postings(toks).persist()
+            # checkpointed, not persisted: a cached plan keeps its final
+            # shuffle uncoalesced, and every search would scan all of it
+            postings = search.build_postings(toks).localCheckpoint(eager=True)
             stats = search.doc_stats(toks).persist()
             avgdl = stats.agg(F.avg("dl")).collect()[0][0] or 1.0
             self.fields[field] = (postings, stats, float(avgdl))
@@ -414,47 +416,6 @@ def batch_bm25f_scores(
     if require_all:
         scored = scored.filter(F.col("_nt") == F.col("_n_terms"))
     return scored.select("query_id", "interp", "doc_id", "score")
-
-
-def batch_freeform_search(
-    spark: SparkSession,
-    places: DataFrame,
-    term_dict: DataFrame,
-    counts: DataFrame,
-    queries: list[str],
-    k: int = 10,
-    offset: int = 0,
-    index: "BM25FIndex | None" = None,
-) -> DataFrame:
-    """FreeFormQuery over a whole query batch on the batch spine: ONE
-    batched spell-correct (constant jobs) + ONE batched BM25F plan +
-    per-query top-k window (partitioned by query_id — never a global
-    single-partition sort). Row-for-row identical to freeform_search per
-    query; returns (query_id, rank, score, id, name, lat, lon, address,
-    type)."""
-    if index is None:
-        index = BM25FIndex(places)
-    corrected = batch_correct_queries(
-        spark, queries, term_dict, counts, stem_roots=index.stem_roots
-    )
-    interps = spark.createDataFrame(
-        [(qid, 0, terms) for qid, terms in enumerate(corrected)],
-        "query_id long, interp int, terms array<string>",
-    )
-    scores = batch_bm25f_scores(index, interps)
-    wq = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("doc_id"))
-    top = (
-        scores.withColumn("rank", F.row_number().over(wq).cast("long"))
-        .filter((F.col("rank") > offset) & (F.col("rank") <= offset + k))
-    )
-    return (
-        places.join(F.broadcast(top), places["id"] == top["doc_id"])
-        .select(
-            "query_id", "rank", "score", "id", "name", "lat", "lon",
-            "address", "type",
-        )
-        .orderBy("query_id", "rank")
-    )
 
 
 def _autocomplete_scores(

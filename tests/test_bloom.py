@@ -1,5 +1,5 @@
-"""Bloom filter: no false negatives, bounded false positives, exact
-merge, and the join-pruning contract (pruned join == full join)."""
+"""Bloom filter: no false negatives, bounded false positives, and the
+join-pruning contract (pruned join == full join)."""
 
 from pyspark.sql import functions as F
 
@@ -21,17 +21,6 @@ def test_bloom_no_false_negatives_and_low_fp(spark):
     fp = others.filter(bloom.might_contain(words, "v")).count()
     # expected fpr ~ 1.7e-4 at n=2000, m=2^16, k=4; allow generous slack
     assert fp < 100, fp
-
-
-def test_bloom_merge_equals_union_exactly(spark):
-    a, b = _vals(spark, 0, 1500), _vals(spark, 1000, 2500)
-    merged = bloom.bloom_merge(
-        bloom.bloom_build(a, "v"), bloom.bloom_build(b, "v")
-    )
-    union = bloom.bloom_build(a.unionAll(b), "v")
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, union.collect())
-    )
 
 
 def test_bloom_join_pruning_preserves_join(spark):

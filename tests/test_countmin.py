@@ -1,5 +1,5 @@
 """Count-min sketch: never underestimates, exact for distinct-position
-keys, exact merge, weighted counts."""
+keys, weighted counts."""
 
 from pyspark.sql import functions as F
 
@@ -25,16 +25,6 @@ def test_cms_never_underestimates_and_heavy_exactish(spark):
     heavy = [r for r in rows if r["v"] == "heavy-key"][0]
     # w=4096, n=2500 items: expected overestimate ~ n/w < 1 per row
     assert heavy["count"] == 500 and heavy["est"] <= 510
-
-
-def test_cms_merge_equals_union_exactly(spark):
-    a = spark.range(1000).select(F.concat(F.lit("x-"), F.col("id") % 50).alias("v"))
-    b = spark.range(800).select(F.concat(F.lit("x-"), F.col("id") % 70).alias("v"))
-    merged = cm.cms_merge(cm.cms_build(a, "v"), cm.cms_build(b, "v"))
-    union = cm.cms_build(a.unionAll(b), "v")
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, union.collect())
-    )
 
 
 def test_cms_weighted(spark):

@@ -138,24 +138,6 @@ def test_brute_force_topk_vs_numpy(spark):
         assert mine == exp
 
 
-def test_lsh_topk_subset_of_bruteforce(spark):
-    rng = np.random.default_rng(1)
-    vecs = rng.standard_normal((200, 16)).astype(np.float32)
-    corpus = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(200)],
-        "vec_id long, embedding array<float>",
-    )
-    probes = corpus.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pvec")
-    )
-    res = similarity.lsh_topk(probes, corpus, k=5, dim=16, n_planes=4)
-    rows = res.collect()
-    assert rows  # buckets non-empty with 4 planes over 200 vecs
-    # every returned neighbor must share the probe's bucket => cos sane
-    for r in rows:
-        assert -1.0001 <= r["cos"] <= 1.0001
-
-
 def test_embedding_near_dup_pairs(spark):
     rng = np.random.default_rng(5)
     base = rng.standard_normal((20, 8)).astype(np.float32)
@@ -173,24 +155,6 @@ def test_embedding_near_dup_pairs(spark):
         corpus, threshold=0.99, n_planes=None
     ).collect()
     assert {(r["id_a"], r["id_b"]) for r in exact} == {(0, 20)}
-
-
-def test_ivf_topk_recall_vs_bruteforce(spark):
-    rng = np.random.default_rng(9)
-    vecs = rng.standard_normal((300, 16)).astype(np.float32)
-    corpus = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(300)],
-        "vec_id long, embedding array<float>",
-    )
-    probes = corpus.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pvec")
-    )
-    exact = similarity.brute_force_topk(probes, corpus, k=10)
-    approx = similarity.ivf_topk(probes, corpus, k=10, n_centroids=8, n_probe=4)
-    ex = {(r["probe_id"], r["neighbor_id"]) for r in exact.collect()}
-    ap = {(r["probe_id"], r["neighbor_id"]) for r in approx.collect()}
-    recall = len(ex & ap) / len(ex)
-    assert recall >= 0.6, f"IVF recall too low: {recall}"
 
 
 def test_lsh_bucket_size_cap(spark):
@@ -219,10 +183,15 @@ def test_ivf_distributed_training_recall(spark):
         (r["probe_id"], r["neighbor_id"])
         for r in S.brute_force_topk(probes, emb, k=10).collect()
     }
+    # the embeddings are unit vectors, so ivfpq_topk's exact-L2 re-rank
+    # orders neighbours as cosine does
+    indexed, cent, books = S.ivfpq_build(
+        emb, n_centroids=8, train="distributed"
+    )
     approx = {
         (r["probe_id"], r["neighbor_id"])
-        for r in S.ivf_topk(
-            probes, emb, k=10, n_centroids=8, n_probe=4, train="distributed"
+        for r in S.ivfpq_topk(
+            probes, indexed, cent, books, k=10, n_probe=4
         ).collect()
     }
     recall = len(exact & approx) / len(exact)
@@ -490,20 +459,12 @@ def test_ivf_and_ivfpq_at_1024_lists(spark):
     ids = np.array([r["vec_id"] for r in all_rows])
     V = np.array([r["embedding"] for r in all_rows], dtype=np.float64)
     exact_l2 = set()
-    exact_cos = set()
     for i, p in enumerate(probe_orig):
         pid = int(p) * reps
         pv = V0[i]
         d = ((V - pv) ** 2).sum(axis=1)
         order = np.lexsort((ids, d))
         exact_l2 |= {
-            (pid, int(ids[j])) for j in order[ids[order] != pid][:10]
-        }
-        cos = (V @ pv) / (
-            np.linalg.norm(V, axis=1) * np.linalg.norm(pv) + 1e-300
-        )
-        order = np.lexsort((ids, -cos))
-        exact_cos |= {
             (pid, int(ids[j])) for j in order[ids[order] != pid][:10]
         }
 
@@ -516,15 +477,6 @@ def test_ivf_and_ivfpq_at_1024_lists(spark):
     p = plan_str(assigned)
     assert "mapinpandas" in p.lower().replace("_", "")
     assert len(p) < 20_000
-
-    ivf = {
-        (r["probe_id"], r["neighbor_id"])
-        for r in S.ivf_topk(
-            probes, corpus, k=10, n_centroids=1024, n_probe=32
-        ).collect()
-    }
-    recall_ivf = len(exact_cos & ivf) / len(exact_cos)
-    assert recall_ivf >= 0.8, recall_ivf
 
     indexed, cent2, books = S.ivfpq_build(
         corpus, n_centroids=1024, m=16, kc=32
@@ -624,40 +576,6 @@ def test_jaccard_gram_frequency_cap(spark):
         docs, n=3, threshold=0.1, max_gram_freq=None
     ).count()
     assert uncapped > 1
-
-
-def test_ivfpq_extend_equals_full_encode(spark):
-    # incremental ANN maintenance: appending a batch under the existing
-    # models must equal encoding the whole corpus in one shot, bit for
-    # bit, and searches over the extended index match the full index
-    from osm_search_spark.operators import similarity as S
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    indexed, cent, books = S.ivfpq_build(emb, n_centroids=8, m=16, kc=32)
-    half1 = emb.filter("vec_id % 2 = 0")
-    half2 = emb.filter("vec_id % 2 = 1")
-    ext = S.ivfpq_extend(
-        S.ivfpq_encode(half1, cent, books), half2, cent, books
-    )
-
-    def key(df):
-        return sorted(
-            (r["vec_id"], r["cluster_id"], tuple(r["codes"]))
-            for r in df.collect()
-        )
-
-    assert key(ext) == key(indexed)
-
-    probes = emb.filter("vec_id < 5").select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pvec")
-    )
-    full_res = sorted(
-        map(tuple, S.ivfpq_topk(probes, indexed, cent, books, k=5, n_probe=4).collect())
-    )
-    ext_res = sorted(
-        map(tuple, S.ivfpq_topk(probes, ext, cent, books, k=5, n_probe=4).collect())
-    )
-    assert ext_res == full_res
 
 
 def test_ivfpq_hot_list_salting_identical(spark, monkeypatch):

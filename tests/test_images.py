@@ -76,14 +76,6 @@ def test_phash_near_dup_pairs(spark):
     assert got.get(("img_000000000000", "img_999999999999")) == 0
 
 
-def test_resize_thumbnail(spark):
-    df = src.images_table(spark, 4)
-    th = image_ops.resize_thumbnail(df, out_size=8).collect()
-    for t in th:
-        px = I.png_decode(bytes(t["thumb"]))
-        assert px.shape == (8, 8, 3)
-
-
 def test_jpeg_roundtrip_psnr():
     # real baseline JFIF codec (functions/jpeg.py) — closes the round-1
     # "JPEG gated stub" gap; no PIL in this container

@@ -373,12 +373,8 @@ def test_spread_scan_stats_guard(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
-def test_index_build_fan_out_is_sized_to_the_data(spark, set_conf):
-    # every shuffle of a small index build coalesces to what it carries.
-    # At the production floor of 32 initial partitions, 200 places run 66
-    # tasks; pinning the term-id range to 64 partitions ran 255, turning
-    # coalescing off 376, and the former build (both, plus an n-gram count
-    # that read its input once per n) 520
+def _tasks_of(spark, group, run):
+    """Tasks that `run()` ran, counted under a job group of its own."""
     import os
     import sys
 
@@ -386,6 +382,22 @@ def test_index_build_fan_out_is_sized_to_the_data(spark, set_conf):
         os.path.abspath(__file__))), "tools"))
     from bench_registry import group_tasks
 
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return group_tasks(sc, group)
+
+
+def test_index_build_fan_out_is_sized_to_the_data(spark, set_conf):
+    # every shuffle of a small index build coalesces to what it carries.
+    # At the production floor of 32 initial partitions, 200 places run 66
+    # tasks; pinning the term-id range to 64 partitions ran 255, turning
+    # coalescing off 376, and the former build (both, plus an n-gram count
+    # that read its input once per n) 520
     from osm_search_spark.plans import build_pipeline as bp
 
     places = spark.createDataFrame(
@@ -394,12 +406,42 @@ def test_index_build_fan_out_is_sized_to_the_data(spark, set_conf):
         "id long, name string, address string",
     )
     set_conf("spark.sql.shuffle.partitions", 32)
-    sc = spark.sparkContext
-    sc.setJobGroup("fan-out", "build_index_tables")
-    try:
+
+    def build():
         for df in bp.build_index_tables(places).values():
             df.write.format("noop").mode("overwrite").save()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert group_tasks(sc, "fan-out") <= 100
+
+    assert _tasks_of(spark, "fan-out", build) <= 100
+
+
+def test_warm_search_fan_out_is_sized_to_the_data(spark, set_conf):
+    # a search on a loaded index scans postings sized to what they hold.
+    # At 32 initial partitions, a warm search on 200 places ran 126 tasks
+    # while the index persisted its postings groupBy (a cached plan keeps
+    # its final shuffle uncoalesced); with the postings checkpointed, 67
+    from osm_search_spark.operators import ngram_lm
+
+    places = spark.createDataFrame(
+        [(i, f"warung {i % 23} makan {i}", f"jalan pemuda {i % 11}",
+          -6.2 + 0.001 * i, 106.8, "restaurant") for i in range(200)],
+        "id long, name string, address string, lat double, lon double, "
+        "type string",
+    )
+    set_conf("spark.sql.shuffle.partitions", 32)
+    toks = search.doc_tokens(
+        places.select("id", F.concat_ws(" ", "name", "address").alias("text")),
+        doc_id="id",
+    )
+    counts = ngram_lm.ngram_counts(toks).localCheckpoint()
+    td = search.term_dict(toks)
+    idx = BM25FIndex(places)
+
+    def search_once():
+        rows = freeform_search(
+            spark, places, td, counts, "warung makan", k=5, index=idx
+        ).collect()
+        assert len(rows) == 5
+
+    search_once()
+    tasks = _tasks_of(spark, "warm-search", search_once)
+    assert tasks <= 90, tasks

@@ -1,23 +1,8 @@
-"""Time rollup merge-equality + range-join plan shape and boundary rules."""
+"""Range-join plan shape and boundary rules."""
 
 from pyspark.sql import functions as F
 
 from osm_search_spark.operators.range_join import range_join
-from osm_search_spark.operators.rollup import merge_rollup, time_rollup
-
-
-def test_rollup_merge_equals_full_recompute(spark):
-    """Continuous-aggregate invariant: merge(rollup(first), rest) ==
-    rollup(all), exactly (integer-cent sums are associative)."""
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    first = ev.filter(F.col("event_id") % 3 != 0)
-    rest = ev.filter(F.col("event_id") % 3 == 0)
-    merged = merge_rollup(time_rollup(first), rest)
-    full = time_rollup(ev)
-    key = lambda r: (r["bucket_ts"], r["event_type"])
-    got = {key(r): (r["n_events"], r["sum_cents"]) for r in merged.collect()}
-    want = {key(r): (r["n_events"], r["sum_cents"]) for r in full.collect()}
-    assert got == want and len(want) > 10
 
 
 def test_range_join_no_nested_loop(spark):

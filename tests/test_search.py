@@ -110,18 +110,6 @@ def test_batch_bm25_matches_single(spark):
         assert got == single
 
 
-def test_rolling_fingerprint_whitespace_invariant(spark):
-    from osm_search_spark.functions.text import rolling_fingerprint
-
-    df = spark.createDataFrame(
-        [(1, "Hello,  World! "), (2, "hello world"), (3, "hello worlds")],
-        "doc_id long, text string",
-    )
-    fp = {r["doc_id"]: r["f"] for r in df.select("doc_id", rolling_fingerprint("text").alias("f")).collect()}
-    assert fp[1] == fp[2]  # case/punct/whitespace-normalized match
-    assert fp[1] != fp[3]
-
-
 def test_bpe_pieces_splitting(spark):
     from pyspark.sql import functions as F
 

@@ -92,25 +92,6 @@ def test_batch_correct_matches_per_query(spark, corpus):
 
 # --- batch serving spine: parity with the per-query pipelines ---------------
 
-def test_batch_freeform_matches_per_query(spark, corpus):
-    places, td, counts = corpus
-    queries = ["dunia fantasi", "duniu fsntaso", "kebun bibatqng raginan"]
-    idx = spell.BM25FIndex(places)
-    batch = spell.batch_freeform_search(
-        spark, places, td, counts, queries, k=3, index=idx
-    ).collect()
-    for qid, q in enumerate(queries):
-        per = spell.freeform_search(
-            spark, places, td, counts, q, k=3, index=idx
-        ).collect()
-        got = [
-            (r["rank"], r["id"], round(r["score"], 9))
-            for r in batch if r["query_id"] == qid
-        ]
-        want = [(r["rank"], r["id"], round(r["score"], 9)) for r in per]
-        assert got == want, (q, got, want)
-
-
 def test_batch_autocomplete_matches_per_query(spark, corpus):
     # a batch of N ranks each query exactly as N batches of one, and
     # autocomplete() (a batch of one with a take-ordered top-k) agrees

@@ -175,25 +175,3 @@ def test_negative_tolerance_rejected(spark):
     )
     with pytest.raises(ValueError):
         simplify_polygons(df, -0.1)
-
-
-def test_simplify_lines_open_polyline(spark):
-    from osm_search_spark.operators.simplify import simplify_lines
-
-    n = 30
-    lat = [0.001 * ((i * 13) % 5) for i in range(n)]
-    lon = [0.1 * i for i in range(n)]
-    lat[0], lat[-1] = 0.5, -0.5  # make endpoints distinctive
-    df = spark.createDataFrame(
-        [(1, lat, lon), (2, [0.0, 1.0], [0.0, 1.0])],
-        "way_id long, line_lat array<double>, line_lon array<double>",
-    )
-    got = {r["way_id"]: r for r in simplify_lines(df, 0.01).collect()}
-    keep = _dp_keep_mask(np.array(lat), np.array(lon), 0.01)
-    assert got[1]["line_lat"] == np.array(lat)[keep].tolist()
-    # endpoints survive
-    assert got[1]["line_lat"][0] == 0.5 and got[1]["line_lat"][-1] == -0.5
-    assert got[1]["n_points_before"] == n
-    assert got[1]["n_points_after"] == int(keep.sum())
-    # 2-point lines pass through
-    assert got[2]["line_lat"] == [0.0, 1.0] and got[2]["n_points_after"] == 2

@@ -1,5 +1,4 @@
-"""HLL sketch: estimate accuracy vs exact, exact merge associativity,
-and register-table determinism (the cross-engine gate checks the DuckDB
+"""HLL sketch: estimate accuracy vs exact and register-table determinism (the cross-engine gate checks the DuckDB
 twin; here numpy-independent properties)."""
 
 import pytest
@@ -29,18 +28,6 @@ def test_hll_duplicates_dont_count(spark):
     regs_t = sketch.hll_registers(tripled, "v", p=8)
     assert sorted(map(tuple, regs_b.collect())) == sorted(
         map(tuple, regs_t.collect())
-    )
-
-
-def test_hll_merge_equals_union_exactly(spark):
-    a = _vals(spark, 0, 3000, "a")
-    b = _vals(spark, 1500, 4500, "a")  # overlapping range, same tag
-    merged = sketch.hll_merge(
-        sketch.hll_registers(a, "v", p=9), sketch.hll_registers(b, "v", p=9)
-    )
-    union = sketch.hll_registers(a.unionAll(b), "v", p=9)
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, union.collect())
     )
 
 

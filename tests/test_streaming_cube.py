@@ -1,16 +1,10 @@
-"""Streaming space-time cube: cross-micro-batch merge equals the batch
-cube of all pings ever ingested, and the emerging-hot-spot analysis
-over the committed cube equals the batch analysis; replay merges
-exactly once."""
+"""Exactly-once merge-stream protocol (streaming/commit.py) over a
+space-time cube fold: a replayed micro-batch merges exactly once."""
 
-import json
+from pyspark.sql import functions as F
 
-from osm_search_spark.streaming.cube_stream import (
-    analyze_cube,
-    cube_of,
-    read_cube,
-    start_cube_stream,
-)
+from osm_search_spark.functions import cells as C
+from osm_search_spark.streaming.commit import commit_batch, read_table
 
 RES, BIN_W = 11, 3600
 
@@ -40,68 +34,29 @@ def _cube_dict(df):
     return {(r["bin"], r["cell_id"]): r["value"] for r in df.collect()}
 
 
-def _emerging_dict(df):
-    return {
-        r["cell_id"]: (r["n_bins"], r["s_stat"], r["n_hot"], r["category"])
-        for r in df.collect()
-    }
-
-
-def test_streaming_cube_matches_batch(spark, tmp_path):
-    from osm_search_spark.operators.emerging import emerging_hotspots
-
-    src = tmp_path / "in"
-    src.mkdir()
-    schema = "point_id long, ts long, lat double, lon double"
-    (src / "b1.json").write_text(
-        "\n".join(json.dumps(r) for r in _rows(0, 400))
+def _merge_batch(committed, batch_df):
+    """Add the batch's (bin, cell) ping counts into the committed cube."""
+    delta = batch_df.groupBy(
+        F.floor(F.col("ts") / BIN_W).alias("bin"),
+        C.latlng_to_cell("lat", "lon", RES).alias("cell_id"),
+    ).agg(F.count(F.lit(1)).alias("value"))
+    if committed is None:
+        return delta
+    return (
+        committed.unionByName(delta)
+        .groupBy("bin", "cell_id")
+        .agg(F.sum("value").alias("value"))
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    table = str(tmp_path / "cube")
-    q = start_cube_stream(
-        stream, table, str(tmp_path / "ckpt"), RES, BIN_W
-    )
-    try:
-        q.processAllAvailable()
-        (src / "b2.json").write_text(
-            "\n".join(json.dumps(r) for r in _rows(400, 900))
-        )
-        q.processAllAvailable()
-        got_cube = _cube_dict(read_cube(spark, table))
-        got_emerging = _emerging_dict(analyze_cube(spark, table, RES))
-    finally:
-        q.stop()
-
-    all_pings = spark.createDataFrame(
-        [(r["point_id"], r["ts"], r["lat"], r["lon"]) for r in _rows(0, 900)],
-        schema,
-    )
-    want_cube = _cube_dict(cube_of(all_pings, RES, BIN_W))
-    assert got_cube == want_cube
-    assert len({b for b, _ in want_cube}) == 3
-    want_emerging = _emerging_dict(
-        emerging_hotspots(cube_of(all_pings, RES, BIN_W), RES, 1)
-    )
-    assert got_emerging == want_emerging
-    assert any(v[3] != "none" for v in want_emerging.values())
 
 
 def test_streaming_cube_replay_exactly_once(spark, tmp_path):
-    from osm_search_spark.streaming.commit import commit_batch, read_table
-    from osm_search_spark.streaming.cube_stream import _make_merge_batch
-
     table = str(tmp_path / "cube2")
     schema = "point_id long, ts long, lat double, lon double"
     b0 = spark.createDataFrame(
         [(r["point_id"], r["ts"], r["lat"], r["lon"]) for r in _rows(0, 150)],
         schema,
     )
-    merge = _make_merge_batch(RES, BIN_W, "ts", "lat", "lon")
-    commit_batch(spark, table, 0, merge, b0, stream_id="s1")
+    commit_batch(spark, table, 0, _merge_batch, b0, stream_id="s1")
     once = _cube_dict(read_table(spark, table))
-    commit_batch(spark, table, 0, merge, b0, stream_id="s1")  # replay
+    commit_batch(spark, table, 0, _merge_batch, b0, stream_id="s1")  # replay
     assert _cube_dict(read_table(spark, table)) == once

@@ -1,12 +1,10 @@
-"""Streaming tile pyramid: cross-micro-batch merge equals the batch
-pyramid of all points ever ingested; replay merges exactly once."""
+"""Exactly-once merge-stream protocol (streaming/commit.py) over a tile
+pyramid fold: a replayed micro-batch merges exactly once."""
 
-import json
+from pyspark.sql import functions as F
 
-from osm_search_spark.streaming.pyramid_stream import (
-    read_pyramid,
-    start_pyramid_stream,
-)
+from osm_search_spark.operators.compaction import tile_pyramid
+from osm_search_spark.streaming.commit import commit_batch, read_table
 
 MAX_RES, MIN_RES = 14, 10
 
@@ -26,44 +24,19 @@ def _pyramid_dict(df):
     return {(r["cell_id"], r["res"]): r["n"] for r in df.collect()}
 
 
-def test_streaming_pyramid_matches_batch(spark, tmp_path):
-    from osm_search_spark.operators.compaction import tile_pyramid
-
-    src = tmp_path / "in"
-    src.mkdir()
-    (src / "b1.json").write_text("\n".join(json.dumps(r) for r in _rows(0, 300)))
-    schema = "point_id long, lat double, lon double"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
+def _merge_batch(committed, batch_df):
+    """Add the batch's per-level cell counts into the committed pyramid."""
+    delta = tile_pyramid(batch_df, MAX_RES, MIN_RES)
+    if committed is None:
+        return delta
+    return (
+        committed.unionByName(delta)
+        .groupBy("cell_id", "res")
+        .agg(F.sum("n").alias("n"))
     )
-    table = str(tmp_path / "pyr")
-    q = start_pyramid_stream(
-        stream, table, str(tmp_path / "ckpt"), MAX_RES, MIN_RES
-    )
-    try:
-        q.processAllAvailable()
-        (src / "b2.json").write_text(
-            "\n".join(json.dumps(r) for r in _rows(300, 700))
-        )
-        q.processAllAvailable()
-        got = _pyramid_dict(read_pyramid(spark, table))
-    finally:
-        q.stop()
-
-    all_pts = spark.createDataFrame(
-        [(r["point_id"], r["lat"], r["lon"]) for r in _rows(0, 700)], schema
-    )
-    want = _pyramid_dict(tile_pyramid(all_pts, MAX_RES, MIN_RES))
-    assert got == want
-    assert len({res for _, res in want}) == MAX_RES - MIN_RES + 1
 
 
 def test_streaming_pyramid_replay_exactly_once(spark, tmp_path):
-    from osm_search_spark.streaming.commit import commit_batch, read_table
-    from osm_search_spark.streaming.pyramid_stream import _merge_batch
-
     table = str(tmp_path / "pyr2")
     schema = "point_id long, lat double, lon double"
     b0 = spark.createDataFrame(

@@ -1,6 +1,7 @@
-"""Streaming continuous rollup: cross-micro-batch merge equals the batch
-rollup of all rows; replayed batches merge exactly once; a corrupted
-table root fails loud instead of silently re-initialising."""
+"""The exactly-once merge-stream protocol (streaming/commit.py), driven by
+an hourly rollup fold: cross-micro-batch merge equals the batch rollup of
+all rows; replayed batches merge exactly once; a corrupted table root
+fails loud instead of silently re-initialising."""
 
 import json
 import time
@@ -9,10 +10,27 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_search_spark.operators.rollup import time_rollup
-from osm_search_spark.streaming.rollup_stream import (
-    read_rollup,
-    start_rollup_stream,
+from osm_search_spark.streaming.commit import (
+    commit_batch,
+    read_table,
+    start_merge_stream,
 )
+
+
+def _merge_batch(committed, batch_df):
+    """Fold a micro-batch into the committed rollup: counts and integer
+    cent sums are associative, so merge(rollup(A), B) == rollup(A + B)."""
+    delta = time_rollup(batch_df)
+    if committed is None:
+        return delta
+    return (
+        committed.unionByName(delta)
+        .groupBy("bucket_ts", "event_type")
+        .agg(
+            F.sum("n_events").alias("n_events"),
+            F.sum("sum_cents").alias("sum_cents"),
+        )
+    )
 
 
 def _rows(lo, hi):
@@ -38,7 +56,7 @@ def test_streaming_rollup_matches_batch(spark, tmp_path):
         .json(str(src))
     )
     table = str(tmp_path / "rollup")
-    q = start_rollup_stream(stream, table, str(tmp_path / "ckpt"))
+    q = start_merge_stream(stream, table, str(tmp_path / "ckpt"), _merge_batch)
     try:
         q.processAllAvailable()
         (src / "b2.json").write_text(
@@ -48,7 +66,7 @@ def test_streaming_rollup_matches_batch(spark, tmp_path):
         q.processAllAvailable()
         got = {
             (r["bucket_ts"], r["event_type"]): (r["n_events"], r["sum_cents"])
-            for r in read_rollup(spark, table).collect()
+            for r in read_table(spark, table).collect()
         }
         assert time.time() < deadline
     finally:
@@ -70,9 +88,6 @@ def test_streaming_rollup_replay_is_exactly_once(spark, tmp_path):
     double-merge, while a DIFFERENT stream whose batch ids restart at 0
     (fresh checkpoint) carries new data and MUST merge — it is not a
     replay, and is no longer silently discarded."""
-    from osm_search_spark.streaming.commit import commit_batch, read_table
-    from osm_search_spark.streaming.rollup_stream import _merge_batch
-
     table = str(tmp_path / "rollup")
     schema = "event_id long, ts string, event_type string, value double"
 
@@ -116,18 +131,18 @@ def test_streaming_rollup_restart_same_checkpoint_no_double_merge(
         )
 
     table = str(tmp_path / "rollup")
-    q = start_rollup_stream(stream(), table, str(tmp_path / "ckpt1"))
+    q = start_merge_stream(stream(), table, str(tmp_path / "ckpt1"), _merge_batch)
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    before = sorted(map(tuple, read_rollup(spark, table).collect()))
-    q2 = start_rollup_stream(stream(), table, str(tmp_path / "ckpt1"))
+    before = sorted(map(tuple, read_table(spark, table).collect()))
+    q2 = start_merge_stream(stream(), table, str(tmp_path / "ckpt1"), _merge_batch)
     try:
         q2.processAllAvailable()
     finally:
         q2.stop()
-    after = sorted(map(tuple, read_rollup(spark, table).collect()))
+    after = sorted(map(tuple, read_table(spark, table).collect()))
     assert after == before
 
 
@@ -136,9 +151,6 @@ def test_streaming_rollup_first_commit_crash_recovers(spark, tmp_path):
     write leaves v0 with no pointer. The replaying writer recovers
     (clears the orphan, redoes the merge); a LATER missing pointer (v1+
     exists) is real corruption and still fails loud for writers too."""
-    from osm_search_spark.streaming.commit import commit_batch, read_table
-    from osm_search_spark.streaming.rollup_stream import _merge_batch
-
     table = tmp_path / "rollup"
     schema = "event_id long, ts string, event_type string, value double"
 
@@ -189,25 +201,20 @@ def test_streaming_rollup_missing_pointer_fails_loud(spark, tmp_path):
         .json(str(src))
     )
     table = tmp_path / "rollup"
-    q = start_rollup_stream(stream, str(table), str(tmp_path / "ckpt"))
+    q = start_merge_stream(stream, str(table), str(tmp_path / "ckpt"), _merge_batch)
     try:
         q.processAllAvailable()
     finally:
         q.stop()
     (table / "CURRENT").unlink()
     with pytest.raises(RuntimeError, match="no CURRENT pointer"):
-        read_rollup(spark, str(table))
+        read_table(spark, str(table))
 
 
 def test_time_travel_read_of_retained_snapshot(spark, tmp_path):
     """read_table(version=k): the previous snapshot stays readable until
     expiry (_KEEP_VERSIONS window), expired/never-committed/orphaned-
     newer versions raise with the retained list."""
-    import pytest
-
-    from osm_search_spark.streaming.commit import commit_batch, read_table
-    from osm_search_spark.streaming.rollup_stream import _merge_batch
-
     table = str(tmp_path / "rollup")
     schema = "event_id long, ts string, event_type string, value double"
 
