@@ -380,23 +380,18 @@ def autocomplete(
 
 # --- batched BM25F serving: many queries / interpretations, ONE plan ---------
 
-def batch_bm25f_scores(
-    index: BM25FIndex,
-    interps: DataFrame,
-    require_all: bool = False,
-) -> DataFrame:
+def batch_bm25f_scores(index: BM25FIndex, interps: DataFrame) -> DataFrame:
     """(query_id, interp, doc_id, score) for a whole batch of query
     interpretations — `interps` is (query_id long, interp int,
-    terms array<string>).
+    terms array<string>) — with autocomplete's AND semantics.
 
     Shuffle shape mirrors batch_bm25_search: the per-field postings enrich
     on the CORPUS side (query-independent, persisted in the index); the
     exploded (query_id, interp, term) batch BROADCASTS onto it; one
     repartition by query_id feeds both the score aggregate and any top-k
-    window downstream. require_all=True adds the autocomplete
-    AND-intersection (every distinct query term must have a posting in
-    name or address — searcher.go:493-532) from the same joined rows, so
-    the AND check costs no extra corpus pass."""
+    window downstream. The AND-intersection (every distinct query term
+    must have a posting in name or address — searcher.go:493-532) comes
+    from the same joined rows, so it costs no extra corpus pass."""
     qt = interps.select(
         "query_id", "interp",
         F.explode(F.array_distinct("terms")).alias("term"),
@@ -413,9 +408,9 @@ def batch_bm25f_scores(
             F.countDistinct("term").alias("_nt"),
         )
     )
-    if require_all:
-        scored = scored.filter(F.col("_nt") == F.col("_n_terms"))
-    return scored.select("query_id", "interp", "doc_id", "score")
+    return scored.filter(F.col("_nt") == F.col("_n_terms")).select(
+        "query_id", "interp", "doc_id", "score"
+    )
 
 
 def _autocomplete_scores(
@@ -440,7 +435,7 @@ def _autocomplete_scores(
         ],
         "query_id long, interp int, terms array<string>",
     )
-    return batch_bm25f_scores(index, interps, require_all=True)
+    return batch_bm25f_scores(index, interps)
 
 
 def batch_autocomplete(
